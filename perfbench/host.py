@@ -10,9 +10,12 @@ import os
 import threading
 import time
 
-#: cap on the driver heap: the host is shared, and the workloads are sized
-#: to fit well inside it; a heap the run fills keeps peak RSS repeatable
-MAX_HEAP_MB = 2048
+#: the driver heap, the same on every run so that peak RSS and GC time
+#: depend on the code measured, not on what else the host is running
+HEAP_MB = 2048
+#: memory a run needs beside the heap: JVM off-heap, one Python worker per
+#: core and this driver process
+HEADROOM_MB = 2048
 
 
 def cores() -> int:
@@ -27,11 +30,14 @@ def available_mb() -> int:
     raise RuntimeError("MemAvailable missing from /proc/meminfo")
 
 
-def heap_mb() -> int:
-    """A quarter of the memory available now, at most MAX_HEAP_MB: the JVM,
-    one Python worker per core and the driver must all fit beside the
-    other tenants of the host."""
-    return max(1024, min(MAX_HEAP_MB, available_mb() // 4))
+def require_memory() -> None:
+    """Refuse to run when the host cannot hold HEAP_MB plus HEADROOM_MB:
+    a smaller heap would change what is measured."""
+    have, need = available_mb(), HEAP_MB + HEADROOM_MB
+    if have < need:
+        raise RuntimeError(
+            "{0} MB available, the benchmark needs {1} MB ({2} MB heap)"
+            .format(have, need, HEAP_MB))
 
 
 def make_session(work: str, event_log: bool = False):
@@ -43,11 +49,14 @@ def make_session(work: str, event_log: bool = False):
     n = cores()
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    java_opts = "-Djava.io.tmpdir={0} -XX:-UsePerfData".format(tmp)
+    # the heap starts at its full size: GC work in the first rounds does
+    # not depend on how far the JVM has grown the heap so far
+    java_opts = "-Djava.io.tmpdir={0} -XX:-UsePerfData -Xms{1}m".format(
+        tmp, HEAP_MB)
     b = (
         SparkSession.builder.master("local[{0}]".format(n))
         .appName("warcio_spark-perfbench")
-        .config("spark.driver.memory", "{0}m".format(heap_mb()))
+        .config("spark.driver.memory", "{0}m".format(HEAP_MB))
         .config("spark.driver.extraJavaOptions", java_opts)
         .config("spark.sql.shuffle.partitions", str(max(8, 2 * n)))
         .config("spark.sql.adaptive.enabled", "true")
@@ -89,6 +98,7 @@ def load_canary() -> dict:
         "spin_s": round(spin_seconds(), 4),
         "nproc": cores(),
         "mem_available_mb": available_mb(),
+        "heap_mb": HEAP_MB,
         "spark": pyspark.__version__,
         "pyarrow": pyarrow.__version__,
     }
@@ -123,13 +133,16 @@ def descendants(root: int) -> list:
 
 def tree_rss_mb(root: int) -> float:
     """Resident memory of ``root`` and all its descendants (driver, JVM and
-    the JVM's Python workers)."""
+    the JVM's Python workers), summed as proportional set size: a page that
+    the forked Python workers share is counted once in the sum, not once per
+    worker, so the figure does not follow how many workers are alive at the
+    moment of a sample."""
     total_kb = 0
     for pid in [root] + descendants(root):
         try:
-            with open("/proc/{0}/status".format(pid)) as f:
+            with open("/proc/{0}/smaps_rollup".format(pid)) as f:
                 for line in f:
-                    if line.startswith("VmRSS:"):
+                    if line.startswith("Pss:"):
                         total_kb += int(line.split()[1])
                         break
         except OSError:

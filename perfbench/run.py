@@ -33,12 +33,11 @@ from stats import median, summarize  # noqa: E402
 WORKLOADS = ("frontier_round", "warc_roundtrip")
 
 #: end-to-end metrics every workload reports (see README.md for what
-#: ``work_per_s`` and ``op_p50_s`` count on each workload)
+#: ``work_per_s`` counts on each workload)
 END_TO_END = (
     ("setup_s", "s"),
     ("peak_rss_mb", "MB"),
     ("work_per_s", "1/s"),
-    ("op_p50_s", "s"),
 )
 
 #: per traced Spark layer: wall time, rows out, then event-log figures
@@ -86,8 +85,10 @@ def per_layer_metrics() -> list:
     """(name, unit) of every per-layer metric, over all workloads."""
     out = []
     for name in WORKLOADS:
-        for layer in workload_class(name).LAYERS:
+        wl = workload_class(name)
+        for layer in wl.LAYERS:
             out.extend((layer + suffix, unit) for suffix, unit in LAYER_FIELDS)
+        out.extend(wl.NAMED)
     return out + list(EXTRA_LAYER_METRICS)
 
 
@@ -178,6 +179,7 @@ def measure_run(args, work):
     import host
     from core import Context, Tracer, measure
 
+    host.require_memory()
     canary = {"before": host.load_canary()}
     sampler = host.RssSampler().start()
     spark = None
@@ -214,7 +216,6 @@ def measure_run(args, work):
         "setup_s": setup_s,
         "peak_rss_mb": peak_mb,
         "work_per_s": summary["work_per_s"],
-        "op_p50_s": op["median"],
     }
     layers = {}
     if args.trace:
@@ -226,6 +227,7 @@ def measure_run(args, work):
         layers.update(layer_table(wl, tracer, stages))
         layers.update(extra)
         layers.update(wl.log_metrics(stages, tracer))
+        layers.update((k, v) for k, (v, _, _) in summary["named"].items())
         layers["trace.op_p50_s"] = op["median"]
         layers["trace.overhead_ratio"] = traced_s / untraced_s - 1.0
     return {

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from core import Check, dir_bytes, force
 from stats import median
 
-N_PAGES = {"full": 5_000, "tiny": 300}
+N_PAGES = {"full": 10_000, "tiny": 300}
 #: share of the captures the indexed fetch selects
 FETCH_SHARE = 10
 
@@ -40,6 +40,13 @@ def body(html: bytes) -> bytes:
 
 class WarcRoundtrip:
     name = "warc_roundtrip"
+    #: figures printed on every run and reported per layer when traced
+    NAMED = (
+        ("archive_records_per_s", "1/s"),
+        ("ingest_records_per_s", "1/s"),
+        ("index_records_per_s", "1/s"),
+        ("indexed_fetch_s", "s"),
+    )
 
     def __init__(self, ctx):
         self.ctx = ctx
