@@ -22,11 +22,20 @@ from eventlog import operator_skew
 from stats import median
 
 N_URLS = {"full": 150_000, "tiny": 4_000}
-#: noop rounds after the first before timing starts: the second round is
-#: still much slower than later ones while the JVM compiles hot code; round
-#: times keep falling slowly after that, but each warm-up round costs run
-#: time the benchmark's budget does not have
-WARM_ROUNDS = 1
+#: warm-up rounds after the first, cold one. A session is JIT-bound at
+#: first: the compiler threads spend about 17 s of CPU in the first round,
+#: 5 s in the third and still about 1 s per round at round fifteen, on the
+#: cores the rounds run on, and round times fall by about a third over the
+#: first ten or so rounds. Timing starts after the ninth round; more
+#: warm-up would cost run time the benchmark's budget does not have. The
+#: last warm-up round is collected: it is the digest the gate compares with
+#: the first.
+WARM_ROUNDS = 8
+#: warm-up rounds of a traced run, which also runs the traced prefixes and
+#: a cold crawl: the full warm-up would take it near the run time limit in
+#: the host's slow periods. Its untraced and traced rounds are compared at
+#: the same, earlier point of the warm-up.
+TRACE_WARM_ROUNDS = 1
 SEEN_SHARE = 0.3
 
 
@@ -83,17 +92,14 @@ class FrontierRound:
         )
 
         spark, ctx = self.ctx.spark, self.ctx
-        # one keyed pass over the universe: the candidates are its raw
-        # columns, the seen-set the keys of its first SEEN_SHARE
-        universe(spark.range(0, self.n, 1, 2 * ctx.cores), ctx.seed).transform(
-            with_frontier_keys).select(
-                "url", "priority", "seq", "url_hash").write.mode(
-                    "overwrite").parquet(ctx.path("frontier", "keyed"))
-        keyed = spark.read.parquet(ctx.path("frontier", "keyed"))
-        keyed.filter(F.col("seq") < int(self.n * SEEN_SHARE)).select(
-            "url_hash").write.mode("overwrite").parquet(
-                ctx.path("frontier", "seen"))
-        self.cands = keyed.select("url", "priority", "seq")
+        universe(spark.range(0, self.n, 1, 2 * ctx.cores),
+                 ctx.seed).write.mode("overwrite").parquet(
+                     ctx.path("frontier", "cands"))
+        self.cands = spark.read.parquet(ctx.path("frontier", "cands"))
+        # the seen-set: the keys of the first SEEN_SHARE of the candidates
+        self.cands.filter(F.col("seq") < int(self.n * SEEN_SHARE)).transform(
+            with_frontier_keys).select("url_hash").write.mode(
+                "overwrite").parquet(ctx.path("frontier", "seen"))
         self.seen = spark.read.parquet(ctx.path("frontier", "seen"))
         self.robots = demo_robots(spark)
         # salt buckets scale with cores, as in the bench harness; the
@@ -153,17 +159,20 @@ class FrontierRound:
             df.unpersist(blocking=True)
         return rows
 
-    def warmup(self):
+    def warmup(self, trace: bool = False):
         """The first round, collected: it pays codegen and Python worker
-        start, and its ordered output is the digest later rounds repeat."""
+        start. Then ``WARM_ROUNDS`` more (``TRACE_WARM_ROUNDS`` in a traced
+        run), the last of them collected too: the gate checks that its
+        ordered output repeats the first's."""
         self.first = self._ordered()
-        for _ in range(WARM_ROUNDS):
+        for _ in range((TRACE_WARM_ROUNDS if trace else WARM_ROUNDS) - 1):
             self.op()
+        self.again = self._ordered()
 
     def check(self) -> list:
         from warcio_spark.plans.reference_crawler import OracleConfig
 
-        first, again = self.first, self._ordered()
+        first, again = self.first, self.again
         digest = [self.digest(rows) for rows in (first, again)]
         budget = OracleConfig(self.cfg.slot_seconds,
                               self.cfg.default_crawl_delay,

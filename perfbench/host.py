@@ -131,6 +131,48 @@ def descendants(root: int) -> list:
     return out
 
 
+def _alive(pid: int) -> bool:
+    try:
+        with open("/proc/{0}/stat".format(pid)) as f:
+            state = f.read().rsplit(")", 1)[1].split()[0]
+    except OSError:
+        return False
+    return state not in ("Z", "X")
+
+
+def _reap_children() -> None:
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def stop_descendants(timeout: float = 20.0) -> None:
+    """Stop every process still running below this one, and wait until
+    each has ended: SIGTERM first, SIGKILL for what outlives ``timeout``.
+    After a clean session stop there is none; after an interrupted one
+    there may be a JVM whose gateway never connected, or its workers."""
+    import signal
+
+    pids = descendants(os.getpid())
+    for sig in (signal.SIGTERM, signal.SIGKILL):
+        for pid in pids:
+            try:
+                os.kill(pid, sig)
+            except OSError:
+                pass
+        deadline = time.time() + timeout
+        while pids and time.time() < deadline:
+            _reap_children()
+            pids = [p for p in pids if _alive(p)]
+            time.sleep(0.1)
+        if not pids:
+            return
+
+
 def tree_rss_mb(root: int) -> float:
     """Resident memory of ``root`` and all its descendants (driver, JVM and
     the JVM's Python workers), summed as proportional set size: a page that

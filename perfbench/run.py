@@ -165,6 +165,9 @@ def run(args) -> int:
     try:
         result = measure_run(args, work)
     finally:
+        import host
+
+        host.stop_descendants()
         shutil.rmtree(work, ignore_errors=True)
         try:
             os.rmdir(os.path.dirname(work))
@@ -193,7 +196,8 @@ def measure_run(args, work):
         wl.setup()
         inputs_s = time.perf_counter() - t1
         t2 = time.perf_counter()
-        wl.warmup()  # first calls pay codegen and Python worker start
+        # first calls pay codegen, JIT compilation and Python worker start
+        wl.warmup(trace=bool(args.trace))
         warmup_s = time.perf_counter() - t2
         setup_s = time.perf_counter() - t0
 

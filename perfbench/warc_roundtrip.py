@@ -147,7 +147,7 @@ class WarcRoundtrip:
         "sources.warc.read_warc_entries",
     )
 
-    def warmup(self):
+    def warmup(self, trace: bool = False):
         self.op()
 
     def trace(self, tracer) -> tuple:
