@@ -7893,7 +7893,7 @@ def oracle_sql() -> dict[str, str]:
         SELECT url, MIN(depth) AS depth FROM walk GROUP BY url
     """
 
-    out["url_patterns"] = """
+    out["url_patterns"] = r"""
         WITH urls AS (
           SELECT 'http://cal.ex/cal/' || (doc_id % 30 + 2000)::VARCHAR
                  || '/' || (doc_id % 12 + 1)::VARCHAR
@@ -7927,7 +7927,7 @@ def oracle_sql() -> dict[str, str]:
         SELECT host, template, n_urls, sample_url, host_share,
                (n_urls >= 100 AND host_share >= 0.5) AS is_trap_pattern
         FROM sh
-    """.replace("TEMPLATE_EXPR", """regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+)', 1)
+    """.replace("TEMPLATE_EXPR", r"""regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+)', 1)
                  || regexp_replace(regexp_replace(
                       regexp_extract(url,
                         '^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+([^?#]*)',

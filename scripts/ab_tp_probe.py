@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """Interleaved A/B: per-query `_tp` (scale-adaptive repartition) vs plain
 `_t` scan, noop-sink timed in ONE session so co-tenant windows hit both
-shapes equally. Monkeypatches __spark_entry__._tp between reps.
+shapes equally. Monkeypatches __spark_entry__._tp between reps. A query
+whose source does not call ``_tp(`` is skipped with a warning: patching
+would compare plain against plain and report a false zero delta.
 
 Usage: python scripts/ab_tp_probe.py [--sf DIR] [--reps N] q1 q2 ...
 """
@@ -9,6 +11,7 @@ Usage: python scripts/ab_tp_probe.py [--sf DIR] [--reps N] q1 q2 ...
 from __future__ import annotations
 
 import argparse
+import inspect
 import json
 import os
 import sys
@@ -37,16 +40,22 @@ def main():
     real_tp = entrymod._tp
     results = {}
     for name in args.queries:
+        if "_tp(" not in inspect.getsource(qs[name]):
+            print(f"warning: {name} does not call _tp(; skipped",
+                  file=sys.stderr, flush=True)
+            continue
         times = {"tp": [], "plain": []}
-        for rep in range(args.reps):
-            for shape in ("tp", "plain"):
-                entrymod._tp = real_tp if shape == "tp" else entrymod._t
-                spark.sparkContext.setJobDescription(f"ab {name} {shape}")
-                t0 = time.perf_counter()
-                bench.force(qs[name](spark, args.sf))
-                times[shape].append(round(time.perf_counter() - t0, 3))
-                spark.catalog.clearCache()
-        entrymod._tp = real_tp
+        try:
+            for rep in range(args.reps):
+                for shape in ("tp", "plain"):
+                    entrymod._tp = real_tp if shape == "tp" else entrymod._t
+                    spark.sparkContext.setJobDescription(f"ab {name} {shape}")
+                    t0 = time.perf_counter()
+                    bench.force(qs[name](spark, args.sf))
+                    times[shape].append(round(time.perf_counter() - t0, 3))
+                    spark.catalog.clearCache()
+        finally:
+            entrymod._tp = real_tp
         results[name] = {
             k: {"best": min(v), "samples": v} for k, v in times.items()
         }

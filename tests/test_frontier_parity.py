@@ -216,43 +216,11 @@ def test_mega_host_skew_budget_exact(spark):
     assert len(mega) == 40  # budget cap exact under skew
 
 
-def test_bloom_sidecar_equals_exact_anti_join(spark):
-    """Bloom pre-filter splits candidates but the union equals the exact
-    anti-join result, row for row."""
-    from warcio_spark.plans.frontier import not_seen, with_frontier_keys
-
-    def universe(n, mod):
-        return with_frontier_keys(
-            spark.range(0, n, 1, 8).select(
-                F.concat(F.lit("http://h"), F.pmod("id", F.lit(37)).cast("string"),
-                         F.lit(".com/p/"), F.col("id").cast("string")).alias("url"),
-                F.lit(1.0).alias("priority"),
-                F.col("id").alias("seq"),
-            )
-        )
-
-    cands = universe(30_000, 37)
-    seen = universe(9_000, 37).select("url_hash")
-    exact = not_seen(cands, seen).select("url_hash", "url_canon")
-    bloom = not_seen(cands, seen, bloom_items=20_000).select("url_hash", "url_canon")
-    assert exact.count() == 21_000
-    assert bloom.count() == 21_000
-    assert exact.exceptAll(bloom).count() == 0
-    assert bloom.exceptAll(exact).count() == 0
-
-
-def test_range_partitioned_bloom_sidecar_equals_exact(spark, tmp_path):
-    """The 10^10 layout: per-range bloom files built BY EXECUTORS (no
-    driver bitmap), probe loads only the ranges its batch hashes into.
-    Result must equal the exact anti-join row for row, and the sidecar
-    must actually be range-partitioned on disk."""
-    import json
-    import os
-
-    from warcio_spark.plans.bloom import (
-        bloom_not_seen_sidecar,
-        build_bloom_sidecar,
-    )
+def test_not_seen_is_exact_anti_join(spark):
+    """not_seen removes exactly the seen hashes, in one LeftAnti join with
+    no Python node. The keyed inputs are checkpointed first: keying has its
+    own Python branch (the canonicalizer's split-union), and an anti-join
+    over that union would be pushed into each branch."""
     from warcio_spark.plans.frontier import not_seen, with_frontier_keys
 
     def universe(n):
@@ -265,42 +233,22 @@ def test_range_partitioned_bloom_sidecar_equals_exact(spark, tmp_path):
             )
         )
 
-    cands = universe(30_000)
-    seen = universe(9_000).select("url_hash")
-    sidecar = str(tmp_path / "blooms")
-    meta = build_bloom_sidecar(seen, sidecar, expected_items=9_000, ranges=8)
-    assert meta["items"] == 9_000
-    files = [f for f in os.listdir(sidecar) if f.endswith(".bloom")]
-    assert len(files) == 8  # xxhash64 spreads 9k keys across all 8 ranges
-    with open(os.path.join(sidecar, "meta.json")) as f:
-        assert json.load(f)["m"] * 8 < 9_000 * 10 * 2  # per-range sizing, not global
+    cands = universe(30_000).localCheckpoint()
+    seen = universe(9_000).select("url_hash").localCheckpoint()
+    got = not_seen(cands, seen).select("url_hash")
+    rows = [r.url_hash for r in got.collect()]
+    want = ({r.url_hash for r in cands.select("url_hash").collect()}
+            - {r.url_hash for r in seen.collect()})
+    assert len(rows) == 21_000
+    assert set(rows) == want
 
-    got = bloom_not_seen_sidecar(cands, seen, sidecar).select("url_hash", "url_canon")
-    exact = not_seen(cands, seen).select("url_hash", "url_canon")
-    assert got.count() == 21_000
-    assert exact.exceptAll(got).count() == 0
-    assert got.exceptAll(exact).count() == 0
-
-
-def test_sidecar_probe_no_false_negatives(spark, tmp_path):
-    """Every seen key must probe maybe_seen=True (bloom guarantee)."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from warcio_spark.plans.bloom import build_bloom_sidecar, sidecar_probe_udf
-    from warcio_spark.plans.frontier import with_frontier_keys
-
-    seen = with_frontier_keys(
-        spark.range(0, 5_000, 1, 4).select(
-            F.concat(F.lit("http://x.com/"), F.col("id").cast("string")).alias("url"),
-            F.lit(1.0).alias("priority"), F.col("id").alias("seq"),
-        )
-    ).select("url_hash")
-    sidecar = str(tmp_path / "b2")
-    meta = build_bloom_sidecar(seen, sidecar, expected_items=5_000, ranges=4)
-    probe = sidecar_probe_udf(sidecar, meta["ranges"], meta["k"], meta["m"])
-    n_false_neg = seen.withColumn("_p", probe(F.col("url_hash"))) \
-        .filter(~F.col("_p")).count()
-    assert n_false_neg == 0
+    plan = got._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the final plan, not the initial one too
+    plan = plan.toString()
+    assert plan.count("LeftAnti") == 1
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_crawl_resume_across_compaction_boundary(spark, tmp_path):
@@ -346,115 +294,6 @@ def test_crawl_resume_across_compaction_boundary(spark, tmp_path):
     seen = st.read_seen(spark, last)
     assert seen.count() == seen.select("url_hash").distinct().count()
     assert seen.count() == st.read_metrics(last)["n_seen"]
-
-
-def test_crawl_with_bloom_sidecar_matches_plain(spark, tmp_path):
-    """The production 10^10 seen-set path end-to-end: crawl() with the
-    range-partitioned Bloom sidecar on (rebuild at start + per-round delta
-    updates + compaction rebuild + resume) emits a fetch log byte-identical
-    to the plain-anti-join crawl."""
-    cands = make_candidates(300)
-    robots = make_robots()
-    seeds = spark.createDataFrame(
-        [(c["url"], c["priority"], c["seq"]) for c in cands],
-        "url string, priority double, seq long",
-    )
-    rdf = robots_df(spark, robots)
-
-    d_plain = str(tmp_path / "plain")
-    crawlmod.crawl(spark, seeds, rdf, d_plain, rounds=4, cfg=CFG, compact_every=2)
-
-    d_bloom = str(tmp_path / "bloom")
-    sidecar = str(tmp_path / "sidecar")
-    # split across two invocations so resume rebuilds the sidecar from the
-    # committed snapshot (the crash-recovery contract)
-    crawlmod.crawl(spark, seeds, rdf, d_bloom, rounds=3, cfg=CFG,
-                   compact_every=2, bloom_sidecar=sidecar, bloom_ranges=4)
-    crawlmod.crawl(spark, seeds, rdf, d_bloom, rounds=1, cfg=CFG, resume=True,
-                   compact_every=2, bloom_sidecar=sidecar, bloom_ranges=4)
-
-    a = [(r.round, r.fetch_order, r.url_canon)
-         for r in crawlmod.fetch_log(spark, d_plain)
-         .orderBy("round", "fetch_order").collect()]
-    b = [(r.round, r.fetch_order, r.url_canon)
-         for r in crawlmod.fetch_log(spark, d_bloom)
-         .orderBy("round", "fetch_order").collect()]
-    assert a == b
-    assert len({r for r, _, _ in a}) == 4
-
-
-def test_sidecar_rebuild_removes_stale_ranges(spark, tmp_path):
-    """Rebuilding a sidecar dir with different sizing must not leave prior
-    range files behind (wrong-m bitmaps would be misread), and a probe
-    against any surviving wrong-sized file must fail SAFE (maybe-seen)."""
-    import os
-
-    from warcio_spark.plans.bloom import build_bloom_sidecar, sidecar_probe_udf
-    from warcio_spark.plans.frontier import with_frontier_keys
-
-    def seen_of(n):
-        return with_frontier_keys(
-            spark.range(0, n, 1, 4).select(
-                F.concat(F.lit("http://x.com/"), F.col("id").cast("string")).alias("url"),
-                F.lit(1.0).alias("priority"), F.col("id").alias("seq"),
-            )
-        ).select("url_hash")
-
-    sidecar = str(tmp_path / "b")
-    build_bloom_sidecar(seen_of(8_000), sidecar, expected_items=8_000, ranges=8)
-    old_sizes = {f: os.path.getsize(os.path.join(sidecar, f))
-                 for f in os.listdir(sidecar) if f.endswith(".bloom")}
-    assert len(old_sizes) == 8
-
-    # rebuild: fewer keys hitting fewer ranges, and a different m
-    few = seen_of(8_000).filter(F.pmod("url_hash", F.lit(8)) == 3)
-    meta = build_bloom_sidecar(few, sidecar, expected_items=200, ranges=8)
-    files = sorted(f for f in os.listdir(sidecar) if f.endswith(".bloom"))
-    assert files == ["range_{0}.bloom".format(r) for r in meta["built_ranges"]]
-    for f in files:
-        assert os.path.getsize(os.path.join(sidecar, f)) == meta["m"] // 8
-
-    # no false negatives against the new seen set after the rebuild
-    probe = sidecar_probe_udf(sidecar, meta["ranges"], meta["k"], meta["m"])
-    assert few.withColumn("_p", probe(F.col("url_hash"))).filter(~F.col("_p")).count() == 0
-
-    # plant a wrong-sized file where the new build has none: probe must say
-    # maybe-seen for everything hashing there (safe direction), never crash
-    missing = [r for r in range(8) if r not in meta["built_ranges"]]
-    if missing:
-        with open(os.path.join(sidecar, "range_{0}.bloom".format(missing[0])), "wb") as fh:
-            fh.write(b"\x00" * (meta["m"] // 8 + 13))
-        others = seen_of(8_000).filter(F.pmod("url_hash", F.lit(8)) == missing[0])
-        got = others.withColumn("_p", probe(F.col("url_hash"))).filter(~F.col("_p")).count()
-        assert got == 0
-
-
-def test_sidecar_update_equals_rebuild(spark, tmp_path):
-    """update_bloom_sidecar(delta) leaves zero false negatives over the
-    union — the invariant the crawl loop's per-round O(delta) update relies
-    on for exactness."""
-    from warcio_spark.plans.bloom import (
-        build_bloom_sidecar,
-        sidecar_probe_udf,
-        update_bloom_sidecar,
-    )
-    from warcio_spark.plans.frontier import with_frontier_keys
-
-    def seen_of(lo, hi):
-        return with_frontier_keys(
-            spark.range(lo, hi, 1, 4).select(
-                F.concat(F.lit("http://u.com/"), F.col("id").cast("string")).alias("url"),
-                F.lit(1.0).alias("priority"), F.col("id").alias("seq"),
-            )
-        ).select("url_hash")
-
-    sidecar = str(tmp_path / "b3")
-    build_bloom_sidecar(seen_of(0, 4_000), sidecar, expected_items=8_000, ranges=4)
-    meta = update_bloom_sidecar(seen_of(4_000, 6_000), sidecar)
-    assert meta["items"] == 6_000
-    probe = sidecar_probe_udf(sidecar, meta["ranges"], meta["k"], meta["m"])
-    union = seen_of(0, 6_000)
-    assert union.withColumn("_p", probe(F.col("url_hash"))).filter(~F.col("_p")).count() == 0
 
 
 def test_fetch_order_boundaries_and_tracker_match_default(spark):

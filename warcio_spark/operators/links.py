@@ -1806,11 +1806,12 @@ def image_fetch_frontier(captions: DataFrame,
 
     Scale shape (100 TB): one (image_url) rollup shuffle; the
     anti-join keys on url — the fetched side can be the huge one,
-    Catalyst plans SMJ with a runtime bloom pruning the never-fetched
-    majority. The per-host cap is the two-phase exact top-k
-    (stratified_quota's shape): rank inside (host, url-hash bucket)
-    and prune to the cap, then re-rank the <= buckets*cap survivors
-    per host — a CDN mega-host never serializes through one task.
+    and Catalyst plans it as a sort-merge join (its runtime bloom
+    filter never applies to an anti-join). The per-host cap is the
+    two-phase exact top-k (stratified_quota's shape): rank inside
+    (host, url-hash bucket) and prune to the cap, then re-rank the
+    <= buckets*cap survivors per host — a CDN mega-host never
+    serializes through one task.
     Both phases use the SAME total order (demand desc, image_url), so
     the composition is exactly the global per-host bottom-cap."""
     from pyspark.sql import Window

@@ -439,8 +439,7 @@ def partition_lineage(df: DataFrame) -> list:
 def crawl(spark: SparkSession, seeds: DataFrame, robots: DataFrame | None,
           state_dir: str, rounds: int, cfg: PolitenessConfig | None = None,
           outlinks_fn=default_outlinks, resume: bool = True,
-          compact_every: int = 8, bloom_sidecar: str | None = None,
-          bloom_ranges: int = 16, recrawl_ttl: int | None = None,
+          compact_every: int = 8, recrawl_ttl: int | None = None,
           recrawl_priority: float = 95.0,
           lease_ttl_sec: float = 3600.0) -> dict:
     """Run (or resume) a checkpointed crawl. Returns summary metrics.
@@ -457,7 +456,7 @@ def crawl(spark: SparkSession, seeds: DataFrame, robots: DataFrame | None,
     stage) instead of separate count() jobs; the seen total is
     prev + n_scheduled — exact distinct-url count while recrawl is off
     (deltas disjoint); with ``recrawl_ttl`` it counts cumulative FETCH
-    events (refetches recount), which is also what bloom sizing wants.
+    events (refetches recount).
     fetch_order's range boundaries are sampled ONCE per crawl() call and
     reused every round — no per-round sampling or count actions.
 
@@ -470,18 +469,7 @@ def crawl(spark: SparkSession, seeds: DataFrame, robots: DataFrame | None,
     fetch_round makes every pre-migration url due at once (age unknown
     => stale, at ``recrawl_priority``): expect one full-recrawl wave,
     rate-limited by per-host budgets, before steady-state freshness.
-
-    ``bloom_sidecar``: directory for the range-partitioned Bloom sidecar
-    (plans/bloom.py — the 10^10 seen-set layout). When set, the seen-set
-    anti-join is pre-pruned by the sidecar (identical results; false
-    positives route through the exact join). The sidecar is fully rebuilt
-    at crawl start (covers resume and torn updates), OR-updated with each
-    round's delta (O(new urls)), and rebuilt+resized at compaction rounds.
     """
-    from pyspark.sql import Observation
-
-    from warcio_spark.plans.frontier import sample_order_boundaries
-
     if recrawl_ttl is not None and recrawl_ttl < 1:
         raise ValueError("recrawl_ttl must be >= 1 (or None to disable)")
     cfg = cfg or PolitenessConfig()
@@ -490,16 +478,15 @@ def crawl(spark: SparkSession, seeds: DataFrame, robots: DataFrame | None,
     try:
         return _crawl_leased(
             spark, seeds, robots, state, rounds, cfg, outlinks_fn, resume,
-            compact_every, bloom_sidecar, bloom_ranges, recrawl_ttl,
-            recrawl_priority, lease,
+            compact_every, recrawl_ttl, recrawl_priority, lease,
         )
     finally:
         release_lease(state_dir, lease)
 
 
 def _crawl_leased(spark, seeds, robots, state, rounds, cfg, outlinks_fn,
-                  resume, compact_every, bloom_sidecar, bloom_ranges,
-                  recrawl_ttl, recrawl_priority, lease) -> dict:
+                  resume, compact_every, recrawl_ttl, recrawl_priority,
+                  lease) -> dict:
     from pyspark.sql import Observation
 
     from warcio_spark.plans.frontier import sample_order_boundaries
@@ -521,26 +508,6 @@ def _crawl_leased(spark, seeds, robots, state, rounds, cfg, outlinks_fn,
     # one-off quantile sample; reused across every round (boundaries only
     # affect range balance, never the fetch order itself)
     order_bounds = sample_order_boundaries(frontier)
-
-    seen_filter = None
-    if bloom_sidecar:
-        import os as _os
-
-        from warcio_spark.plans.bloom import (
-            bloom_not_seen_sidecar,
-            build_bloom_sidecar,
-            update_bloom_sidecar,
-        )
-
-        _os.makedirs(bloom_sidecar, exist_ok=True)
-        build_bloom_sidecar(
-            seen, bloom_sidecar,
-            expected_items=max(n_seen_total * 2, 1 << 20),
-            ranges=bloom_ranges,
-        )
-
-        def seen_filter(c, s):
-            return bloom_not_seen_sidecar(c, s, bloom_sidecar)
 
     summary = {"rounds": [], "started_at_round": start_round + 1}
     for n in range(start_round + 1, start_round + rounds + 1):
@@ -568,7 +535,7 @@ def _crawl_leased(spark, seeds, robots, state, rounds, cfg, outlinks_fn,
                 else due.select(*FRONTIER_COLS)
             )
         cands = (
-            prepare_candidates(frontier_in, seen_in, robots, cfg, seen_filter=seen_filter)
+            prepare_candidates(frontier_in, seen_in, robots, cfg)
             .observe(obs_c, F.count(F.lit(1)).alias("n_candidates"))
             .cache()
         )
@@ -656,18 +623,6 @@ def _crawl_leased(spark, seeds, robots, state, rounds, cfg, outlinks_fn,
             seen_full=seen_full,
         )
         summary["rounds"].append(metrics)
-
-        if bloom_sidecar:
-            if compacting:
-                # rebuild from the compacted snapshot: resizes m to the grown
-                # key count and clears any stale range files
-                build_bloom_sidecar(
-                    state.read_seen(spark, n), bloom_sidecar,
-                    expected_items=max(n_seen_total * 2, 1 << 20),
-                    ranges=bloom_ranges,
-                )
-            else:
-                update_bloom_sidecar(seen_delta, bloom_sidecar)
 
         cands.unpersist()
         scheduled.unpersist()

@@ -8,9 +8,8 @@ and mirrored exactly by the single-process oracle in
 Scale design (10^10-URL frontier):
 
 - seen-set: exact ``left_anti`` join on a 64-bit canonical-url hash — a
-  sort-merge join at scale whose shuffle is pruned by an optional Bloom
-  pre-filter (``bloom_filter_agg``/``might_contain``) that eliminates the
-  never-seen majority before the shuffle.
+  broadcast join while the seen-set is small, a sort-merge join at scale.
+  It is the only seen-set filter, and it runs entirely in the JVM.
 - politeness queue: per-host windowed top-k with **salted pre-pruning**:
   mega-hosts are first reduced per (host, salt) to ``budget`` rows, so the
   exact per-host window never sees more than S*budget rows of a hot host —
@@ -76,43 +75,9 @@ def dedup_candidates(cands: DataFrame) -> DataFrame:
     return best.select("url_hash", *[F.col("_best." + c).alias(c) for c in cols])
 
 
-def not_seen(cands: DataFrame, seen: DataFrame,
-             bloom_items: int | None = None) -> DataFrame:
-    """Frontier-minus-seen (A6/J3).
-
-    Exact path: left_anti sort-merge join on url_hash. With ``bloom_items``
-    set, a Bloom pre-filter splits candidates so the never-seen majority
-    bypasses the anti-join shuffle; the result is identical either way —
-    the bloom only prunes shuffle volume.
-
-    .. deprecated:: the ``bloom_items`` path builds ONE bitmap by OR-ing
-       partition bitmaps on the driver — fine to ~10^8 keys, a driver OOM
-       at 10^10 (a 10-bits/key bitmap is 12.5 GB). Production callers use
-       ``crawl(bloom_sidecar=...)`` / ``bloom_not_seen_sidecar``: the
-       range-partitioned sidecar whose bitmaps executors build, store and
-       probe shard-by-shard with no driver aggregation anywhere.
-    """
-    if bloom_items:
-        import warnings
-
-        from warcio_spark.plans.bloom import bloom_not_seen
-
-        warnings.warn(
-            "not_seen(bloom_items=...) aggregates one bloom bitmap on the "
-            "driver — use crawl(bloom_sidecar=...) / "
-            "bloom_not_seen_sidecar for the range-partitioned 10^10 path",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-        return bloom_not_seen(cands, seen, bloom_items)
+def not_seen(cands: DataFrame, seen: DataFrame) -> DataFrame:
+    """Frontier-minus-seen (A6/J3): exact left_anti join on url_hash."""
     return cands.join(seen.select("url_hash"), "url_hash", "left_anti")
-
-
-def enable_runtime_bloom(spark: SparkSession) -> None:
-    """Turn on Catalyst's runtime bloom-filter join pruning for the seen-set
-    anti-join path."""
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set("spark.sql.optimizer.runtimeFilter.number.threshold", "20")
 
 
 def apply_robots(cands: DataFrame, robots: DataFrame | None,
@@ -386,24 +351,18 @@ def url_pattern_census(df: DataFrame, url_col: str = "url", *,
 
 def prepare_candidates(raw: DataFrame, seen: DataFrame | None,
                        robots: DataFrame | None,
-                       cfg: PolitenessConfig | None = None,
-                       seen_filter=None) -> DataFrame:
+                       cfg: PolitenessConfig | None = None) -> DataFrame:
     """Full candidate pipeline: keys -> within-batch dedup -> anti-join seen
-    -> robots. ``robots`` may be the host-level table (host, allowed,
-    crawl_delay) or the path-rule table (host, allow, disallow, crawl_delay)
-    from robots_table_from_pages — detected by columns.
-
-    ``seen_filter``: optional callable(cands, seen) -> DataFrame replacing
-    the plain anti-join — crawl() passes the Bloom-sidecar variant here so
-    the never-seen majority skips the anti-join shuffle (result identical
-    by construction; the bloom only prunes)."""
+    (``not_seen``) -> robots. ``robots`` may be the host-level table (host,
+    allowed, crawl_delay) or the path-rule table (host, allow, disallow,
+    crawl_delay) from robots_table_from_pages — detected by columns."""
     cfg = cfg or PolitenessConfig()
     # already-keyed input (a frontier snapshot that persisted its keys)
     # skips re-canonicalizing the whole carried-over frontier every round
     keyed = raw if "url_hash" in raw.columns else with_frontier_keys(raw)
     cands = dedup_candidates(keyed)
     if seen is not None:
-        cands = seen_filter(cands, seen) if seen_filter else not_seen(cands, seen)
+        cands = not_seen(cands, seen)
     if robots is not None and "disallow" in robots.columns:
         return apply_robots_rules(cands, robots, cfg)
     return apply_robots(cands, robots, cfg)
