@@ -2677,7 +2677,8 @@ def q_host_hits(spark, sf):
     edges = host_graph(
         docs.select(src.alias("page_url"), dst.alias("outlink"))
     )
-    return host_hits(edges, iterations=3, decimals=8)
+    return host_hits(edges, iterations=3, decimals=8,
+                     persist_tracker=_QUERY_PERSISTS)
 
 
 def q_robots_audit(spark, sf):

@@ -1,5 +1,6 @@
-"""connected_components (plans/graph.py) vs a union-find oracle, and the
-dedup-side wrappers dup_clusters / dedup_by_pairs."""
+"""connected_components (plans/graph.py) vs a union-find oracle, the
+dedup-side wrappers dup_clusters / dedup_by_pairs, and the shared
+checkpoint rule of the iterative graph operators."""
 
 import random
 
@@ -7,7 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from warcio_spark.operators.dedup import dedup_by_pairs, dup_clusters
-from warcio_spark.plans.graph import connected_components
+from warcio_spark.plans.graph import (
+    connected_components,
+    crawl_depth,
+    resolve_chains,
+)
 
 
 def _uf_components(edges):
@@ -71,13 +76,54 @@ def test_long_path_converges_logarithmically(spark):
     assert set(got.values()) == {0}
 
 
-def test_custom_columns_and_checkpoint_dir(spark, tmp_path):
+def test_graph_operators_checkpoint_reliably_when_context_has_dir(
+        spark, tmp_path_factory):
+    """With a checkpoint directory on the SparkContext (the cluster
+    deployment setting), connected_components, crawl_depth and
+    resolve_chains each write reliable checkpoint files under it, and
+    their results still equal the oracles."""
+    from test_crawl_depth import _bfs_oracle
+    from test_redirect_chains import _oracle as _chain_oracle
+
+    # Spark cannot unset a checkpoint directory: it stays set for the rest
+    # of this test session, so the graph operators in later tests
+    # checkpoint reliably too. The directory is session-lived for that
+    # reason.
+    ckdir = tmp_path_factory.mktemp("ckpt")
+    spark.sparkContext.setCheckpointDir(str(ckdir))
+
+    def rdd_dirs():
+        return {p for p in ckdir.glob("*/rdd-*") if any(p.iterdir())}
+
+    seen = rdd_dirs()
+
+    def wrote_new_checkpoints():
+        nonlocal seen
+        new = rdd_dirs() - seen
+        seen |= new
+        return bool(new)
+
     df = spark.createDataFrame([(5, 1), (1, 9)], ["id_a", "id_b"])
-    got = connected_components(
-        df, src_col="id_a", dst_col="id_b",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    ).collect()
+    got = connected_components(df, src_col="id_a", dst_col="id_b").collect()
     assert {r["node"]: r["component"] for r in got} == {1: 1, 5: 1, 9: 1}
+    assert wrote_new_checkpoints()
+
+    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("x", "y")]
+    got = {r.url: r.depth for r in crawl_depth(
+        spark.createDataFrame(edges, "src string, dst string"),
+        spark.createDataFrame([("a",)], "url string"),
+        max_depth=6).collect()}
+    assert got == _bfs_oracle(edges, ["a"], 6)
+    assert wrote_new_checkpoints()
+
+    edges = [("a", "b"), ("b", "c"), ("c", "z"), ("p", "q"), ("q", "p"),
+             ("s", "s"), ("r", "p"), ("f", "t1"), ("f", "t2")]
+    got = {r.url: (r.final_url, r.hops, r.unresolved)
+           for r in resolve_chains(
+               spark.createDataFrame(edges, "src string, dst string"),
+               max_hops=8).collect()}
+    assert got == _chain_oracle(edges, 8)
+    assert wrote_new_checkpoints()
 
 
 def test_nonconvergence_raises(spark):

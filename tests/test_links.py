@@ -553,6 +553,77 @@ def test_host_graph_and_rank_against_python_oracle(spark):
     assert max(got.values()) > min(got.values())
 
 
+def _rank_universe_edges():
+    """The test_host_graph_and_rank_against_python_oracle universe as
+    (src_host, dst_host) -> n_links: 13 source hosts (port variants fold
+    together) fanning into 17 destination hosts, self-edges included."""
+    from collections import defaultdict
+
+    edges = defaultdict(int)
+    for i in range(400):
+        src, dst = i % 13, (i * 5 + 2) % 17
+        edges[("h%d.ex.com" % src, "h%d.ex.com" % dst)] += 1
+    return dict(edges)
+
+
+def test_trust_rank_against_python_oracle(spark):
+    """plans/graph.trust_rank vs an independent single-process seeded
+    power iteration on the host_rank oracle universe, equal to 1e-12:
+    teleport mass lands only on the seeds, and a seed absent from the
+    graph is ignored."""
+    from collections import defaultdict
+
+    from warcio_spark.plans.graph import trust_rank
+
+    want_edges = _rank_universe_edges()
+    e = {k: v for k, v in want_edges.items() if k[0] != k[1]}
+    nodes = sorted({s for s, _ in e} | {d for _, d in e})
+    seeds = ["h3.ex.com", "h14.ex.com", "absent.ex.com"]
+    seeded = [h for h in nodes if h in seeds]
+    outw = defaultdict(int)
+    for (s, _), w in e.items():
+        outw[s] += w
+    trust = {h: (1.0 / len(seeded) if h in seeded else 0.0) for h in nodes}
+    for _ in range(3):
+        nxt = {h: ((1.0 - 0.85) / len(seeded) if h in seeded else 0.0)
+               for h in nodes}
+        for (s, d), w in e.items():
+            nxt[d] += 0.85 * trust[s] * (w / outw[s])
+        trust = nxt
+
+    got = {r.host: r.trust for r in trust_rank(
+        spark.createDataFrame(
+            [(s, d, w) for (s, d), w in want_edges.items()],
+            "src_host string, dst_host string, n_links long"),
+        spark.createDataFrame([(h,) for h in seeds], "host string"),
+        iterations=3).collect()}
+    assert set(got) == set(trust)
+    for h in trust:
+        assert abs(got[h] - trust[h]) < 1e-12, h
+    # sanity: the seeds hold the most trust
+    assert len(seeded) == 2
+    assert min(got[h] for h in seeded) > max(
+        v for h, v in got.items() if h not in seeded)
+
+
+def test_trust_rank_with_every_host_seeded_is_host_rank(spark):
+    """host_rank is trust_rank with every host as a teleport target: the
+    two share one power-iteration core, so the values are equal exactly,
+    not just to a tolerance."""
+    from warcio_spark.plans.graph import host_rank, trust_rank
+
+    edges = spark.createDataFrame(
+        [(s, d, w) for (s, d), w in _rank_universe_edges().items()],
+        "src_host string, dst_host string, n_links long")
+    hosts = {r.host for r in host_rank(edges, iterations=0).collect()}
+    seeds = spark.createDataFrame([(h,) for h in sorted(hosts)],
+                                  "host string")
+    pr = {r.host: r.rank for r in host_rank(edges, iterations=3).collect()}
+    tr = {r.host: r.trust
+          for r in trust_rank(edges, seeds, iterations=3).collect()}
+    assert set(pr) == hosts and pr == tr
+
+
 def test_host_hits_against_python_oracle(spark):
     """plans/graph.host_hits vs an independent single-process HITS:
     3 weighted auth/hub sweeps, end-normalized to unit L2, equal to

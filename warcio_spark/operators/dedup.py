@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from warcio_spark.operators.textstats import tokens
-from warcio_spark.plans.graph import connected_components
+from warcio_spark.plans.graph import connected_components, materialize
 
 # ---------------------------------------------------------------------------
 # exact
@@ -751,8 +751,7 @@ def embedding_near_dup(emb: DataFrame, threshold: float = 0.95,
 
 
 def dup_clusters(pairs: DataFrame, left_col: str = "id_a",
-                 right_col: str = "id_b",
-                 checkpoint_dir: str | None = None) -> DataFrame:
+                 right_col: str = "id_b") -> DataFrame:
     """(doc_id, cluster) for every doc appearing in a duplicate pair;
     ``cluster`` is the minimum doc_id in the transitive closure of the
     pair relation. This is what turns pair-producing dedup
@@ -762,23 +761,21 @@ def dup_clusters(pairs: DataFrame, left_col: str = "id_a",
     near-dup in the corpus). Runs plans.graph.connected_components —
     O(log n) star rounds, never a driver-side union-find."""
     return (
-        connected_components(pairs, src_col=left_col, dst_col=right_col,
-                             checkpoint_dir=checkpoint_dir)
+        connected_components(pairs, src_col=left_col, dst_col=right_col)
         .select(F.col("node").alias("doc_id"),
                 F.col("component").alias("cluster"))
     )
 
 
 def dedup_by_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-                   left_col: str = "id_a", right_col: str = "id_b",
-                   checkpoint_dir: str | None = None) -> DataFrame:
+                   left_col: str = "id_a",
+                   right_col: str = "id_b") -> DataFrame:
     """Keep one canonical doc (the minimum id) per duplicate cluster:
     docs in no pair pass through untouched; docs in a cluster survive
     only if they ARE the cluster minimum. One broadcast-able anti-join
     against the (usually tiny relative to the corpus) non-canonical
     member list."""
-    losers = dup_clusters(pairs, left_col, right_col,
-                          checkpoint_dir=checkpoint_dir).filter(
+    losers = dup_clusters(pairs, left_col, right_col).filter(
         F.col("doc_id") != F.col("cluster")
     ).select(F.col("doc_id").alias(id_col))
     return df.join(losers, id_col, "left_anti")
@@ -786,8 +783,7 @@ def dedup_by_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
 
 def dedup_keep_best(df: DataFrame, pairs: DataFrame, score_col: str,
                     id_col: str = "doc_id", left_col: str = "id_a",
-                    right_col: str = "id_b",
-                    checkpoint_dir: str | None = None) -> DataFrame:
+                    right_col: str = "id_b") -> DataFrame:
     """Keep the HIGHEST-``score_col`` doc per duplicate cluster (tie ->
     minimum id) instead of ``dedup_by_pairs``'s blind minimum-id policy —
     the production choice when duplicates differ in quality (keep the
@@ -801,8 +797,7 @@ def dedup_keep_best(df: DataFrame, pairs: DataFrame, score_col: str,
     boilerplate mega-cluster costs one combiner chain, not one reducer),
     and the corpus-sized side is touched exactly once by the final
     anti-join of losers."""
-    members = dup_clusters(pairs, left_col, right_col,
-                           checkpoint_dir=checkpoint_dir)
+    members = dup_clusters(pairs, left_col, right_col)
     scored = members.join(
         df.select(F.col(id_col).alias("__id"), F.col(score_col).alias("__score")),
         F.col("doc_id") == F.col("__id"),
@@ -824,8 +819,7 @@ def dedup_keep_best(df: DataFrame, pairs: DataFrame, score_col: str,
 def minhash_dedup_corpus(df: DataFrame, threshold: float = 0.8,
                          id_col: str = "doc_id", text_col: str = "text",
                          num_perm: int = 64, bands: int = 16,
-                         shingle_n: int = 3,
-                         checkpoint_dir: str | None = None) -> DataFrame:
+                         shingle_n: int = 3) -> DataFrame:
     """End-to-end near-dup removal: MinHash-LSH candidates -> exact
     Jaccard verify -> connected components over the verified pairs ->
     keep the minimum-id doc per cluster. This is the full shape of a
@@ -834,21 +828,18 @@ def minhash_dedup_corpus(df: DataFrame, threshold: float = 0.8,
     actually hold).
 
     Lifecycle: the pair table is materialized ONCE (checkpoint) so the
-    shingle cache can be freed before the caller's plan runs; the
-    cluster rounds checkpoint through ``checkpoint_dir`` when given
-    (real clusters), executor-local otherwise."""
+    shingle cache can be freed before the caller's plan runs. That
+    checkpoint and the cluster rounds go through
+    ``plans.graph.materialize``: reliable when the session has a
+    checkpoint directory (``sparkContext.setCheckpointDir``),
+    executor-local otherwise."""
     tracker: list = []
     pairs = minhash_dedup(df, threshold, id_col, text_col, num_perm,
                           bands, shingle_n, persist_tracker=tracker)
-    if checkpoint_dir is not None:
-        df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        pairs = pairs.checkpoint(eager=True)
-    else:
-        pairs = pairs.localCheckpoint(eager=True)
+    pairs, _ = materialize(pairs)
     for cached in tracker:
         cached.unpersist()
-    return dedup_by_pairs(df, pairs, id_col,
-                          checkpoint_dir=checkpoint_dir)
+    return dedup_by_pairs(df, pairs, id_col)
 
 
 def boilerplate_strip(df: DataFrame, min_docs: int = 3,

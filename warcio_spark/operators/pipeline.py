@@ -534,8 +534,8 @@ def stratified_quota(docs: DataFrame, quota: int, strata: tuple = ("lang",),
 
 def leakage_safe_split(docs: DataFrame, pairs: DataFrame, ratios: dict,
                        *, id_col: str = "doc_id", left_col: str = "id_a",
-                       right_col: str = "id_b", salt: str = "split",
-                       checkpoint_dir: str | None = None) -> DataFrame:
+                       right_col: str = "id_b",
+                       salt: str = "split") -> DataFrame:
     """Contamination-safe holdout assignment: every doc lands in exactly
     one named split, and docs linked (transitively) by the near-dup
     ``pairs`` relation ALWAYS land in the same split — the property that
@@ -567,9 +567,8 @@ def leakage_safe_split(docs: DataFrame, pairs: DataFrame, ratios: dict,
     total = sum(ratios.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"ratios must sum to 1, got {total}")
-    cl = dup_clusters(pairs, left_col, right_col,
-                      checkpoint_dir=checkpoint_dir).withColumnRenamed(
-                          "doc_id", id_col)
+    cl = dup_clusters(pairs, left_col, right_col).withColumnRenamed(
+        "doc_id", id_col)
     assigned = (
         docs.select(id_col)
         .join(cl, id_col, "left")

@@ -51,12 +51,107 @@ def host_graph(links: DataFrame, src_col: str = "page_url",
     )
 
 
+def _persist(df: DataFrame, persist_tracker: list | None) -> DataFrame:
+    """Persist ``df`` into the caller's ``persist_tracker`` (the caller
+    unpersists after materializing); without a tracker nothing is cached,
+    so a library caller is never left holding a cache it cannot release."""
+    if persist_tracker is None:
+        return df
+    from pyspark.storagelevel import StorageLevel
+
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    persist_tracker.append(df)
+    return df
+
+
+def _host_edges(edges: DataFrame, self_edges: bool,
+                persist_tracker: list | None) -> tuple[DataFrame, DataFrame]:
+    """Edge prep shared by the rank family: drop self-edges unless
+    ``self_edges``, persist the edge table into ``persist_tracker`` (the
+    unrolled iterations reference it once per iteration per branch, so an
+    un-persisted caller lineage would re-execute ~2x per iteration), and
+    return it with the node universe (every host on either side)."""
+    if not self_edges:
+        edges = edges.filter(F.col("src_host") != F.col("dst_host"))
+    edges = _persist(edges, persist_tracker)
+    nodes = (
+        edges.select(F.col("src_host").alias("host"))
+        .union(edges.select(F.col("dst_host").alias("host")))
+        .distinct()
+    )
+    return edges, nodes
+
+
+def _seeded_power_iteration(edges: DataFrame, seeds: DataFrame | None,
+                            iterations: int, alpha: float, self_edges: bool,
+                            persist_tracker: list | None,
+                            value_col: str) -> DataFrame:
+    """The one power iteration behind host_rank and trust_rank:
+    ``v' = 1[host in S]*(1-alpha)/|S| + alpha*sum(v*w/outw)`` over
+    in-edges, from the uniform-over-S start. ``seeds=None`` makes every
+    node a teleport target (|S| = N), which is PageRank. Returns
+    (host, ``value_col``)."""
+    edges, nodes = _host_edges(edges, self_edges, persist_tracker)
+    if seeds is None:
+        flagged = nodes.select("host", F.lit(True).alias("_seed"))
+    else:
+        seed_hosts = seeds.select(F.col("host")).distinct()
+        flagged = nodes.join(
+            F.broadcast(seed_hosts.withColumn("_seed", F.lit(True))),
+            "host", "left",
+        ).select("host",
+                 F.coalesce(F.col("_seed"), F.lit(False)).alias("_seed"))
+    flagged = _persist(flagged, persist_tracker)
+    # |S| rides a 1-row broadcast cross-join instead of a driver .count()
+    # pull, so the whole query is ONE Spark action. With zero seeds in the
+    # graph every value takes the otherwise(0.0) branch (all-zero result),
+    # and an empty graph yields no rows; the division by _s only evaluates
+    # on seed rows. Divisions happen on the same IEEE doubles the Python
+    # literals hold, so values are bit-identical to a driver-side scalar.
+    scount = flagged.agg(F.count_if(F.col("_seed")).alias("_s"))
+    flagged_s = flagged.crossJoin(F.broadcast(scount))
+    outw = edges.groupBy("src_host").agg(F.sum("n_links").alias("_outw"))
+    frac = edges.join(outw, "src_host").select(
+        F.col("src_host"),
+        F.col("dst_host"),
+        (F.col("n_links").cast("double") / F.col("_outw")).alias("_frac"),
+    )
+    base = F.when(
+        F.col("_seed"), F.lit(1.0 - alpha) / F.col("_s")
+    ).otherwise(F.lit(0.0))
+    cur = flagged_s.select(
+        "host", "_seed", "_s",
+        F.when(F.col("_seed"), F.lit(1.0) / F.col("_s"))
+        .otherwise(F.lit(0.0)).alias("_v"),
+    )
+    for _ in range(max(0, iterations)):
+        contrib = (
+            frac.join(cur.select("host", "_v"),
+                      frac.src_host == F.col("host"))
+            .groupBy("dst_host")
+            .agg(F.sum(F.col("_v") * F.col("_frac")).alias("_in"))
+        )
+        cur = (
+            flagged_s.join(contrib, flagged_s.host == contrib.dst_host,
+                           "left")
+            .select(
+                "host", "_seed", "_s",
+                (base
+                 + F.lit(alpha) * F.coalesce(F.col("_in"), F.lit(0.0))
+                 ).alias("_v"),
+            )
+        )
+    return cur.select("host", F.col("_v").alias(value_col))
+
+
 def host_rank(edges: DataFrame, iterations: int = 3,
               alpha: float = 0.85, self_edges: bool = False,
               persist_tracker: list | None = None) -> DataFrame:
     """Weighted PageRank power iteration over host_graph edges:
     ``rank' = (1-alpha)/N + alpha * sum(rank(src) * w / outweight(src))``
-    over in-edges, starting uniform at 1/N. Returns (host, rank).
+    over in-edges, starting uniform at 1/N. Returns (host, rank). It is
+    ``trust_rank`` with every host as a teleport target: both run one
+    power-iteration core.
 
     Simplifications, stated so results are reproducible: dangling-host
     mass is NOT redistributed (hosts with no out-edges leak their alpha
@@ -72,59 +167,8 @@ def host_rank(edges: DataFrame, iterations: int = 3,
     (e.g. outlink extraction feeding host_graph) would re-execute ~2x
     per iteration; the caller unpersists after materializing.
     """
-    if not self_edges:
-        edges = edges.filter(F.col("src_host") != F.col("dst_host"))
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(edges)
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .union(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(nodes)
-    # N rides a 1-row broadcast cross-join instead of a driver .count()
-    # pull, so the whole query is ONE Spark action (same shape as the
-    # host_hits norms fold; empty graphs fall through to an empty result,
-    # exactly what the old n==0 early return produced). The constant _n
-    # column costs 8 bytes/row on host-sized tables; divisions happen on
-    # the same IEEE doubles the Python literals held, so ranks are
-    # bit-identical.
-    ncount = nodes.agg(F.count(F.lit(1)).alias("_n"))
-    nodes_n = nodes.crossJoin(F.broadcast(ncount))
-    outw = edges.groupBy("src_host").agg(F.sum("n_links").alias("_outw"))
-    frac = edges.join(outw, "src_host").select(
-        F.col("src_host"),
-        F.col("dst_host"),
-        (F.col("n_links").cast("double") / F.col("_outw")).alias("_frac"),
-    )
-    ranks = nodes_n.select(
-        "host", "_n", (F.lit(1.0) / F.col("_n")).alias("rank")
-    )
-    base = F.lit(1.0 - alpha) / F.col("_n")
-    for _ in range(max(0, iterations)):
-        contrib = (
-            frac.join(ranks.select("host", "rank"),
-                      frac.src_host == F.col("host"))
-            .groupBy("dst_host")
-            .agg(F.sum(F.col("rank") * F.col("_frac")).alias("_in"))
-        )
-        ranks = (
-            nodes_n.join(contrib, nodes_n.host == contrib.dst_host, "left")
-            .select(
-                "host", "_n",
-                (base
-                 + F.lit(alpha) * F.coalesce(F.col("_in"), F.lit(0.0))
-                 ).alias("rank"),
-            )
-        )
-    return ranks.select("host", "rank")
+    return _seeded_power_iteration(edges, None, iterations, alpha,
+                                   self_edges, persist_tracker, "rank")
 
 
 def trust_rank(edges: DataFrame, seeds: DataFrame, iterations: int = 3,
@@ -148,67 +192,8 @@ def trust_rank(edges: DataFrame, seeds: DataFrame, iterations: int = 3,
     contract as host_rank (edges + flagged node table persisted so the
     unrolled iterations share one caller-lineage execution).
     """
-    if not self_edges:
-        edges = edges.filter(F.col("src_host") != F.col("dst_host"))
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(edges)
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .union(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    seed_hosts = seeds.select(F.col("host")).distinct()
-    flagged = nodes.join(
-        F.broadcast(seed_hosts.withColumn("_seed", F.lit(True))), "host", "left"
-    ).select("host", F.coalesce(F.col("_seed"), F.lit(False)).alias("_seed"))
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(flagged)
-    # |S| rides a 1-row broadcast cross-join instead of a driver .count()
-    # pull — ONE Spark action, like host_rank's N fold. With zero seeds no
-    # row satisfies _seed, so every trust value takes the otherwise(0.0)
-    # branch and the result is all-zero, exactly the old s==0 early
-    # return; the division by _s only evaluates on seed rows.
-    scount = flagged.agg(
-        F.count_if(F.col("_seed")).alias("_s"))
-    flagged_s = flagged.crossJoin(F.broadcast(scount))
-    outw = edges.groupBy("src_host").agg(F.sum("n_links").alias("_outw"))
-    frac = edges.join(outw, "src_host").select(
-        F.col("src_host"),
-        F.col("dst_host"),
-        (F.col("n_links").cast("double") / F.col("_outw")).alias("_frac"),
-    )
-    base = F.when(
-        F.col("_seed"), F.lit(1.0 - alpha) / F.col("_s")
-    ).otherwise(F.lit(0.0))
-    trust = flagged_s.select(
-        "host", "_seed", "_s",
-        F.when(F.col("_seed"), F.lit(1.0) / F.col("_s"))
-        .otherwise(F.lit(0.0)).alias("trust"),
-    )
-    for _ in range(max(0, iterations)):
-        contrib = (
-            frac.join(trust.select("host", "trust"),
-                      frac.src_host == F.col("host"))
-            .groupBy("dst_host")
-            .agg(F.sum(F.col("trust") * F.col("_frac")).alias("_in"))
-        )
-        trust = (
-            flagged_s.join(contrib, flagged_s.host == contrib.dst_host,
-                           "left")
-            .select(
-                "host", "_seed", "_s",
-                (base
-                 + F.lit(alpha) * F.coalesce(F.col("_in"), F.lit(0.0))
-                 ).alias("trust"),
-            )
-        )
-    return trust.select("host", "trust")
+    return _seeded_power_iteration(edges, seeds, iterations, alpha,
+                                   self_edges, persist_tracker, "trust")
 
 
 def host_hits(edges: DataFrame, iterations: int = 3,
@@ -236,24 +221,11 @@ def host_hits(edges: DataFrame, iterations: int = 3,
 
     Same scale shape as host_rank: every stage shuffles the aggregated
     host table, never per-link rows; driver-side values are the two
-    final norms only."""
-    if not self_edges:
-        edges = edges.filter(F.col("src_host") != F.col("dst_host"))
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(edges)
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .union(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(nodes)
+    final norms only. ``persist_tracker``: same contract as host_rank,
+    plus the final (host, hub, authority) table that both the norms and
+    the output rows read; without a tracker nothing is persisted."""
+    edges, nodes = _host_edges(edges, self_edges, persist_tracker)
+    nodes = _persist(nodes, persist_tracker)
     hubs = nodes.select("host", F.lit(1.0).alias("hub"))
     auths = nodes.select("host", F.lit(0.0).alias("authority"))
     for _ in range(max(0, iterations)):
@@ -273,17 +245,16 @@ def host_hits(edges: DataFrame, iterations: int = 3,
         hubs = nodes.join(h_out, nodes.host == h_out.src_host, "left").select(
             "host", F.coalesce("_h", F.lit(0.0)).alias("hub")
         )
-    # materialize ONCE for both consumers of the sweep (the norms branch
-    # and the output rows): the persist makes the 2*iterations-join DAG
-    # execute a single time inside the one driving action. The norms ride
-    # a 1-row broadcast cross-join instead of a driver .first() pull, so
-    # the whole query is ONE Spark action (the old shape paid a separate
-    # norms job: measured 2.12-2.19 -> 1.78-1.95 s at sf0.1, output
-    # hash-identical — same IEEE doubles, divided in the JVM instead of
-    # pulled through Python). The host table is tiny at any scale.
-    both = hubs.join(auths, "host").persist()
-    if persist_tracker is not None:
-        persist_tracker.append(both)
+    # both consumers of the sweep (the norms branch and the output rows)
+    # read one persisted table when a persist_tracker is supplied, so the
+    # 2*iterations-join DAG executes a single time inside the one driving
+    # action. The norms ride a 1-row broadcast cross-join instead of a
+    # driver .first() pull, so the whole query is ONE Spark action (the
+    # old shape paid a separate norms job: measured 2.12-2.19 -> 1.78-1.95
+    # s at sf0.1, output hash-identical — same IEEE doubles, divided in
+    # the JVM instead of pulled through Python). The host table is tiny
+    # at any scale.
+    both = _persist(hubs.join(auths, "host"), persist_tracker)
     norms = both.agg(
         F.sqrt(F.sum(F.col("hub") * F.col("hub"))).alias("_nh"),
         F.sqrt(F.sum(F.col("authority") * F.col("authority"))).alias("_na"),
@@ -302,6 +273,36 @@ def host_hits(edges: DataFrame, iterations: int = 3,
         _out(F.col("hub"), F.col("_nh")).alias("hub"),
         _out(F.col("authority"), F.col("_na")).alias("authority"),
     )
+
+
+# ---------------------------------------------------------------------------
+# Checkpointed iteration: one materialize step for every iterative operator
+# ---------------------------------------------------------------------------
+
+
+def materialize(df: DataFrame, *metrics: Column,
+                lazy: bool = False) -> tuple[DataFrame, dict]:
+    """Checkpoint ``df`` and return it with the values of ``metrics``
+    (aggregate Columns, collected by ``observe`` on the SAME job), so an
+    iterated plan's lineage stays O(1) per round at one Spark action per
+    round. The checkpoint is reliable when the session's SparkContext has
+    a checkpoint directory (``sparkContext.setCheckpointDir`` — the
+    deployment setting on a cluster, which survives executor loss) and
+    executor-local otherwise (fast, not fault-tolerant).
+
+    ``lazy=True`` (no metrics) runs no job: an executor-local checkpoint
+    is filled by the first action that reads ``df``. A reliable
+    checkpoint is always written eagerly, because Spark writes a lazy one
+    with a separate job that recomputes ``df`` after that first action."""
+    from pyspark.sql import Observation
+
+    reliable = df.sparkSession.sparkContext.getCheckpointDir() is not None
+    eager = reliable or not lazy
+    obs = Observation() if metrics else None
+    if obs is not None:
+        df = df.observe(obs, *metrics)
+    ck = df.checkpoint(eager) if reliable else df.localCheckpoint(eager)
+    return ck, (obs.get if obs is not None else {})
 
 
 # ---------------------------------------------------------------------------
@@ -418,7 +419,6 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iterations: int = 25,
-    checkpoint_dir: str | None = None,
     local_contraction: bool = True,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; ``component`` is
@@ -436,16 +436,15 @@ def connected_components(
     min per node — a 10^9-degree hub costs one partial min per partition,
     never a collected neighbor list) plus one join of the edge set
     against the |V|-row min table, keyed the same way. Each round's
-    output is checkpointed (``checkpoint_dir`` → reliable
-    ``DataFrame.checkpoint`` for real clusters; default →
-    ``localCheckpoint``) so the iterated plan's lineage stays O(1) per
-    round instead of doubling. Convergence = consecutive rounds produce
-    the identical edge multiset (count + two independent hash XOR-folds);
-    at the fixed point the edge set is a star forest centered on
-    component minima. The fingerprint rides the SAME job that
-    materializes the checkpoint (``observe`` metrics), so each round is
-    exactly ONE Spark action — at toy scale the round cost is pure job
-    latency, and halving the action count halves it.
+    output is checkpointed by ``materialize`` (reliable when the session
+    has a checkpoint directory, executor-local otherwise) so the iterated
+    plan's lineage stays O(1) per round instead of doubling. Convergence =
+    consecutive rounds produce the identical edge multiset (count + two
+    independent hash XOR-folds); at the fixed point the edge set is a
+    star forest centered on component minima. The fingerprint rides the
+    SAME job that materializes the checkpoint (``observe`` metrics), so
+    each round is exactly ONE Spark action — at toy scale the round cost
+    is pure job latency, and halving the action count halves it.
 
     ``local_contraction`` (default on): collapse each partition's edges to
     an equivalent local star forest first (``_contract_partitions``) — same
@@ -456,22 +455,15 @@ def connected_components(
     Raises ``RuntimeError`` if not converged after ``max_iterations`` —
     a wrong clustering is never returned silently.
     """
-    from pyspark.sql import Observation
-
-    # lazy localCheckpoint: BOTH consumers of the raw edge set (the node
+    # lazy checkpoint: BOTH consumers of the raw edge set (the node
     # universe below and the star-round seed) read one materialization —
     # without it the final nodes.join() re-executes the caller's whole
     # pair-producing lineage (shingling, LSH, jaccard verify) a second
     # time after the rounds have converged.
-    e0 = edges.select(
+    e0, _ = materialize(edges.select(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
-    )
-    if checkpoint_dir is not None:
-        e0.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        e0 = e0.checkpoint(eager=False)
-    else:
-        e0 = e0.localCheckpoint(eager=False)
+    ), lazy=True)
     nodes = (
         e0.select("src").union(e0.select("dst")).distinct()
         .withColumnRenamed("src", "node")
@@ -483,31 +475,18 @@ def connected_components(
     # for the same one-exchange price the distinct() was already paying.
     cur = _contract_partitions(cur) if local_contraction else cur.distinct()
 
-    def _materialize(df: DataFrame) -> tuple[DataFrame, tuple]:
-        obs = Observation()
-        observed = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)
-            ).alias("h1"),
-            F.coalesce(F.bit_xor(F.hash("dst", "src")), F.lit(0)).alias(
-                "h2"
-            ),
-        )
-        if checkpoint_dir is not None:
-            ck = observed.checkpoint(eager=True)
-        else:
-            ck = observed.localCheckpoint(eager=True)
-        m = obs.get
-        return ck, (m["n"], m["h1"], m["h2"])
-
-    cur, sig = _materialize(cur)
-    converged = sig[0] == 0
+    fingerprint = (
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0))
+        .alias("h1"),
+        F.coalesce(F.bit_xor(F.hash("dst", "src")), F.lit(0)).alias("h2"),
+    )
+    cur, sig = materialize(cur, *fingerprint)
+    converged = sig["n"] == 0
     for _ in range(max_iterations):
         if converged:
             break
-        nxt, nsig = _materialize(_small_star(_large_star(cur)))
+        nxt, nsig = materialize(_small_star(_large_star(cur)), *fingerprint)
         converged = nsig == sig
         cur, sig = nxt, nsig
     if not converged:
@@ -555,34 +534,29 @@ def crawl_depth(edges: DataFrame, seeds: DataFrame,
     (one BFS level, typically orders of magnitude smaller than the
     graph), never the whole reachable set at once; at 10^10 edges,
     pre-bucket the edge table by ``src_col`` so the per-round join is
-    co-partitioned. Each frontier is checkpointed (localCheckpoint)
-    with its count observed on the SAME action, so a round costs
-    exactly one job and the iterated lineage stays O(1) per round —
-    the connected_components discipline."""
-    from pyspark.sql import Observation
-
+    co-partitioned. Each frontier is checkpointed by ``materialize``
+    (reliable when the session has a checkpoint directory,
+    executor-local otherwise) with its count observed on the SAME
+    action, so a round costs exactly one Spark action and the iterated
+    lineage stays O(1) per round — the connected_components
+    discipline."""
+    count = F.count(F.lit(1)).alias("n")
     e0 = edges.select(F.col(src_col).cast("string").alias("_src"),
                       F.col(dst_col).cast("string").alias("_dst"))
     known = (seeds.select(F.col(seed_col).cast("string").alias("url"))
              .distinct().withColumn("depth", F.lit(0)))
 
-    def _materialize(df: DataFrame) -> tuple[DataFrame, int]:
-        obs = Observation()
-        ck = df.observe(obs, F.count(F.lit(1)).alias("n")) \
-               .localCheckpoint(eager=True)
-        return ck, obs.get["n"]
-
-    frontier, n = _materialize(known)
+    frontier, m = materialize(known, count)
     known = frontier
     for d in range(1, max_depth + 1):
-        if n == 0:
+        if m["n"] == 0:
             break
         nxt = (frontier.join(e0, frontier["url"] == e0["_src"])
                .select(F.col("_dst").alias("url")).distinct()
                .join(known, "url", "left_anti")
                .withColumn("depth", F.lit(d)))
-        frontier, n = _materialize(nxt)
-        if n:
+        frontier, m = materialize(nxt, count)
+        if m["n"]:
             known = known.union(frontier)
     return known
 
@@ -626,16 +600,16 @@ def resolve_chains(edges: DataFrame, src_col: str = "src",
     page-cardinality) keyed reach-vs-source, with only the PENDING
     rows probing (1-hop chains dominate real redirect tables, so the
     probe side shrinks geometrically after round 1; settled rows stay
-    join targets and union back unchanged), materialized with
-    localCheckpoint so the iterated lineage stays O(1) per round, with
-    the pending count observed on the SAME action (one job per round —
-    the connected_components discipline) for early exit. A hot
+    join targets and union back unchanged), checkpointed by
+    ``materialize`` (reliable when the session has a checkpoint
+    directory, executor-local otherwise) so the iterated lineage stays
+    O(1) per round, with the pending count observed on the SAME action
+    (one Spark action per round — the connected_components discipline)
+    for early exit. A hot
     terminal (millions of chains converging on one homepage) skews the
     probe side of the join; AQE's skew-join split handles it because
     the build side key (source url) is unique."""
     import math
-
-    from pyspark.sql import Observation
 
     cur = (
         edges.select(F.col(src_col).cast("string").alias("u"),
@@ -646,20 +620,13 @@ def resolve_chains(edges: DataFrame, src_col: str = "src",
                 F.lit(False).alias("done"))
     )
 
-    def _materialize(df: DataFrame) -> tuple[DataFrame, int]:
-        obs = Observation()
-        ck = df.observe(
-            obs,
-            F.coalesce(
-                F.sum(F.when(~F.col("done"), 1).otherwise(0)), F.lit(0)
-            ).alias("pending"),
-        ).localCheckpoint(eager=True)
-        return ck, obs.get["pending"]
-
-    cur, pending = _materialize(cur)
+    pending = F.coalesce(
+        F.sum(F.when(~F.col("done"), 1).otherwise(0)), F.lit(0)
+    ).alias("pending")
+    cur, m = materialize(cur, pending)
     rounds = max(1, math.ceil(math.log2(max(2, int(max_hops)))) + 1)
     for _ in range(rounds):
-        if not pending:
+        if not m["pending"]:
             break
         j = cur.select(F.col("u").alias("_ju"),
                        F.col("reach").alias("_jreach"),
@@ -682,7 +649,7 @@ def resolve_chains(edges: DataFrame, src_col: str = "src",
             )
             .unionByName(cur.filter(F.col("done")))
         )
-        cur, pending = _materialize(nxt)
+        cur, m = materialize(nxt, pending)
     ok = F.col("done") & (F.col("hops") <= F.lit(int(max_hops)))
     return cur.select(
         F.col("u").alias("url"),
