@@ -7,11 +7,12 @@ Usage: python scripts/check_query_oracle.py wat_head [more...]
 """
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 SF = "/root/testdata/sf0.01"
 TABLES = ("region nation customer supplier part orders lineitem events "

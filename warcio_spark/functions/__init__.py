@@ -7,7 +7,7 @@ Everything here is a drop-in for ``pyspark.sql.functions`` style usage:
     df.select(WF.header_get("http_headers", "content-type"))
 
 JVM expressions (whole-stage codegen, no Python):
-    header_get, statuscode, fix_target_uri, url_hash64, record_census...
+    header_get, statuscode, fix_target_uri, surt_key, strip_tracking_params...
 pandas UDFs (Arrow batch transfer, per-cell kernels):
     sha1_b32, extract_content, decode_text, canonicalize_url, url_host...
 """
@@ -55,18 +55,6 @@ def fix_target_uri(url) -> Column:
     pure Catalyst expressions (stays in whole-stage codegen)."""
     u = F.regexp_replace(_c(url), r"^<(.*)>$", r"$1")
     return F.replace(u, F.lit(" "), F.lit("%20"))
-
-
-def url_hash64(url_canon) -> Column:
-    """64-bit seen-set key: xxhash64 of the canonical url. (F.hash is
-    Murmur3_x86_32 — 32 bits collides at 10^10 keys; xxhash64 is the
-    built-in 64-bit hash.)"""
-    return F.xxhash64(_c(url_canon))
-
-
-def url_hash32(url_canon) -> Column:
-    """Murmur3_x86_32 of the canonical url (Spark's built-in hash)."""
-    return F.hash(_c(url_canon))
 
 
 def header_filter_out(headers, *names) -> Column:
@@ -123,21 +111,6 @@ def sha1_b32(data: pd.Series) -> pd.Series:
     return _map_series(data, lambda b: _digests.digest_b32(bytes(b)))
 
 
-@F.pandas_udf(T.BooleanType())
-def digest_matches(data: pd.Series, claimed: pd.Series) -> pd.Series:
-    """RFC-3548-normalized digest verify
-    (warcio/digestverifyingreader.py:111-158)."""
-
-    def check(row):
-        b, c = row
-        if b is None or c is None:
-            return None
-        ok, _ = _digests.verify_payload(bytes(b), c)
-        return ok
-
-    return pd.Series(map(check, zip(data, claimed)), dtype="object")
-
-
 @F.pandas_udf(T.BinaryType())
 def extract_content(payload: pd.Series, content_encoding: pd.Series,
                     transfer_encoding: pd.Series) -> pd.Series:
@@ -156,39 +129,45 @@ def extract_content(payload: pd.Series, content_encoding: pd.Series,
     )
 
 
-@F.pandas_udf(T.StringType())
-def extract_http_text(html: pd.Series, url: pd.Series) -> pd.Series:
-    """Full response-payload text path: parse the HTTP status+headers out of
-    the raw payload (loader gating semantics: only http:/https: urls,
-    case-sensitive, warcio/recordloader.py:59,183-185), de-chunk/decode the
-    body per Transfer-/Content-Encoding, decode with the utf-8/iso-8859-1
-    fallback — the byte-identical `html -> text` derivation of the pages
-    table (BASELINE input_hint)."""
+def _http_response_row(html, url):
+    """(status, location, text) of one raw HTTP response: parse the
+    status+headers block out of the payload (loader gating semantics: only
+    http:/https: urls, case-sensitive, warcio/recordloader.py:59,183-185),
+    de-chunk/decode the body per Transfer-/Content-Encoding and decode it
+    with the utf-8/iso-8859-1 fallback. A non-http(s) url or a missing
+    header block gives NULL status/location and the raw-block text."""
     from warcio_spark.kernels.parse import _Cursor, _parse_status_headers, header_get
 
-    def run(row):
-        b, u = row
-        if b is None:
-            return None
-        body = bytes(b)
-        if not (u or "").startswith(("http:", "https:")):
-            return _textcodec.decode_fallback(body)
-        cur = _Cursor(body)
-        try:
-            block = _parse_status_headers(cur, None, (), False)
-        except EOFError:
-            return _textcodec.decode_fallback(body)
-        if not block["statusline"] and not block["headers"]:
-            return _textcodec.decode_fallback(body[cur.pos:])
-        payload = body[cur.pos:]
-        content = _payload.extract_content(
-            payload,
-            header_get(block["headers"], "content-encoding"),
-            header_get(block["headers"], "transfer-encoding"),
-        )
-        return _textcodec.decode_fallback(content)
+    if html is None:
+        return (None, None, None)
+    body = bytes(html)
+    if not (url or "").startswith(("http:", "https:")):
+        return (None, None, _textcodec.decode_fallback(body))
+    cur = _Cursor(body)
+    try:
+        block = _parse_status_headers(cur, None, (), False)
+    except EOFError:
+        return (None, None, _textcodec.decode_fallback(body))
+    if not block["statusline"] and not block["headers"]:
+        return (None, None, _textcodec.decode_fallback(body[cur.pos:]))
+    first = block["statusline"].split(" ", 1)[0]
+    status = int(first) if first.isdigit() else None
+    content = _payload.extract_content(
+        body[cur.pos:],
+        header_get(block["headers"], "content-encoding"),
+        header_get(block["headers"], "transfer-encoding"),
+    )
+    return (status, header_get(block["headers"], "location"),
+            _textcodec.decode_fallback(content))
 
-    return pd.Series(map(run, zip(html, url)), dtype="object")
+
+@F.pandas_udf(T.StringType())
+def extract_http_text(html: pd.Series, url: pd.Series) -> pd.Series:
+    """Full response-payload text path (``_http_response_row``) — the
+    byte-identical `html -> text` derivation of the pages table
+    (BASELINE input_hint)."""
+    return pd.Series([_http_response_row(b, u)[2] for b, u in zip(html, url)],
+                     dtype="object")
 
 
 _HTTP_META_TYPE = T.StructType(
@@ -204,42 +183,8 @@ _HTTP_META_TYPE = T.StructType(
 def parse_http_response(html: pd.Series, url: pd.Series) -> pd.DataFrame:
     """extract_http_text plus the response metadata a crawler acts on —
     status code and Location header — in the SAME single Arrow hop (never
-    decode the payload twice to learn its status). Non-http(s) urls get
-    NULL status/location and the raw-block fallback text, mirroring the
-    loader's case-sensitive scheme gate."""
-    from warcio_spark.kernels.parse import (
-        _Cursor,
-        _parse_status_headers,
-        header_get,
-    )
-
-    def run(row):
-        b, u = row
-        if b is None:
-            return (None, None, None)
-        body = bytes(b)
-        if not (u or "").startswith(("http:", "https:")):
-            return (None, None, _textcodec.decode_fallback(body))
-        cur = _Cursor(body)
-        try:
-            block = _parse_status_headers(cur, None, (), False)
-        except EOFError:
-            return (None, None, _textcodec.decode_fallback(body))
-        if not block["statusline"] and not block["headers"]:
-            return (None, None, _textcodec.decode_fallback(body[cur.pos:]))
-        status = None
-        first = block["statusline"].split(" ", 1)[0]
-        if first.isdigit():
-            status = int(first)
-        location = header_get(block["headers"], "location")
-        content = _payload.extract_content(
-            body[cur.pos:],
-            header_get(block["headers"], "content-encoding"),
-            header_get(block["headers"], "transfer-encoding"),
-        )
-        return (status, location, _textcodec.decode_fallback(content))
-
-    out = [run(r) for r in zip(html, url)]
+    decode the payload twice to learn its status)."""
+    out = [_http_response_row(b, u) for b, u in zip(html, url)]
     return pd.DataFrame(out, columns=["status", "location", "text"])
 
 

@@ -3,9 +3,10 @@
 This is the batch re-expression of the reference's pull pipeline
 (warcio/archiveiterator.py:102-140 + warcio/recordloader.py:72-156):
 byte source -> gzip-member split -> record-boundary split -> header parse ->
-length limit -> digest verify -> payload decode. It runs inside Arrow-batched
-pandas UDFs on Spark executors (one call per WARC file), and standalone in
-unit tests where its output is compared field-by-field against warcio itself.
+length limit -> digest verify -> payload decode. It runs inside the
+mapInArrow task of sources/warc.py on Spark executors (one call per byte
+extent), and standalone in unit tests where its output is compared
+field-by-field against warcio itself.
 
 Semantics studied from the reference (path:line cited per function), written
 fresh against flat byte cursors instead of stream wrappers.
@@ -377,10 +378,13 @@ def _check_digests(rec_type, rec_headers, body, payload, mode,
 def _parse_one(cur: _Cursor, statusline_bytes=None, known_format=None,
                arc2warc=False, parse_http=True, verify_http=False,
                check_digests=False, filename="", offset=0,
-               ensure_http_headers=False):
+               ensure_http_headers=False, decode_content=True):
     """Parse one record starting at the cursor. Returns a record dict.
 
     Mirrors warcio/recordloader.py:72-156 (parse_record_stream).
+    ``decode_content=False`` leaves ``content`` None and skips the
+    de-chunk/decompress unless digest verification needs to know whether
+    the decode drains the body (the reference's lazy ``content_stream()``).
     """
     fmt = None
     rec_headers = None
@@ -494,14 +498,15 @@ def _parse_one(cur: _Cursor, statusline_bytes=None, known_format=None,
         if length is not None and length >= 0:
             http_headers.append(("Content-Length", str(length)))
 
-    if http_headers is not None:
+    content, raw_consumed = payload, True
+    if http_headers is not None and (decode_content or check_digests):
         content, raw_consumed = extract_content_ex(
             payload,
             header_get(http_headers, "content-encoding"),
             header_get(http_headers, "transfer-encoding"),
         )
-    else:
-        content, raw_consumed = payload, True
+    if not decode_content:
+        content = None
 
     digest_ok, digest_problems = (None, [])
     if check_digests and fmt == "warc" and length is not None:
@@ -571,18 +576,20 @@ def _consume_blanklines(cur: _Cursor):
 def parse_warc_bytes(data: bytes, filename: str = "", known_format=None,
                      arc2warc=False, parse_http=True, verify_http=False,
                      check_digests=False, start_offset=0, max_records=None,
-                     ensure_http_headers=False):
+                     ensure_http_headers=False, decode_content=True):
     """Parse a whole WARC/ARC file (gzip-member or plain) into record dicts.
 
     Returns {"records": [...], "err_count": int, "error": str|None}. Records
     carry member (offset, rec_length) matching the reference's member_info
     (warcio/archiveiterator.py:209-239). A file-level error (invalid gzip,
     unknown format) stops the parse; records before it are kept — mirroring
-    the iterator which yields until it raises.
+    the iterator which yields until it raises. ``decode_content=False``
+    (a headers-only read) leaves every ``content`` None, see _parse_one.
 
-    Scale note: one call per file (Common-Crawl WARCs are ~1 GB), executed
-    per-row inside mapInPandas; the gzip-member property keeps re-splitting
-    possible for an offset-range source later.
+    Scale note: one call per byte extent (a whole file, a split range or
+    one index entry), executed inside the mapInArrow task of
+    sources/warc.py; the gzip-member property is what makes the ranged
+    extents possible.
     """
     records = []
     err_count = 0
@@ -606,6 +613,7 @@ def parse_warc_bytes(data: bytes, filename: str = "", known_format=None,
                         cur, None, pin_format, arc2warc, parse_http,
                         verify_http, check_digests, filename,
                         start_offset + member_off, ensure_http_headers,
+                        decode_content,
                     )
                 except EOFError:
                     break
@@ -636,7 +644,7 @@ def parse_warc_bytes(data: bytes, filename: str = "", known_format=None,
                 rec = _parse_one(
                     cur, next_line, pin_format, arc2warc, parse_http,
                     verify_http, check_digests, filename, rec_start,
-                    ensure_http_headers,
+                    ensure_http_headers, decode_content,
                 )
             except EOFError:
                 break

@@ -7,7 +7,8 @@ Five strategies, cheapest-first, all shuffle-conscious:
 - minhash_lsh_pairs    MinHash signatures + LSH banding: near-dup candidates
                        found with b small shuffles on band buckets instead of
                        an O(n^2) cross join — the 100 TB path
-- simhash              64-bit SimHash per doc + hamming-ball bucketing
+- simhash              64-bit SimHash per doc (simhash_deterministic) +
+                       hamming-ball bucketing
 - embedding_near_dup   cosine-over-threshold pairs via LSH-ish bucketing
 
 The revisit-record emit of the reference (same payload digest => revisit,
@@ -43,20 +44,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text",
             F.min(id_col).alias("keep_id"),
         )
         .filter(F.col("n_dups") > 1)
-    )
-
-
-def exact_dedup_keep_first(df: DataFrame, text_col: str = "text",
-                           order_col: str = "doc_id") -> DataFrame:
-    """Keep the first doc per digest — windowed, not distinct, so the kept
-    row is deterministic."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(order_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
     )
 
 
@@ -514,34 +501,6 @@ def minhash_dedup(df: DataFrame, threshold: float = 0.8, id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-
-
-@F.pandas_udf(T.LongType())
-def _simhash64(token_arrays: pd.Series) -> pd.Series:
-    """64-bit SimHash over token arrays (numpy-vectorized bit voting)."""
-
-    def sim(toks) -> int:
-        if toks is None or len(toks) == 0:
-            return 0
-        hashes = np.array(
-            [hash(t) & 0xFFFFFFFFFFFFFFFF for t in toks], dtype=np.uint64
-        )
-        bits = ((hashes[:, None] >> np.arange(64, dtype=np.uint64)) & 1).astype(
-            np.int64
-        )
-        votes = (2 * bits - 1).sum(axis=0)
-        out = np.uint64(0)
-        for b in np.nonzero(votes > 0)[0]:
-            out |= np.uint64(1) << np.uint64(b)
-        return int(out.astype(np.int64))
-
-    return token_arrays.map(sim)
-
-
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Note: python hash() of str is salted per-process — use the
-    deterministic JVM variant below for cross-run stability."""
-    return df.select(F.col(id_col), _simhash64(tokens(text_col)).alias("simhash"))
 
 
 @F.pandas_udf(T.LongType())

@@ -288,7 +288,12 @@ def materialize(df: DataFrame, *metrics: Column,
     round. The checkpoint is reliable when the session's SparkContext has
     a checkpoint directory (``sparkContext.setCheckpointDir`` — the
     deployment setting on a cluster, which survives executor loss) and
-    executor-local otherwise (fast, not fault-tolerant).
+    executor-local otherwise (fast, not fault-tolerant). Spark deletes a
+    reliable checkpoint's files only with
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``, set when the
+    SparkContext starts: ``session.get_spark`` sets it, and a session
+    built elsewhere needs the same setting or keeps every round's files
+    for the life of the application.
 
     ``lazy=True`` (no metrics) runs no job: an executor-local checkpoint
     is filled by the first action that reads ``df``. A reliable

@@ -14,6 +14,10 @@ def get_spark(app_name: str = "warcio_spark", cpus: str | int | None = None,
 
     On a real cluster replace master/memory with spark-submit settings; the
     SQL confs (AQE, UTC, arrow batching, runtime bloom filters) carry over.
+    ``cleanCheckpoints`` lets the context cleaner delete a reliable
+    checkpoint's files once its RDD is garbage-collected on the driver
+    (the iterative graph operators write one per round when a checkpoint
+    dir is set); it is read when the SparkContext starts.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "*"))
     builder = (
@@ -29,6 +33,7 @@ def get_spark(app_name: str = "warcio_spark", cpus: str | int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", memory or os.environ.get("SPARK_GRAFT_MEM", "32g"))
         .config("spark.ui.enabled", "false")
     )

@@ -1,16 +1,25 @@
-"""WARC/ARC file source: .warc(.gz)/.arc(.gz) files -> warc_records DataFrame.
+"""WARC/ARC archives -> the warc_records DataFrame, through one extent reader.
 
-Spark-first design (SURVEY.md §2.1 S1-S6):
-- ``spark.read.format("binaryFile")`` lists + reads files distributed; one
-  task per file (Common-Crawl WARCs are ~1 GB — the file is the natural
-  split unit, and per-record gzip members keep finer splitting possible).
-- a ``mapInArrow`` stage runs the parse kernel per file and emits one row
-  per record with member offset/length, building pyarrow RecordBatches
-  directly (no pandas detour) — after this hop everything is columnar and
-  all further queries are pure DataFrame ops.
-- at 100 TB: ~100k files fan out over executors; no shuffle is involved in
-  ingest, and the natural next step is writing the records table
-  partitioned by crawl/filename prefix so downstream scans prune.
+Every read is a frame of byte extents ``(path, start, end)`` fed to one
+``mapInArrow`` task body (``_read_extents``): it reads ``[start, end +
+overlap)`` through one opener, optionally seeks to the first gzip member,
+runs the parse kernel (``kernels/parse.py:parse_warc_bytes``), keeps the
+records that start before ``end`` with absolute file offsets, and builds
+pyarrow RecordBatches directly (no pandas detour) — after this one hop
+everything is columnar and further queries are pure DataFrame ops. Each
+record carries the parse error count and error of the extent it came from.
+
+The public readers differ only in the extents they build:
+
+- ``read_warc``: whole files from the ``binaryFile`` listing (metadata
+  only for local files; Hadoop schemes ship the file bytes in the frame);
+- ``read_warc_ranges``: fixed-size splits of ONE huge ``.warc.gz``, with
+  an overlap and a seek to the first member of each split;
+- ``read_warc_entries``: the member extents a capture index points at.
+
+At 100 TB: ~100k files fan out over executors, only the small extent
+frame is ever shuffled (never archive bytes), and per-record gzip members
+keep every extent independently parseable.
 """
 
 from __future__ import annotations
@@ -21,6 +30,10 @@ from pyspark.sql import functions as F
 from warcio_spark.kernels.chrono import iso_to_datetime, ts14_to_datetime
 from warcio_spark.kernels.parse import parse_warc_bytes
 from warcio_spark.schema import WARC_RECORDS_SCHEMA
+
+#: projected payload+content bytes per output batch — keeps a batch's binary
+#: columns far below arrow's int32 offset limit even for 1 GB files
+_BATCH_BYTES = 256 << 20
 
 
 def _parse_warc_date(raw_date):
@@ -36,72 +49,121 @@ def _parse_warc_date(raw_date):
         return None
 
 
-def _arrow_schema():
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(WARC_RECORDS_SCHEMA)
-
-
-def _records_to_batches(result, include_payload, include_content,
-                        arrow_schema, max_bytes=256 << 20):
-    """pyarrow RecordBatches straight from the parse result — the ingest
-    hot path. Building arrow arrays directly (mapInArrow) skips the
-    pandas-object-Series detour of mapInPandas: one columnar
-    materialization instead of two. Chunked so a batch's binary columns
-    stay far below arrow's int32 offset limit even for 1 GB files."""
+def _records_batch(recs, arrow_schema):
+    """One pyarrow RecordBatch straight from record dicts whose keys are
+    the schema's column names (warc_ts and the header lists converted)."""
     import pyarrow as pa
 
-    recs = result["records"]
-    if not recs:
-        return
-    chunks, cur, cur_bytes = [], [], 0
-    for r in recs:
-        sz = (len(r["payload"]) if (include_payload and r["payload"]) else 0) + (
-            len(r["content"]) if (include_content and r["content"]) else 0
-        )
-        cur.append(r)
-        cur_bytes += sz
-        if cur_bytes >= max_bytes:
-            chunks.append(cur)
-            cur, cur_bytes = [], 0
-    if cur:
-        chunks.append(cur)
+    def column(name):
+        if name == "warc_ts":
+            return [_parse_warc_date(r.get("warc_date")) for r in recs]
+        if name == "rec_headers":
+            return [[{"name": n, "value": v} for n, v in (r[name] or [])]
+                    for r in recs]
+        if name == "http_headers":
+            return [None if r[name] is None
+                    else [{"name": n, "value": v} for n, v in r[name]]
+                    for r in recs]
+        return [r[name] for r in recs]
 
-    types = {f.name: f.type for f in arrow_schema}
-    for chunk in chunks:
-        n = len(chunk)
-        cols = {
-            "record_id": [r["record_id"] for r in chunk],
-            "rec_type": [r["rec_type"] for r in chunk],
-            "format": [r["format"] for r in chunk],
-            "url": [r["url"] for r in chunk],
-            "warc_ts": [_parse_warc_date(r.get("warc_date")) for r in chunk],
-            "rec_headers": [
-                [{"name": h[0], "value": h[1]} for h in (r["rec_headers"] or [])]
-                for r in chunk
-            ],
-            "http_protocol": [r["http_protocol"] for r in chunk],
-            "http_statusline": [r["http_statusline"] for r in chunk],
-            "http_headers": [
-                None
-                if r["http_headers"] is None
-                else [{"name": h[0], "value": h[1]} for h in r["http_headers"]]
-                for r in chunk
-            ],
-            "content_type": [r["content_type"] for r in chunk],
-            "length": [r["length"] for r in chunk],
-            "payload_length": [r["payload_length"] for r in chunk],
-            "payload": [r["payload"] for r in chunk] if include_payload else [None] * n,
-            "content": [r["content"] for r in chunk] if include_content else [None] * n,
-            "digest_ok": [r["digest_ok"] for r in chunk],
-            "offset": [r["offset"] for r in chunk],
-            "rec_length": [r["rec_length"] for r in chunk],
-            "filename": [r["filename"] for r in chunk],
-            "file_err_count": [result["err_count"]] * n,
-            "file_error": [result["error"]] * n,
-        }
-        arrays = [pa.array(cols[f.name], type=types[f.name]) for f in arrow_schema]
-        yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(column(f.name), type=f.type) for f in arrow_schema],
+        schema=arrow_schema,
+    )
+
+
+def _read_extents(extents: DataFrame, include_payload: bool = True,
+                  include_content: bool = True, overlap_bytes: int = 0,
+                  seek_member: bool = False, **parse_opts) -> DataFrame:
+    """The one task body behind every reader: ``extents`` has long columns
+    ``start``/``end`` and a string ``path`` (plus the file bytes as
+    ``content`` when the caller already holds them — the binaryFile blob
+    path). Per extent:
+
+    1. read ``[start, end + overlap_bytes)`` — local paths through a handle
+       held across consecutive extents of one file, any other scheme
+       through ``_open_ranged``;
+    2. with ``seek_member``, skip to the first gzip member at/after
+       ``start`` (not at offset 0), dropping the extent if none starts
+       before ``end``;
+    3. ``parse_warc_bytes`` (content decoded only when projected);
+    4. keep the records that start before ``end``, offsets made absolute;
+    5. queue them, each with its extent's ``err_count``/``error``, into a
+       pending batch flushed at ``_BATCH_BYTES`` projected bytes, at the
+       end of an extent once it holds a row per extent of the input batch,
+       and at the end of every input batch. Extents of one record (index
+       entries) thus leave together, while a whole file or split gets its
+       own batch and the JVM consumes it while the next one is parsed.
+
+    ``include_payload/include_content=False`` is the engine's
+    ``no_record_parse``-style pruning (warcio/indexer.py:19): the column
+    is NULL, the content decode is skipped, and no unprojected bytes are
+    held between batches."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(WARC_RECORDS_SCHEMA)
+    has_blobs = "content" in extents.columns
+
+    def run(batches):
+        held_path, held = None, None
+
+        def fetch(path, start, length):
+            nonlocal held_path, held
+            scheme, rest = _split_scheme(path)
+            if scheme not in ("", "file"):
+                return _open_ranged(path, start, length)
+            local = _local_path(scheme, rest, path)
+            if local != held_path:
+                if held is not None:
+                    held.close()
+                held, held_path = open(local, "rb"), local
+            held.seek(start)
+            return held.read(length)
+
+        try:
+            for batch in batches:
+                paths = batch.column("path").to_pylist()
+                starts = batch.column("start").to_pylist()
+                ends = batch.column("end").to_pylist()
+                blobs = batch.column("content") if has_blobs else None
+                pend, pend_bytes = [], 0
+                for i, path in enumerate(paths):
+                    start, end = starts[i], ends[i]
+                    data = (blobs[i].as_py() if blobs is not None
+                            else fetch(path, start, end - start + overlap_bytes))
+                    if seek_member and start > 0:
+                        skip = _find_member_boundary(data)
+                        if skip == -1 or start + skip >= end:
+                            continue
+                        data, start = data[skip:], start + skip
+                    result = parse_warc_bytes(
+                        data, filename=path.rsplit("/", 1)[-1],
+                        decode_content=include_content, **parse_opts,
+                    )
+                    for r in result["records"]:
+                        r["offset"] += start
+                        if r["offset"] >= end:
+                            break
+                        if not include_payload:
+                            r["payload"] = None
+                        r["file_err_count"] = result["err_count"]
+                        r["file_error"] = result["error"]
+                        pend.append(r)
+                        pend_bytes += (len(r["payload"] or b"")
+                                       + len(r["content"] or b""))
+                        if pend_bytes >= _BATCH_BYTES:
+                            yield _records_batch(pend, arrow_schema)
+                            pend, pend_bytes = [], 0
+                    if len(pend) >= len(paths):
+                        yield _records_batch(pend, arrow_schema)
+                        pend, pend_bytes = [], 0
+                if pend:
+                    yield _records_batch(pend, arrow_schema)
+        finally:
+            if held is not None:
+                held.close()
+
+    return extents.mapInArrow(run, WARC_RECORDS_SCHEMA)
 
 
 def read_warc(
@@ -116,79 +178,40 @@ def read_warc(
     include_content: bool = True,
     ensure_http_headers: bool = False,
 ) -> DataFrame:
-    """Read WARC/ARC archives into the canonical warc_records DataFrame.
+    """Read WARC/ARC archives into the canonical warc_records DataFrame,
+    one whole-file extent per archive.
 
     ``include_payload/include_content=False`` is the engine's
     ``no_record_parse``-style pruning (warcio/indexer.py:19): indexing jobs
     that only project headers skip materializing body bytes entirely.
 
-    Local files take the python-open fast path: the JVM only LISTS the
-    files (metadata scan), the listing is round-robined across cores, and
-    each python worker opens and reads its files directly — no JVM blob
-    read, no JVM->python Arrow copy of raw file bytes, and task count
-    tracks cores instead of file count (measured +25%/core on the
-    many-small-files ingest bench; at 100 TB it also halves ingest's
-    memory bandwidth). Non-local schemes (hdfs://, s3a://, ...) keep the
-    binaryFile blob path, where Hadoop's filesystem connectors live.
+    Local files: the JVM only LISTS the files (path and length, a metadata
+    scan), the listing is round-robined across cores, and each python
+    worker opens and reads its files directly — no JVM blob read, no
+    JVM->python Arrow copy of raw file bytes, and task count tracks cores
+    instead of file count (measured +25%/core on the many-small-files
+    ingest bench; at 100 TB it also halves ingest's memory bandwidth).
+    Non-local schemes (hdfs://, s3a://, ...) keep the binaryFile blob read,
+    where Hadoop's filesystem connectors live, and feed the blobs through
+    the same extent body.
     """
     path_list = [paths] if isinstance(paths, str) else list(paths)
     local = all(
         "://" not in p or p.startswith("file:") for p in path_list
     )
     files = spark.read.format("binaryFile").load(path_list)
-    arrow_schema = _arrow_schema()
-
-    def parse_blob(blob, path):
-        return parse_warc_bytes(
-            blob,
-            filename=path.rsplit("/", 1)[-1],
-            known_format=known_format,
-            arc2warc=arc2warc,
-            parse_http=parse_http,
-            verify_http=verify_http,
-            check_digests=check_digests,
-            ensure_http_headers=ensure_http_headers,
-        )
-
+    extent = [F.col("path"), F.lit(0).cast("long").alias("start"),
+              F.col("length").alias("end")]
     if local:
-        listing = files.select("path")
-
-        def run_local(batches):
-            from urllib.parse import unquote, urlparse
-
-            for batch in batches:
-                for p in batch.column(0):
-                    uri = p.as_py()
-                    # binaryFile lists absolute, percent-encoded file: URIs
-                    fpath = (
-                        unquote(urlparse(uri).path)
-                        if uri.startswith("file:") else uri
-                    )
-                    with open(fpath, "rb") as f:
-                        data = f.read()
-                    yield from _records_to_batches(
-                        parse_blob(data, fpath), include_payload,
-                        include_content, arrow_schema,
-                    )
-
-        parallelism = spark.sparkContext.defaultParallelism
-        return listing.repartition(parallelism).mapInArrow(
-            run_local, WARC_RECORDS_SCHEMA
-        )
-
-    def run(batches):
-        for batch in batches:
-            paths_col, blobs = batch.column(0), batch.column(1)
-            for i in range(batch.num_rows):
-                result = parse_blob(
-                    blobs[i].as_py(), paths_col[i].as_py()
-                )
-                yield from _records_to_batches(
-                    result, include_payload, include_content, arrow_schema
-                )
-
-    return files.select("path", "content").mapInArrow(
-        run, WARC_RECORDS_SCHEMA
+        extents = files.select(*extent).repartition(
+            spark.sparkContext.defaultParallelism)
+    else:
+        extents = files.select(*extent, F.col("content"))
+    return _read_extents(
+        extents, include_payload=include_payload,
+        include_content=include_content, known_format=known_format,
+        arc2warc=arc2warc, parse_http=parse_http, verify_http=verify_http,
+        check_digests=check_digests, ensure_http_headers=ensure_http_headers,
     )
 
 
@@ -227,6 +250,10 @@ def _find_member_boundary(data: bytes, hint: int = 0) -> int:
 
 def _split_scheme(path: str) -> tuple[str, str]:
     if "://" not in path:
+        # file:/abs/path is how Hadoop (and so the binaryFile listing)
+        # writes a local path: not percent-encoded, no authority
+        if path.startswith("file:/"):
+            return "file", path[len("file:"):]
         return "", path
     scheme, rest = path.split("://", 1)
     return scheme.lower(), rest
@@ -295,8 +322,8 @@ def _warn_range_ignored(path: str) -> None:
 
 
 def _local_path(scheme: str, rest: str, path: str) -> str:
-    """file:// URI (with or without an authority component) or bare path
-    -> local filesystem path."""
+    """file:// URI (with or without an authority component), Hadoop's
+    file:/ form or bare path -> local filesystem path."""
     if scheme != "file":
         return path
     if rest.startswith("/"):
@@ -372,9 +399,10 @@ def read_warc_ranges(
 
     Scale note: this is the path for the "one 100 GB WARC" shape; the
     common Common-Crawl shape (many ~1 GB files) uses read_warc's
-    file-per-task fan-out instead. Tasks read through the scheme-aware
-    ranged opener (_open_ranged): local paths, file:// URIs, http(s)://
-    Range requests, and fsspec-backed object stores when fsspec is present.
+    file-per-task fan-out instead. Tasks read through the extent reader's
+    opener: local paths and file:// URIs directly, http(s):// Range
+    requests and fsspec-backed object stores through ``_open_ranged``.
+    Each record's ``file_err_count``/``file_error`` describe its range.
     """
     size = _path_size(path)
     ranges = [
@@ -382,39 +410,9 @@ def read_warc_ranges(
         for s in range(0, size, split_bytes)
     ]
     rdf = spark.createDataFrame(ranges, "path string, start long, end long")
-    rdf = rdf.repartition(len(ranges))
-
-    include_payload = read_opts.pop("include_payload", True)
-    include_content = read_opts.pop("include_content", True)
-    arrow_schema = _arrow_schema()
-
-    def run(batches):
-        for batch in batches:
-            for row in batch.to_pylist():
-                p, start, end = row["path"], int(row["start"]), int(row["end"])
-                blob = _open_ranged(p, start, (end - start) + overlap_bytes)
-                boundary = 0 if start == 0 else _find_member_boundary(blob)
-                if boundary == -1 or start + boundary >= end:
-                    continue
-                result = parse_warc_bytes(
-                    blob[boundary:],
-                    filename=p.rsplit("/", 1)[-1],
-                    **read_opts,
-                )
-                abs_base = start + boundary
-                owned = [
-                    r for r in result["records"]
-                    if abs_base + r["offset"] < end
-                ]
-                for r in owned:
-                    r["offset"] += abs_base
-                result = {"records": owned, "err_count": result["err_count"],
-                          "error": result["error"]}
-                yield from _records_to_batches(
-                    result, include_payload, include_content, arrow_schema
-                )
-
-    return rdf.mapInArrow(run, WARC_RECORDS_SCHEMA)
+    return _read_extents(rdf.repartition(len(ranges)),
+                         overlap_bytes=overlap_bytes, seek_member=True,
+                         **read_opts)
 
 
 def read_warc_entries(
@@ -434,7 +432,9 @@ def read_warc_entries(
     seeks, reads one member — warcio/archiveiterator.py:209-239 member
     info) distributed over tasks: filter a small index table, fetch
     matching members in parallel, get back the same rows ``read_warc``
-    would have produced for them (absolute offsets preserved).
+    would have produced for them (absolute offsets preserved), except
+    that ``file_err_count``/``file_error`` describe the entry's own extent,
+    not the whole file.
 
     Scale shape: entries are hash-partitioned by path and offset-sorted
     within partitions, so a task opens each local file once and reads
@@ -443,71 +443,24 @@ def read_warc_entries(
     fsspec). The archive bytes touched are O(selected records), not
     O(archive) — the point of having an index at 100 TB.
     """
-    include_payload = read_opts.pop("include_payload", True)
-    include_content = read_opts.pop("include_content", True)
-    arrow_schema = _arrow_schema()
-
     if base is not None:
         path_col = F.concat(F.lit(base.rstrip("/") + "/"), F.col("filename"))
     elif "path" in entries.columns:
         path_col = F.col("path")
     else:
         path_col = F.col("filename")
+    start, length = F.col("offset").cast("long"), F.col("length").cast("long")
     sel = entries.select(
-        path_col.alias("path"),
-        F.col("offset").cast("long").alias("offset"),
-        F.col("length").cast("long").alias("length"),
+        path_col.alias("path"), start.alias("start"),
+        (start + length).alias("end"),
     ).filter(
-        F.col("path").isNotNull()
-        & F.col("offset").isNotNull()
-        & F.col("length").isNotNull()
+        F.col("path").isNotNull() & F.col("end").isNotNull()
     )
     parallelism = spark.sparkContext.defaultParallelism
     sel = sel.repartition(parallelism, "path").sortWithinPartitions(
-        "path", "offset"
+        "path", "start"
     )
-
-    def run(batches):
-        held_path, held = None, None
-
-        def fetch(p, off, ln):
-            nonlocal held_path, held
-            scheme, rest = _split_scheme(p)
-            if scheme in ("", "file"):
-                lp = _local_path(scheme, rest, p)
-                if held_path != lp:
-                    if held is not None:
-                        held.close()
-                    held = open(lp, "rb")
-                    held_path = lp
-                held.seek(off)
-                return held.read(ln)
-            return _open_ranged(p, off, ln)
-
-        try:
-            for batch in batches:
-                pend, pend_err = [], 0
-                for row in batch.to_pylist():
-                    p, off, ln = (row["path"], int(row["offset"]),
-                                  int(row["length"]))
-                    result = parse_warc_bytes(
-                        fetch(p, off, ln),
-                        filename=p.rsplit("/", 1)[-1],
-                        **read_opts,
-                    )
-                    for r in result["records"]:
-                        r["offset"] += off
-                        pend.append(r)
-                    pend_err += result["err_count"]
-                yield from _records_to_batches(
-                    {"records": pend, "err_count": pend_err, "error": None},
-                    include_payload, include_content, arrow_schema,
-                )
-        finally:
-            if held is not None:
-                held.close()
-
-    return sel.mapInArrow(run, WARC_RECORDS_SCHEMA)
+    return _read_extents(sel, **read_opts)
 
 
 def pages_from_records(records: DataFrame, lang_default: str = "",
