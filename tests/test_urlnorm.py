@@ -81,7 +81,9 @@ def test_trailing_bare_query_takes_kernel_path():
 def test_split_union_canonicalization_equals_pudf(spark):
     """with_canonical_url (JVM split-union) must yield exactly the pUDF/
     kernel result for every url — canonical, messy, adversarial, NULL —
-    and must not lose rows (NULL urls take the slow branch)."""
+    and must not lose rows (NULL urls take the slow branch). A url ending
+    in a line terminator is not canonical: '$' would match before it in
+    both the Python and the Java fast-path regex, the kernel strips it."""
     from pyspark.sql import functions as F
 
     from warcio_spark import functions as WF
@@ -89,6 +91,9 @@ def test_split_union_canonicalization_equals_pudf(spark):
     urls = [
         "http://h.com/a/b?q=1",
         "http://h.com/p?",
+        "http://h.com/a\n",
+        "http://h.com/a?q=1\n",
+        "http://h.com/a\r\n",
         "HTTP://Example.COM:80/a/../b?q=1#frag",
         "http://h.com/a b",
         "<http://h.com/x>",
@@ -110,6 +115,10 @@ def test_split_union_canonicalization_equals_pudf(spark):
             for r in df.select("i", WF.canonicalize_url("url").alias("c")).collect()}
     assert len(split) == len(urls)
     assert split == pudf
+    assert split == {i: None if u is None else canonicalize_url(u)
+                     for i, u in enumerate(urls)}
+    assert split[2] == split[4] == "http://h.com/a"
+    assert split[3] == "http://h.com/a?q=1"
 
 
 def test_url_trap_signals_hand_cases(spark):

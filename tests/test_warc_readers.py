@@ -3,7 +3,8 @@
 The corpus is written with ``kernels/build.py``: a multi-member
 ``.warc.gz``, the same records as a plain ``.warc``, and a ``.warc.gz``
 whose last record declares a Content-Length shorter than its block, so one
-non-blank line is left over after it (one parse error, no hard error).
+non-blank line is left over after it (one parse error, no hard error), and
+an empty ``.warc.gz`` (no records, no error).
 ``read_warc`` over the whole corpus is the oracle for the index-driven and
 the ranged reader, and the full read is the oracle for a headers-only read.
 """
@@ -28,6 +29,7 @@ from warcio_spark.sources.warc import read_warc_ranges
 
 DATE = "2024-01-02T03:04:05Z"
 GZ, PLAIN, TRUNC = "multi.warc.gz", "plain.warc", "trunc.warc.gz"
+EMPTY = "empty.warc.gz"
 #: the last line of the truncated record's body, cut off by Content-Length
 CUT = b"this line is past the declared Content-Length"
 
@@ -109,6 +111,7 @@ def corpus(tmp_path_factory):
     (d / PLAIN).write_bytes(serialize_records(recs))
     (d / TRUNC).write_bytes(
         serialize_records(_records(7), gzip=True) + _truncated_member())
+    (d / EMPTY).write_bytes(b"")
     return d
 
 
@@ -183,6 +186,15 @@ def test_ranges_equal_read_warc_for_gzip(spark, corpus, full):
                   key=lambda r: r["offset"])
     assert sorted((r.asDict() for r in got),
                   key=lambda r: r["offset"]) == want
+
+
+def test_ranges_of_empty_file_are_empty(spark, corpus, full):
+    """A 0-byte file has no byte ranges: read_warc_ranges returns an empty
+    frame with the reader's schema, as read_warc returns no row for it."""
+    got = read_warc_ranges(spark, str(corpus / EMPTY), split_bytes=1 << 10)
+    assert got.schema == read_warc(spark, str(corpus / GZ)).schema
+    assert got.collect() == []
+    assert not any(f == EMPTY for f, _ in full)
 
 
 def test_read_warc_keeps_listed_file_names(spark, tmp_path):

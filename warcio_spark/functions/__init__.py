@@ -203,9 +203,11 @@ import re as _re
 # kernel entirely (vectorized regex instead of per-url urlsplit)
 _CANON_FAST_RX = _re.compile(
     r"^https?://[a-z0-9\-]+(\.[a-z0-9\-]+)*/[A-Za-z0-9_\-./~]*"
-    r"(\?[A-Za-z0-9_\-=&.]+)?$"  # >=1 query char: the kernel strips a bare
-    # trailing '?' (urlunsplit), so 'http://h/p?' must take the kernel path
-    # or the two spellings of one url would get different url_hash values
+    r"(\?[A-Za-z0-9_\-=&.]+)?\Z"  # >=1 query char: the kernel strips a
+    # bare trailing '?' (urlunsplit), so 'http://h/p?' must take the kernel
+    # path or the two spellings of one url would get different url_hash
+    # values; \Z, not $: '$' also matches before a final '\n', which the
+    # kernel strips
 )
 
 
@@ -214,7 +216,8 @@ _CANON_FAST_RX = _re.compile(
 # Python at all (see with_canonical_url)
 _CANON_FAST_RX_JAVA = (
     r"^https?://[a-z0-9\-]+(\.[a-z0-9\-]+)*/[A-Za-z0-9_\-./~]*"
-    r"(\?[A-Za-z0-9_\-=&.]+)?$"
+    r"(\?[A-Za-z0-9_\-=&.]+)?\z"  # Java's true end of input (its \Z and $
+    # allow a final line terminator)
 )
 
 

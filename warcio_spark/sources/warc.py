@@ -410,7 +410,8 @@ def read_warc_ranges(
         for s in range(0, size, split_bytes)
     ]
     rdf = spark.createDataFrame(ranges, "path string, start long, end long")
-    return _read_extents(rdf.repartition(len(ranges)),
+    # a 0-byte file has no ranges: one empty partition, an empty frame
+    return _read_extents(rdf.repartition(max(len(ranges), 1)),
                          overlap_bytes=overlap_bytes, seek_member=True,
                          **read_opts)
 
