@@ -119,8 +119,12 @@ def test_schedule_respects_budget_and_politeness(spark):
         assert robots[c["host"]]["allowed"]
 
 
+@pytest.mark.parametrize("shuffle", [1, 16], ids=lambda s: f"shuffle{s}")
 @pytest.mark.parametrize("partitions", [2, 9])
-def test_multi_round_crawl_matches_oracle(spark, partitions, tmp_path):
+def test_multi_round_crawl_matches_oracle(spark, partitions, shuffle,
+                                          tmp_path):
+    """Same fetch log and seen set as the oracle at any input partitioning
+    and any shuffle parallelism (1 vs 16 partitions: N vs 16N)."""
     cands = make_candidates(300)
     robots = make_robots()
 
@@ -133,8 +137,13 @@ def test_multi_round_crawl_matches_oracle(spark, partitions, tmp_path):
         "url string, priority double, seq long",
     ).repartition(partitions)
     state_dir = str(tmp_path / f"crawl_{partitions}")
-    crawlmod.crawl(spark, seeds, robots_df(spark, robots), state_dir,
-                   rounds=3, cfg=CFG)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+    try:
+        crawlmod.crawl(spark, seeds, robots_df(spark, robots), state_dir,
+                       rounds=3, cfg=CFG)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     got = [
         (r.round, r.fetch_order, r.url_canon)
@@ -179,6 +188,13 @@ def test_crawl_resume_is_exact(spark, tmp_path):
     ]
     assert a == b
     assert len({r for r, _, _ in a}) == 4
+    # no compaction yet: every round's scheduled file is a seen delta, its
+    # fetch_round parsed from the file's round=N directory
+    st = crawlmod.RoundState(d_resume)
+    _, deltas = st.read_seen_parts(spark, st.last_round())
+    assert sorted(
+        (r.url_canon, r.fetch_round) for r in deltas.collect()
+    ) == sorted((u, r) for r, _, u in b)
 
 
 def test_mega_host_skew_budget_exact(spark):
@@ -254,7 +270,8 @@ def test_not_seen_is_exact_anti_join(spark):
 def test_crawl_resume_across_compaction_boundary(spark, tmp_path):
     """compact_every=2: resume after a compaction round and after a
     delta-only round both reproduce the straight-through crawl exactly,
-    and the per-round seen write really is delta-sized."""
+    and the seen deltas are the rounds' scheduled files, with fetch_round
+    taken from each file's round directory."""
     import os
 
     cands = make_candidates(300)
@@ -283,13 +300,24 @@ def test_crawl_resume_across_compaction_boundary(spark, tmp_path):
 
     st = crawlmod.RoundState(d_full)
     last = st.last_round()
-    # full snapshots only on compaction rounds; deltas everywhere
+    # full snapshots only on compaction rounds; no separate delta table
     for n in st.committed_rounds():
         rd = st.round_dir(n)
-        assert os.path.isdir(os.path.join(rd, "seen_delta"))
+        assert not os.path.exists(os.path.join(rd, "seen_delta"))
         assert os.path.isdir(os.path.join(rd, "seen")) == (n % 2 == 0)
+        # lineage (from the Parquet footers) sums to the round's fetches
         m = st.read_metrics(n)
-        assert m["n_seen_delta"] == m["n_scheduled"]
+        rows = sum(p["rows"] for p in m["scheduled_partition_lineage"])
+        assert rows == m["n_scheduled"] == sum(1 for r, _, _ in a if r == n) > 0
+        # the deltas are exactly the fetches after the base snapshot
+        base_round = n - n % 2
+        _, deltas = st.read_seen_parts(spark, n)
+        want = sorted((u, r) for r, _, u in a if base_round < r <= n)
+        got = sorted(
+            (r.url_canon, r.fetch_round)
+            for r in deltas.select("url_canon", "fetch_round").collect()
+        ) if deltas is not None else []
+        assert got == want
     # merged view has no duplicates and matches the tracked total
     seen = st.read_seen(spark, last)
     assert seen.count() == seen.select("url_hash").distinct().count()

@@ -67,29 +67,6 @@ def header_filter_out(headers, *names) -> Column:
     )
 
 
-def assemble_url(verb, request_target, host_header, default_scheme="http") -> Column:
-    """F11: absolute URL from request verb/path + Host header, mirroring the
-    capture contract (warcio/capture_http.py:203-238): CONNECT targets and
-    absolute-form targets pass through; origin-form targets get
-    scheme://host prepended."""
-    v, t, h = _c(verb), _c(request_target), _c(host_header)
-    return (
-        F.when(v == "CONNECT", F.concat(F.lit("https://"), t))
-        .when(t.rlike("^[a-zA-Z][a-zA-Z0-9+.-]*://"), t)
-        .otherwise(F.concat(F.lit(default_scheme + "://"), h, t))
-    )
-
-
-def limit_payload(payload, max_bytes, outer_limit=None) -> Column:
-    """W5: LimitReader as an expression — byte-cap a binary payload; nested
-    limits take the min (warcio/limitreader.py:59-62)."""
-    limit = F.lit(max_bytes) if not isinstance(max_bytes, Column) else max_bytes
-    if outer_limit is not None:
-        outer = F.lit(outer_limit) if not isinstance(outer_limit, Column) else outer_limit
-        limit = F.least(limit, outer)
-    return F.substring(_c(payload), 1, limit)
-
-
 def iso_warc_date(ts, use_micros: bool = False) -> Column:
     """timestamp -> WARC-Date string (warcio/timeutils.py:105-127)."""
     fmt = "yyyy-MM-dd'T'HH:mm:ss" + (".SSSSSS" if use_micros else "") + "'Z'"
@@ -448,36 +425,6 @@ def ts14_to_iso(ts14: pd.Series) -> pd.Series:
     """Lenient 14-digit timestamp -> ISO (pad-up + clamp,
     warcio/timeutils.py:199-354)."""
     return _map_series(ts14, _chrono.ts14_to_iso)
-
-
-@F.pandas_udf(T.TimestampType())
-def ts14_to_timestamp(ts14: pd.Series) -> pd.Series:
-    return pd.Series(
-        [_chrono.ts14_to_datetime(v) if v is not None else None for v in ts14],
-        dtype="datetime64[us]",
-    )
-
-
-@F.pandas_udf(T.StringType())
-def http_date_to_iso(http_date: pd.Series) -> pd.Series:
-    """RFC-2822 GMT date -> ISO (warcio/timeutils.py:74-102)."""
-    return _map_series(
-        http_date,
-        lambda s: _chrono.datetime_to_iso(_chrono.http_date_to_datetime(s)),
-    )
-
-
-@F.pandas_udf(T.BinaryType())
-def gzip_member(data: pd.Series) -> pd.Series:
-    """Per-record gzip member, level 9 (warcio/warcwriter.py:113-127) —
-    keeps serialized WARC output splittable."""
-    return _map_series(data, lambda b: _payload.gzip_member_compress(bytes(b)))
-
-
-@F.pandas_udf(T.BinaryType())
-def gunzip_member(data: pd.Series) -> pd.Series:
-    """First-member gzip decode with not-compressed passthrough."""
-    return _map_series(data, lambda b: _payload.decode_content(bytes(b), "gzip"))
 
 
 def surt_key(url) -> Column:

@@ -22,11 +22,6 @@ def digest_report(records: DataFrame) -> DataFrame:
     )
 
 
-def failed_records(records: DataFrame) -> DataFrame:
-    """Records failing digest verification (the checker's per-record list)."""
-    return records.filter(F.col("digest_ok") == False)  # noqa: E712
-
-
 def exit_value(records: DataFrame) -> int:
     """The CLI exit fold: 1 if any record failed or any file errored."""
     row = records.agg(

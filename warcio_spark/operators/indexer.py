@@ -59,10 +59,6 @@ def index_ndjson(records: DataFrame, fields=None) -> DataFrame:
     return proj.select(line.alias("line"))
 
 
-def write_index(records: DataFrame, path: str, fields=None) -> None:
-    index_ndjson(records, fields).write.mode("overwrite").text(path)
-
-
 def index_cdxj(records: DataFrame) -> DataFrame:
     """CDXJ index lines — ``urlkey timestamp {json}`` — the
     pywb/OpenWayback capture-index format the reference's ecosystem

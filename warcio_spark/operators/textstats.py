@@ -189,19 +189,6 @@ def term_doc_freq(
     )
 
 
-def doc_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Projection with the full stat battery (the indexer of text land)."""
-    return df.select(
-        "*",
-        token_count(text_col).alias("n_tokens"),
-        char_count(text_col).alias("n_chars_computed"),
-        punct_ratio(text_col).alias("punct_ratio"),
-        stopword_ratio(text_col).alias("stopword_ratio"),
-        avg_token_len(text_col).alias("avg_token_len"),
-        quality_score(text_col).alias("quality"),
-    )
-
-
 @F.pandas_udf(T.LongType())
 def rolling_fingerprint(text: pd.Series) -> pd.Series:
     """Polynomial rolling-hash document fingerprint (Rabin-Karp style,

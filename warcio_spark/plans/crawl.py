@@ -7,26 +7,31 @@ a thin shim (``RoundState``) with the Iceberg semantics the north rule needs
 the last committed round. Swap the shim for an Iceberg catalog on a real
 cluster; the plan shapes don't change.
 
-Per-round metrics include per-partition lineage (spark_partition_id row
-counts of the scheduled output) — the observability hook BASELINE.json:14
-asks for.
+A round writes what it fetched once: the ``scheduled`` table is the round's
+driving action, its files are the round's seen delta, and its Parquet
+footers give the per-partition lineage (rows per writing task) — the
+observability hook BASELINE.json:14 asks for, at no extra Spark job.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from warcio_spark.plans.frontier import (
     PolitenessConfig,
     fetch_order,
     prepare_candidates,
+    sample_order_boundaries,
     schedule_round,
+    with_frontier_keys,
 )
 
 FRONTIER_COLS = ["url", "priority", "seq"]
@@ -37,6 +42,9 @@ FRONTIER_KEYED_COLS = ["url", "priority", "seq", "url_canon", "url_hash", "host"
 # (recrawl_ttl) can age urls out and re-enqueue them deterministically
 SEEN_COLS = ["url_hash", "url_canon", "fetch_round", "seq"]
 SEEN_SCHEMA = "url_hash long, url_canon string, fetch_round int, seq long"
+# a round's seen delta is its scheduled table, fetch_round its round=N dir
+DELTA_SCHEMA = "url_hash long, url_canon string, seq long"
+_DELTA_ROUND_RX = r"/round=(\d+)/scheduled/[^/]+$"
 RECRAWL_SEQ_BASE = 1 << 50  # mirrored in reference_crawler.py
 
 
@@ -169,18 +177,20 @@ def release_lease(state_dir: str, token: str) -> None:
 @dataclass
 class RoundState:
     """Parquet-snapshot shim:
-    state_dir/round=N/{scheduled, seen_delta, frontier[, seen]} +
-    metrics.json, committed by writing _COMMIT last.
+    state_dir/round=N/{scheduled, frontier[, seen]} + metrics.json,
+    committed by writing _COMMIT last.
 
-    The seen-set is APPEND-ONLY: each round commits only its newly
-    scheduled urls as ``seen_delta`` (disjoint from all prior seen WHEN
-    recrawl is off; with ``recrawl_ttl`` a refetched url appears once per
-    fetch and readers aggregate by url — the per-round write is
+    The seen-set is APPEND-ONLY: a round's seen delta is its own
+    ``scheduled`` table, read back as (url_hash, url_canon, seq) with
+    fetch_round taken from the round=N path (disjoint from all prior seen
+    WHEN recrawl is off; with ``recrawl_ttl`` a refetched url appears once
+    per fetch and readers aggregate by url — the per-round write is
     proportional to this round's fetches either way, never to the whole
     10^10-key history). Every ``compact_every`` rounds a full ``seen``
     snapshot is rewritten — folding refetch history to one row per url —
     so the merged read never unions more than compact_every delta files:
-    the shim-level equivalent of Iceberg MERGE + compaction.
+    the shim-level equivalent of Iceberg MERGE + compaction. Expiring a
+    round from the delta window is whole-round file pruning.
 
     Sizing ``compact_every`` (measured, BENCH/BASELINE.md round-5
     recrawl stress): the incremental due-set read costs
@@ -213,12 +223,31 @@ class RoundState:
         rounds = self.committed_rounds()
         return rounds[-1] if rounds else 0
 
-    def write_round(self, spark: SparkSession, n: int, scheduled: DataFrame,
-                    seen_delta: DataFrame, frontier: DataFrame, metrics: dict,
-                    seen_full: DataFrame | None = None):
+    def write_scheduled(self, n: int, scheduled: DataFrame) -> list:
+        """Write round n's scheduled table — the round's driving action —
+        and return its per-partition lineage ``[{pid, rows}]`` from the
+        Parquet footers: ``part-NNNNN`` is the writing task's partition
+        id, and zero-row files (Spark writes one for an empty result) are
+        skipped, as a ``groupBy(spark_partition_id)`` would."""
+        import pyarrow.parquet as pq
+
+        d = os.path.join(self.round_dir(n), "scheduled")
+        scheduled.write.mode("overwrite").parquet(d)
+        rows: dict = {}
+        for name in os.listdir(d):
+            m = re.match(r"part-(\d+)-", name)
+            if m:
+                pid = int(m.group(1))
+                rows[pid] = rows.get(pid, 0) + pq.read_metadata(
+                    os.path.join(d, name)
+                ).num_rows
+        return [{"pid": p, "rows": r} for p, r in sorted(rows.items()) if r]
+
+    def write_round(self, spark: SparkSession, n: int, frontier: DataFrame,
+                    metrics: dict, seen_full: DataFrame | None = None):
+        """Finish round n after ``write_scheduled``: the compacted seen
+        snapshot (compaction rounds), the frontier, metrics, _COMMIT."""
         d = self.round_dir(n)
-        scheduled.write.mode("overwrite").parquet(os.path.join(d, "scheduled"))
-        seen_delta.write.mode("overwrite").parquet(os.path.join(d, "seen_delta"))
         seen_dir = os.path.join(d, "seen")
         if seen_full is not None:  # compaction round
             # partitioned by fetch_round: the compacted snapshot IS the
@@ -237,8 +266,6 @@ class RoundState:
             # resume=False rerun over an old state dir: a stale snapshot
             # from the previous run at a non-compaction round of THIS run
             # would otherwise shadow the rewritten deltas
-            import shutil
-
             shutil.rmtree(seen_dir)
         frontier.write.mode("overwrite").parquet(os.path.join(d, "frontier"))
         with open(os.path.join(d, "metrics.json"), "w") as f:
@@ -246,13 +273,17 @@ class RoundState:
         with open(os.path.join(d, "_COMMIT"), "w") as f:
             f.write(str(time.time()))
 
-    def read(self, spark: SparkSession, n: int, what: str) -> DataFrame:
+    def read(self, spark: SparkSession, n: int, what: str,
+             schema=None) -> DataFrame:
+        """One table of round n; a known ``schema`` skips inference."""
         if what == "seen":
             return self.read_seen(spark, n)
-        return spark.read.parquet(os.path.join(self.round_dir(n), what))
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(os.path.join(self.round_dir(n), what))
 
     def seen_paths(self, n: int) -> tuple[str | None, list]:
-        """(latest full-snapshot path <= n or None, delta paths after it)."""
+        """(latest full-snapshot path <= n or None, the ``scheduled``
+        paths of the rounds after it — the seen deltas)."""
         rounds = [r for r in self.committed_rounds() if r <= n]
         base = max(
             (r for r in rounds
@@ -263,50 +294,42 @@ class RoundState:
             os.path.join(self.round_dir(base), "seen")
             if base is not None else None
         )
-        deltas = []
-        for r in rounds:
-            if base is not None and r <= base:
-                continue
-            d = os.path.join(self.round_dir(r), "seen_delta")
-            if os.path.isdir(d):
-                deltas.append(d)
+        deltas = [
+            os.path.join(self.round_dir(r), "scheduled")
+            for r in rounds if base is None or r > base
+        ]
         return base_path, deltas
-
-    @staticmethod
-    def _normalize_seen(df: DataFrame) -> DataFrame:
-        # fills: a state dir written before the seen-set carried
-        # (fetch_round, seq) reads back with those columns null/missing —
-        # normalize to fetch_round=0 ("age unknown => stale", so recrawl
-        # treats pre-migration urls as immediately due) and seq=0
-        for col, default in (
-            ("fetch_round", F.lit(0).cast("int")),
-            ("seq", F.lit(0).cast("long")),
-        ):
-            if col not in df.columns:
-                df = df.withColumn(col, default)
-            else:
-                df = df.withColumn(col, F.coalesce(F.col(col), default))
-        return df.select(*SEEN_COLS)
 
     def read_seen_parts(
         self, spark: SparkSession, n: int
     ) -> tuple[DataFrame | None, DataFrame | None]:
         """(compacted base snapshot, merged deltas since it) at round n —
-        the two tiers the incremental recrawl due-set needs separately.
-        Either side is None when absent. The base read carries an explicit
-        schema: fetch_round resolves to the partition column on
-        post-partitioning snapshots and to the data column (or null) on
-        legacy flat ones, and an empty partitioned dir stays readable."""
+        the two tiers the incremental recrawl due-set needs separately;
+        either is None when absent. Both reads carry an explicit schema,
+        so neither runs an inference job. On the base, fetch_round is the
+        partition column (the data column, or null, on legacy flat
+        snapshots); null fetch_round/seq from snapshots older than those
+        columns read as 0: age unknown => stale, due at once. The deltas
+        are the rounds' scheduled files in one scan, fetch_round parsed
+        from each file's round=N directory."""
         base_path, delta_paths = self.seen_paths(n)
         base = None
         if base_path is not None:
-            base = self._normalize_seen(
-                spark.read.schema(SEEN_SCHEMA).parquet(base_path)
+            base = spark.read.schema(SEEN_SCHEMA).parquet(base_path).select(
+                "url_hash", "url_canon",
+                F.coalesce("fetch_round", F.lit(0)).alias("fetch_round"),
+                F.coalesce("seq", F.lit(0).cast("long")).alias("seq"),
             )
         deltas = None
         if delta_paths:
-            deltas = self._normalize_seen(
-                spark.read.option("mergeSchema", "true").parquet(*delta_paths)
+            fetch_round = F.regexp_extract(
+                F.col("_metadata.file_path"), _DELTA_ROUND_RX, 1
+            ).cast("int")
+            deltas = spark.read.schema(DELTA_SCHEMA).parquet(
+                *delta_paths
+            ).select(
+                "url_hash", "url_canon", fetch_round.alias("fetch_round"),
+                "seq",
             )
         return base, deltas
 
@@ -425,17 +448,6 @@ def oracle_outlinks(c: dict) -> list:
     return out
 
 
-def partition_lineage(df: DataFrame) -> list:
-    """Per-partition row counts — cheap lineage/skew observability."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("pid"))
-        .count()
-        .orderBy("pid")
-        .collect()
-    )
-    return [{"pid": r.pid, "rows": r["count"]} for r in rows]
-
-
 def crawl(spark: SparkSession, seeds: DataFrame, robots: DataFrame | None,
           state_dir: str, rounds: int, cfg: PolitenessConfig | None = None,
           outlinks_fn=default_outlinks, resume: bool = True,
@@ -448,15 +460,19 @@ def crawl(spark: SparkSession, seeds: DataFrame, robots: DataFrame | None,
       1. prepare: canonicalize+hash+dedup, anti-join seen, robots broadcast
       2. schedule: salted politeness top-k, global fetch order
       3. expand: outlinks of fetched urls -> new candidates
-      4. commit: scheduled + seen DELTA + frontier snapshots, atomically
-         (full seen snapshot rewritten only every ``compact_every`` rounds)
+      4. commit: the scheduled table (written first, as the round's one
+         driving action; it doubles as the round's seen delta) + frontier
+         snapshot, atomically (full seen snapshot rewritten only every
+         ``compact_every`` rounds). Expansion, the carried-over frontier
+         and compaction read the committed scheduled table back.
 
-    Metrics ride the round's one driving action via DataFrame observations
-    (candidate count on the prepare stage, host cardinality on the schedule
-    stage) instead of separate count() jobs; the seen total is
-    prev + n_scheduled — exact distinct-url count while recrawl is off
-    (deltas disjoint); with ``recrawl_ttl`` it counts cumulative FETCH
-    events (refetches recount).
+    Metrics cost no extra Spark job: the candidate count and host
+    cardinality are DataFrame observations on the scheduled write;
+    ``n_scheduled`` and ``scheduled_partition_lineage`` (rows per writing
+    task) come from the written files' Parquet footers; ``wall_sec`` runs
+    through that write. The seen total is prev + n_scheduled — exact
+    distinct-url count while recrawl is off (deltas disjoint); with
+    ``recrawl_ttl`` it counts cumulative FETCH events (refetches recount).
     fetch_order's range boundaries are sampled ONCE per crawl() call and
     reused every round — no per-round sampling or count actions.
 
@@ -487,10 +503,6 @@ def crawl(spark: SparkSession, seeds: DataFrame, robots: DataFrame | None,
 def _crawl_leased(spark, seeds, robots, state, rounds, cfg, outlinks_fn,
                   resume, compact_every, recrawl_ttl, recrawl_priority,
                   lease) -> dict:
-    from pyspark.sql import Observation
-
-    from warcio_spark.plans.frontier import sample_order_boundaries
-
     state_dir = state.state_dir
 
     start_round = state.last_round() if resume else 0
@@ -516,8 +528,6 @@ def _crawl_leased(spark, seeds, robots, state, rounds, cfg, outlinks_fn,
         obs_s = Observation()
         frontier_in, seen_in = frontier, seen
         if recrawl_ttl and n > recrawl_ttl:
-            from warcio_spark.plans.frontier import with_frontier_keys
-
             # freshness: a url blocks re-fetching only while its last fetch
             # is younger than ttl rounds; aged-out urls are re-enqueued
             # every round with a deterministic seq until refetched
@@ -539,33 +549,29 @@ def _crawl_leased(spark, seeds, robots, state, rounds, cfg, outlinks_fn,
             .observe(obs_c, F.count(F.lit(1)).alias("n_candidates"))
             .cache()
         )
-        scheduled = (
-            schedule_round(cands, cfg)
-            .observe(
-                obs_s,
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct("host").alias("n_hosts_approx"),
-            )
+        scheduled = schedule_round(cands, cfg).observe(
+            obs_s, F.approx_count_distinct("host").alias("n_hosts_approx")
         )
         tracker: list = []
         scheduled = fetch_order(
             scheduled, boundaries=order_bounds, persist_tracker=tracker
-        ).cache()
-        n_scheduled = scheduled.count()
+        )
+        # fence before the round's first write
+        renew_lease(state_dir, lease)
+        lineage = state.write_scheduled(n, scheduled)
+        for df in tracker:
+            df.unpersist()
+        n_scheduled = sum(p["rows"] for p in lineage)
         if n_scheduled == 0 and not recrawl_ttl:
             # drained frontier, nothing will ever become eligible again
             cands.unpersist()
-            scheduled.unpersist()
-            for df in tracker:
-                df.unpersist()
+            shutil.rmtree(state.round_dir(n))
             break
         # under recrawl an idle round still COMMITS (empty delta): rounds
         # must keep ticking so fetched urls age toward their ttl
         n_seen_total += n_scheduled
+        scheduled = state.read(spark, n, "scheduled", scheduled.schema)
 
-        seen_delta = scheduled.select(
-            "url_hash", "url_canon", "seq"
-        ).withColumn("fetch_round", F.lit(n)).select(*SEEN_COLS)
         # robots-denied urls leave the frontier for good (same rule in the
         # oracle crawler); unscheduled eligible candidates carry over WITH
         # their canonical keys (no re-canonicalization next round)
@@ -574,8 +580,6 @@ def _crawl_leased(spark, seeds, robots, state, rounds, cfg, outlinks_fn,
             .join(scheduled.select("url_hash"), "url_hash", "left_anti")
             .select(*FRONTIER_KEYED_COLS)
         )
-        from warcio_spark.plans.frontier import with_frontier_keys
-
         expanded = with_frontier_keys(
             outlinks_fn(scheduled).select(*FRONTIER_COLS)
         ).select(*FRONTIER_KEYED_COLS)
@@ -598,10 +602,9 @@ def _crawl_leased(spark, seeds, robots, state, rounds, cfg, outlinks_fn,
             "n_scheduled": n_scheduled,
             "n_hosts_approx": _obs(obs_s, "n_hosts_approx", lambda: 0),
             "n_seen": n_seen_total,
-            "n_seen_delta": n_scheduled,
             "compacted": compacting,
             "wall_sec": round(time.perf_counter() - t0, 3),
-            "scheduled_partition_lineage": partition_lineage(scheduled),
+            "scheduled_partition_lineage": lineage,
         }
         seen_full = None
         if compacting:
@@ -609,7 +612,10 @@ def _crawl_leased(spark, seeds, robots, state, rounds, cfg, outlinks_fn,
             # fetch round, smallest historical seq) — a no-op when deltas
             # are disjoint (recrawl off)
             seen_full = (
-                seen.unionByName(seen_delta)
+                seen.unionByName(scheduled.select(
+                    "url_hash", "url_canon",
+                    F.lit(n).alias("fetch_round"), "seq",
+                ))
                 .groupBy("url_hash", "url_canon")
                 .agg(
                     F.max("fetch_round").alias("fetch_round"),
@@ -617,21 +623,14 @@ def _crawl_leased(spark, seeds, robots, state, rounds, cfg, outlinks_fn,
                 )
                 .select(*SEEN_COLS)
             )
-        renew_lease(state_dir, lease)
-        state.write_round(
-            spark, n, scheduled, seen_delta, next_frontier, metrics,
-            seen_full=seen_full,
-        )
+        state.write_round(spark, n, next_frontier, metrics,
+                          seen_full=seen_full)
         summary["rounds"].append(metrics)
-
         cands.unpersist()
-        scheduled.unpersist()
-        for df in tracker:
-            df.unpersist()
         # read back from the snapshot so every round's inputs are exactly the
         # committed state (resume-equivalence by construction)
         seen = state.read_seen(spark, n)
-        frontier = state.read(spark, n, "frontier")
+        frontier = state.read(spark, n, "frontier", next_frontier.schema)
 
     summary["last_round"] = state.last_round()
     return summary
@@ -648,7 +647,6 @@ def fetch_from_pages(scheduled: DataFrame, pages: DataFrame) -> DataFrame:
     tests/test_spark_ingest.py::test_bucketed_fetch_join_has_no_exchange.
     """
     from warcio_spark import functions as WF
-    from warcio_spark.plans.frontier import with_frontier_keys
 
     page_side = with_frontier_keys(pages.select("url", "warc_ts", "html")).select(
         F.col("url_hash"),

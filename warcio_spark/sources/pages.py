@@ -311,7 +311,3 @@ def synth_pages(spark: SparkSession, n: int, n_hosts: int = 1000,
             yield out
 
     return base.mapInPandas(gen, PAGES_SCHEMA)
-
-
-def write_pages(spark: SparkSession, n: int, path: str, **kwargs) -> None:
-    synth_pages(spark, n, **kwargs).write.mode("overwrite").parquet(path)
