@@ -3931,8 +3931,7 @@ def q_minhash_incremental(spark, sf):
     docs = _tp(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") < 400)
     batch = docs.filter(F.col("doc_id") >= 400)
-    return minhash_dedup_incremental(batch, corpus, threshold=0.5,
-                                     persist_tracker=_QUERY_PERSISTS)
+    return minhash_dedup_incremental(batch, corpus, threshold=0.5)
 
 
 def q_simhash_incremental(spark, sf):

@@ -1,4 +1,4 @@
-"""URL canonicalization kernel + the pUDF fast-path invariant."""
+"""URL canonicalization kernel + the JVM fast-path invariant."""
 
 import random
 import string
@@ -34,28 +34,36 @@ def test_canonicalize_idempotent_random():
         assert canonicalize_url(c1) == c1, (raw, c1)
 
 
-def test_fast_path_regex_means_already_canonical():
-    """The pUDF's vectorized fast path may only ever match urls the kernel
-    would return unchanged."""
-    from warcio_spark.functions import _CANON_FAST_RX
+def _is_canonical(spark, urls):
+    """is_canonical_expr evaluated in Spark, the gate production keying
+    uses (functions.with_canonical_url), per url in order."""
+    from pyspark.sql import functions as F
 
+    from warcio_spark.functions import is_canonical_expr
+
+    df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)],
+                               "i long, url string")
+    rows = df.select("i", is_canonical_expr(F.col("url")).alias("c")).collect()
+    return [c for _, c in sorted(rows)]
+
+
+def test_fast_path_regex_means_already_canonical(spark):
+    """The JVM fast path may only ever admit urls the kernel would return
+    unchanged."""
     rng = random.Random(5)
-    matched = 0
+    urls = []
     for i in range(3000):
         host = "host{0}.example{1}.com".format(i % 97, i % 7)
         path_alphabet = string.ascii_letters + string.digits + "_-./~"
         path = "/" + "".join(rng.choice(path_alphabet) for _ in range(rng.randrange(0, 25)))
+        if i % 50 == 0:  # dot segments, mid-path, at the end, before '?'
+            path += ("/./x", "/../x", "/.", "/..")[i // 50 % 4]
         q = "?q=" + str(i % 9) if i % 3 == 0 else ""
-        u = "http://" + host + path + q
-        if (
-            _CANON_FAST_RX.match(u)
-            and "/./" not in u
-            and "/../" not in u
-            and not u.endswith(("/.", "/.."))
-        ):
-            matched += 1
-            assert canonicalize_url(u) == u, u
-    assert matched > 2000  # the fast path really is the common case
+        urls.append("http://" + host + path + q)
+    matched = [u for u, c in zip(urls, _is_canonical(spark, urls)) if c]
+    for u in matched:
+        assert canonicalize_url(u) == u, u
+    assert len(matched) > 2000  # the fast path really is the common case
 
 
 def test_url_host():
@@ -65,17 +73,15 @@ def test_url_host():
     assert repair_uri("<http://x/ y>") == "http://x/%20y"
 
 
-def test_trailing_bare_query_takes_kernel_path():
+def test_trailing_bare_query_takes_kernel_path(spark):
     """'http://h/p?' canonicalizes to 'http://h/p' (urlunsplit strips the
-    bare '?'); the pUDF fast path must NOT accept it as already-canonical or
+    bare '?'); the JVM fast path must NOT accept it as already-canonical or
     the two spellings of one url would get different url_hash values."""
-    from warcio_spark.functions import _CANON_FAST_RX
-
     assert canonicalize_url("http://h.com/p?") == "http://h.com/p"
-    assert _CANON_FAST_RX.match("http://h.com/p?") is None
-    # non-empty queries still take the fast path
-    assert _CANON_FAST_RX.match("http://h.com/p?q=1")
     assert canonicalize_url("http://h.com/p?q=1") == "http://h.com/p?q=1"
+    # non-empty queries still take the fast path
+    assert _is_canonical(spark, ["http://h.com/p?", "http://h.com/p?q=1"]) \
+        == [False, True]
 
 
 def test_split_union_canonicalization_equals_pudf(spark):
@@ -83,7 +89,7 @@ def test_split_union_canonicalization_equals_pudf(spark):
     kernel result for every url — canonical, messy, adversarial, NULL —
     and must not lose rows (NULL urls take the slow branch). A url ending
     in a line terminator is not canonical: '$' would match before it in
-    both the Python and the Java fast-path regex, the kernel strips it."""
+    the Java fast-path regex, the kernel strips it."""
     from pyspark.sql import functions as F
 
     from warcio_spark import functions as WF

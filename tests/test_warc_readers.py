@@ -173,6 +173,42 @@ def test_entries_equal_read_warc_rows(spark, corpus, full, tmp_path):
                for r in got)
 
 
+def test_cdx11_fields_equal_cdxj(spark, corpus):
+    """index_cdx11 renders the captures index_cdxj renders: each line's
+    11 fields are the same capture's cdxj urlkey, timestamp and json
+    fields in CDX11_HEADER order (bare base32 digest, redirect and robot
+    flags '-'), with '-' wherever the cdxj json drops a field."""
+    import json
+
+    from warcio_spark.operators.indexer import (
+        CDX11_HEADER,
+        index_cdx11,
+        index_cdxj,
+    )
+
+    recs = read_warc(spark, str(corpus / "*"))
+    want = {}
+    for r in index_cdxj(recs).collect():
+        j = json.loads(r.block)
+        get = lambda k: j.get(k, "-")  # noqa: E731
+        want[(j["filename"], j["offset"])] = [
+            r.urlkey, r.timestamp, get("url"), get("mime"), get("status"),
+            get("digest").split(":")[-1], "-", "-", get("length"),
+            get("offset"), get("filename")]
+    got = {}
+    for r in index_cdx11(recs).collect():
+        fields = r.line.split(" ")
+        assert fields[:2] == [r.urlkey, r.timestamp]
+        got[(fields[10], fields[9])] = fields
+    assert len(CDX11_HEADER.split()) == 12  # 'CDX' + one letter per field
+    assert len(got) == len(want) > 0
+    assert got == want
+    # the live cases: a status-less resource, a revisit, a digest
+    assert any(f[4] == "-" for f in got.values())
+    assert any(f[3] == "warc/revisit" for f in got.values())
+    assert all(f[5] != "-" and ":" not in f[5] for f in got.values())
+
+
 def test_ranges_equal_read_warc_for_gzip(spark, corpus, full):
     """read_warc_ranges at a split far below the file size (each split
     seeks to its first member; members past a split's end come from the

@@ -172,45 +172,30 @@ def decode_text(data: pd.Series) -> pd.Series:
     return _map_series(data, lambda b: _textcodec.decode_fallback(bytes(b)))
 
 
-import re as _re
-
 # urls matching this (and free of dot-segments) are ALREADY canonical:
 # lowercase scheme+host, no port/userinfo/percent/space/fragment, explicit
-# path — the hot-path majority of a well-formed frontier skips the Python
-# kernel entirely (vectorized regex instead of per-url urlsplit)
-_CANON_FAST_RX = _re.compile(
-    r"^https?://[a-z0-9\-]+(\.[a-z0-9\-]+)*/[A-Za-z0-9_\-./~]*"
-    r"(\?[A-Za-z0-9_\-=&.]+)?\Z"  # >=1 query char: the kernel strips a
-    # bare trailing '?' (urlunsplit), so 'http://h/p?' must take the kernel
-    # path or the two spellings of one url would get different url_hash
-    # values; \Z, not $: '$' also matches before a final '\n', which the
-    # kernel strips
-)
-
-
-# the same fast-path condition as JVM expressions, for split-union plans:
-# rows matching this are ALREADY canonical and never need to cross into
+# path — the hot-path majority of a well-formed frontier never crosses into
 # Python at all (see with_canonical_url)
 _CANON_FAST_RX_JAVA = (
     r"^https?://[a-z0-9\-]+(\.[a-z0-9\-]+)*/[A-Za-z0-9_\-./~]*"
-    r"(\?[A-Za-z0-9_\-=&.]+)?\z"  # Java's true end of input (its \Z and $
-    # allow a final line terminator)
+    r"(\?[A-Za-z0-9_\-=&.]+)?\z"  # >=1 query char: the kernel strips a
+    # bare trailing '?' (urlunsplit), so 'http://h/p?' must take the kernel
+    # path or the two spellings of one url would get different url_hash
+    # values; \z is Java's true end of input (its \Z and $ allow a final
+    # line terminator, which the kernel strips)
 )
 
 
 def is_canonical_expr(url) -> Column:
-    """JVM-side (codegen) test equivalent to the pUDF's fast path: True =>
-    canonicalize_url(url) == url. Exactness is pinned by
+    """JVM-side (codegen) test: True => canonicalize_url(url) == url.
+    Exactness is pinned by
     tests/test_urlnorm.py::test_fast_path_regex_means_already_canonical and
     the split-union equivalence test."""
     u = _c(url)
-    return (
-        u.rlike(_CANON_FAST_RX_JAVA)
-        & ~u.contains("/./")
-        & ~u.contains("/../")
-        & ~u.endswith("/.")
-        & ~u.endswith("/..")
-    )
+    # a '.' or '..' path segment ends at '/', '?' or the end of the url
+    # (the query has no '/'); the kernel removes it: 'http://h/p/..?q=1'
+    # is 'http://h/?q=1'
+    return u.rlike(_CANON_FAST_RX_JAVA) & ~u.rlike(r"/\.\.?(/|\?|\z)")
 
 
 def with_canonical_url(df, url_col: str = "url",
@@ -232,21 +217,9 @@ def with_canonical_url(df, url_col: str = "url",
 
 @F.pandas_udf(T.StringType())
 def canonicalize_url(url: pd.Series) -> pd.Series:
-    """RFC-3986 canonical form (north rule F12). Vectorized fast path for
-    already-canonical urls; full kernel for the rest."""
-    fast = (
-        url.str.match(_CANON_FAST_RX, na=False)
-        & ~url.str.contains("/./", regex=False, na=False)
-        & ~url.str.contains("/../", regex=False, na=False)
-        & ~url.str.endswith(("/.", "/.."), na=False)
-    )
-    out = url.copy()
-    slow = ~fast
-    if slow.any():
-        out[slow] = url[slow].map(
-            lambda u: _urls.canonicalize_url(u) if u is not None else None
-        )
-    return out
+    """RFC-3986 canonical form (north rule F12), the full kernel per url —
+    with_canonical_url sends it only the urls is_canonical_expr rejects."""
+    return _map_series(url, _urls.canonicalize_url)
 
 
 @F.pandas_udf(T.StringType())

@@ -25,7 +25,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from warcio_spark.operators.textstats import tokens
-from warcio_spark.plans.graph import connected_components, materialize
+from warcio_spark.plans.graph import (
+    connected_components,
+    materialize,
+    persist_into,
+)
 
 # ---------------------------------------------------------------------------
 # exact
@@ -450,11 +454,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     else:
         rows = _shingle_rows(df, id_col, text_col, shingle_n)
     banded = _banded_buckets_from_rows(rows, num_perm, bands)
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(banded)
+    banded = persist_into(banded, persist_tracker)
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -485,11 +485,7 @@ def minhash_dedup(df: DataFrame, threshold: float = 0.8, id_col: str = "doc_id",
     shingled = df.select(
         F.col(id_col).alias("_id"), word_ngrams(text_col, shingle_n).alias("_sh")
     )
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(shingled)
+    shingled = persist_into(shingled, persist_tracker)
     cands = minhash_lsh_pairs(df, id_col, text_col, num_perm, bands, shingle_n,
                               shingled=shingled,
                               persist_tracker=persist_tracker)
@@ -679,11 +675,7 @@ def embedding_near_dup(emb: DataFrame, threshold: float = 0.95,
         F.col(id_col).alias("_id"),
         F.posexplode(multi(F.col(vec_col))).alias("_rep", "_bucket"),
     ).filter(F.col("_bucket").isNotNull())
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(banded)
+    banded = persist_into(banded, persist_tracker)
     l, r = banded.alias("l"), banded.alias("r")
     pairs = (
         l.join(r, (F.col("l._rep") == F.col("r._rep"))
@@ -882,8 +874,7 @@ def minhash_dedup_incremental(new_docs: DataFrame, corpus_docs: DataFrame,
                               threshold: float = 0.8,
                               id_col: str = "doc_id", text_col: str = "text",
                               num_perm: int = 64, bands: int = 16,
-                              shingle_n: int = 3,
-                              persist_tracker: list | None = None) -> DataFrame:
+                              shingle_n: int = 3) -> DataFrame:
     """Near-dup detection of a NEW batch against an EXISTING corpus — the
     incremental-ingest path: band only the batch (O(batch), the corpus is
     never re-shingled), probe the corpus ``index`` (minhash_band_index
@@ -902,9 +893,7 @@ def minhash_dedup_incremental(new_docs: DataFrame, corpus_docs: DataFrame,
     consumes codegen occurrence rows, not arrays). Candidates equal the
     cross-boundary subset of minhash_lsh_pairs(corpus ∪ batch) exactly
     (pinned in pytest), so incremental == batch-at-once for
-    new-vs-corpus pairs. ``persist_tracker`` is accepted for the shared
-    caller contract; this operator currently has no multi-consumer
-    subplan left to persist."""
+    new-vs-corpus pairs."""
     new_banded = _banded_buckets_from_rows(
         _shingle_rows(new_docs, id_col, text_col, shingle_n),
         num_perm, bands)

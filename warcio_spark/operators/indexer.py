@@ -59,53 +59,61 @@ def index_ndjson(records: DataFrame, fields=None) -> DataFrame:
     return proj.select(line.alias("line"))
 
 
-def index_cdxj(records: DataFrame) -> DataFrame:
-    """CDXJ index lines — ``urlkey timestamp {json}`` — the
-    pywb/OpenWayback capture-index format the reference's ecosystem
-    indexers emit on top of warcio iteration. One projection per record:
-    the SURT urlkey and ts14 timestamp are JVM expressions, the json block
-    carries url/mime/status/digest/length/offset/filename (nulls dropped
-    by to_json). Sorting the output by line IS the CDX merge order
-    (urlkey, timestamp) — a plain orderBy at whatever scope needs it.
+#: the capture fields both CDX renderings carry, in CDXJ json-block order
+_CAPTURE_FIELDS = ("url", "mime", "status", "digest", "length", "offset",
+                   "filename")
 
-    Records with no url OR no parseable WARC-Date are excluded: a CDXJ
-    line is keyed on both, and concat_ws would otherwise silently emit a
-    malformed two-field line for a NULL timestamp. Only capture-bearing
-    record types (response/revisit/resource/metadata) are indexed —
-    pywb's cdx-indexer excludes request records by default, and a CDXJ
-    stream merged with pywb output must agree on which records exist.
-    ts14 renders via the session time zone — run with
-    spark.sql.session.timeZone=UTC (all of this repo's session builders
-    do) for spec-correct timestamps."""
-    ts14 = F.date_format(F.col("warc_ts"), "yyyyMMddHHmmss")
-    # cdxj mime: pywb emits the literal 'warc/revisit' for revisit
-    # records; responses carry the PAYLOAD type — http Content-Type with
-    # parameters trimmed; everything else the WARC Content-Type
+
+def _captures(records: DataFrame) -> DataFrame:
+    """(urlkey, timestamp, *_CAPTURE_FIELDS) for the capture records — the
+    one record filter and field projection index_cdxj and index_cdx11
+    render. Records with no url OR no parseable WARC-Date are excluded: a
+    CDX line is keyed on both. Only capture-bearing record types
+    (response/revisit/resource/metadata) are indexed — pywb's cdx-indexer
+    excludes request records by default, and a CDX stream merged with
+    pywb output must agree on which records exist. ts14 renders via the
+    session time zone — run with spark.sql.session.timeZone=UTC (all of
+    this repo's session builders do) for spec-correct timestamps."""
+    # mime: pywb emits the literal 'warc/revisit' for revisit records;
+    # responses carry the PAYLOAD type — http Content-Type with parameters
+    # trimmed; everything else the WARC Content-Type
     http_ct = WF.header_get("http_headers", "Content-Type")
     mime = F.when(F.col("rec_type") == "revisit", F.lit("warc/revisit")).when(
         (F.col("rec_type") == "response") & http_ct.isNotNull(),
         F.trim(F.split_part(http_ct, F.lit(";"), F.lit(1))),
     ).otherwise(F.col("content_type"))
-    block = F.to_json(
-        F.struct(
-            F.col("url"),
-            mime.alias("mime"),
-            field_expr("http:status").alias("status"),
-            WF.header_get("rec_headers", "WARC-Payload-Digest").alias("digest"),
-            F.col("rec_length").cast("string").alias("length"),
-            F.col("offset").cast("string").alias("offset"),
-            F.col("filename"),
-        )
-    )
     return records.filter(
         F.col("url").isNotNull()
         & F.col("warc_ts").isNotNull()
         & F.col("rec_type").isin("response", "revisit", "resource", "metadata")
     ).select(
         WF.surt_key("url").alias("urlkey"),
-        ts14.alias("timestamp"),
+        F.date_format(F.col("warc_ts"), "yyyyMMddHHmmss").alias("timestamp"),
+        F.col("url"),
+        mime.alias("mime"),
+        field_expr("http:status").alias("status"),
+        WF.header_get("rec_headers", "WARC-Payload-Digest").alias("digest"),
+        F.col("rec_length").cast("string").alias("length"),
+        F.col("offset").cast("string").alias("offset"),
+        F.col("filename"),
+    )
+
+
+def index_cdxj(records: DataFrame) -> DataFrame:
+    """CDXJ index lines — ``urlkey timestamp {json}`` — the
+    pywb/OpenWayback capture-index format the reference's ecosystem
+    indexers emit on top of warcio iteration. One projection per capture
+    record (``_captures``): the SURT urlkey and ts14 timestamp are JVM
+    expressions, the json block carries url/mime/status/digest/length/
+    offset/filename (nulls dropped by to_json). Sorting the output by line
+    IS the CDX merge order (urlkey, timestamp) — a plain orderBy at
+    whatever scope needs it."""
+    block = F.to_json(F.struct(*_CAPTURE_FIELDS))
+    return _captures(records).select(
+        "urlkey",
+        "timestamp",
         block.alias("block"),
-        F.concat_ws(" ", WF.surt_key("url"), ts14, block).alias("line"),
+        F.concat_ws(" ", "urlkey", "timestamp", block).alias("line"),
     )
 
 
@@ -157,31 +165,16 @@ def cdx11_line(urlkey, ts14, url, mime, status, digest, length, offset,
 def index_cdx11(records: DataFrame) -> DataFrame:
     """Classic 11-field CDX capture index over a parsed records table —
     the pre-CDXJ format Wayback and Common Crawl's cdx/ listings use.
-    Same capture-record filter and field sources as index_cdxj (payload
-    mime for responses, ``warc/revisit`` for revisits, http:status,
-    WARC-Payload-Digest); only the rendering differs: fixed 11
-    space-separated columns with ``-`` for absent values instead of a
-    json block. Sort by line for (urlkey, timestamp) merge order;
-    prepend CDX11_HEADER when writing a standalone file."""
-    ts14 = F.date_format(F.col("warc_ts"), "yyyyMMddHHmmss")
-    http_ct = WF.header_get("http_headers", "Content-Type")
-    mime = F.when(F.col("rec_type") == "revisit", F.lit("warc/revisit")).when(
-        (F.col("rec_type") == "response") & http_ct.isNotNull(),
-        F.trim(F.split_part(http_ct, F.lit(";"), F.lit(1))),
-    ).otherwise(F.col("content_type"))
-    urlkey = WF.surt_key("url")
-    return records.filter(
-        F.col("url").isNotNull()
-        & F.col("warc_ts").isNotNull()
-        & F.col("rec_type").isin("response", "revisit", "resource", "metadata")
-    ).select(
-        urlkey.alias("urlkey"),
-        ts14.alias("timestamp"),
-        cdx11_line(
-            urlkey, ts14, F.col("url"), mime, field_expr("http:status"),
-            WF.header_get("rec_headers", "WARC-Payload-Digest"),
-            F.col("rec_length"), F.col("offset"), F.col("filename"),
-        ).alias("line"),
+    The same capture records and fields as index_cdxj (``_captures``);
+    only the rendering differs: fixed 11 space-separated columns with
+    ``-`` for absent values instead of a json block. Sort by line for
+    (urlkey, timestamp) merge order; prepend CDX11_HEADER when writing a
+    standalone file."""
+    return _captures(records).select(
+        "urlkey",
+        "timestamp",
+        cdx11_line(*[F.col(c) for c in ("urlkey", "timestamp")
+                     + _CAPTURE_FIELDS]).alias("line"),
     )
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from warcio_spark.operators.textstats import tokens
+from warcio_spark.plans.graph import persist_into
 
 __all__ = ["bm25_scores", "bm25_topk", "write_bm25_index",
            "bm25_topk_indexed"]
@@ -71,11 +72,7 @@ def bm25_scores(
             tokens(text_col), lambda t: F.array_contains(terms, t)
         ).alias("_qtoks"),
     )
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(base)
+    base = persist_into(base, persist_tracker)
 
     # corpus scalars: one tiny aggregate job, embedded as literals
     stats = base.agg(

@@ -54,6 +54,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from warcio_spark.operators.textstats import token_count, tokens
+from warcio_spark.plans.graph import persist_into
 
 __all__ = [
     "gram_positions",
@@ -119,11 +120,7 @@ def dup_gram_spans(
     shingle pass).
     """
     grams = gram_positions(docs, n=n, text_col=text_col, id_col=id_col)
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(grams)
+    grams = persist_into(grams, persist_tracker)
     return _dup_gram_spans(grams, n=n, min_docs=min_docs, id_col=id_col)
 
 

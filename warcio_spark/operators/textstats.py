@@ -12,6 +12,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from warcio_spark.plans.graph import persist_into
+
 # small multilingual stopword marker sets for the n-gram language heuristic
 LANG_MARKERS = {
     "en": ["the", "and", "of"],
@@ -33,11 +35,6 @@ def token_count(text) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text) -> Column:
-    col = F.col(text) if isinstance(text, str) else text
-    return F.length(col)
-
-
 def punct_ratio(text) -> Column:
     """fraction of characters that are not alnum/space (4 decimals)."""
     col = F.col(text) if isinstance(text, str) else text
@@ -49,23 +46,6 @@ def stopword_ratio(text, stopwords=("the", "a", "and", "of", "to", "in")) -> Col
     toks = tokens(text)
     stop = F.size(F.filter(toks, lambda t: F.lower(t).isin(list(stopwords))))
     return F.round(stop / F.greatest(F.size(toks), F.lit(1)), 4)
-
-
-def avg_token_len(text) -> Column:
-    col = F.col(text) if isinstance(text, str) else text
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.round(total / F.greatest(F.size(toks), F.lit(1)), 4)
-
-
-def quality_score(text) -> Column:
-    """Composite [0,1] quality heuristic: longer docs with low punctuation
-    and a sane stopword rate score higher. Deterministic, SQL-expressible."""
-    col = F.col(text) if isinstance(text, str) else text
-    len_term = F.least(F.length(col) / F.lit(500.0), F.lit(1.0))
-    punct_term = F.lit(1.0) - F.least(punct_ratio(col) * 5, F.lit(1.0))
-    stop_term = F.least(stopword_ratio(col) * 4, F.lit(1.0))
-    return F.round((len_term + punct_term + stop_term) / 3.0, 4)
 
 
 def lang_scores(text) -> Column:
@@ -139,13 +119,9 @@ def repetition_stats(
         )
         .alias("dup_2gram_frac"),
     )
-    if persist_tracker is not None:
-        # the mode branch (explode) and the final stats join both consume
-        # arr_stats — persisted, the tokenize/distinct battery runs once
-        from pyspark.storagelevel import StorageLevel
-
-        arr_stats = arr_stats.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(arr_stats)
+    # the mode branch (explode) and the final stats join both consume
+    # arr_stats — persisted, the tokenize/distinct battery runs once
+    arr_stats = persist_into(arr_stats, persist_tracker)
     tf = (
         arr_stats.select(id_col, F.explode("_toks").alias("tok"))
         .groupBy(id_col, "tok")
@@ -281,11 +257,7 @@ def bigram_lm(docs: DataFrame, text_col: str = "text",
         F.explode(word_bigrams(text_col)).alias("bg")
     ).select("bg.w1", "bg.w2")
     counts = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        counts = counts.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(counts)
+    counts = persist_into(counts, persist_tracker)
     prefix = counts.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vocab = counts.select(F.col("w1").alias("w")).union(
         counts.select("w2")
@@ -326,11 +298,7 @@ def lm_perplexity(docs: DataFrame, lm: DataFrame, id_col: str = "doc_id",
     computation of the model's lineage (for a ``bigram_lm`` model that
     lineage is a full corpus explode+aggregate per consumer otherwise);
     the caller unpersists after materializing the result."""
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        lm = lm.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(lm)
+    lm = persist_into(lm, persist_tracker)
     floor = lm.agg(F.min("logp")).first()[0]
     floor = 0.0 if floor is None else float(floor)
     lm_j = F.broadcast(lm) if broadcast_lm else lm
@@ -855,11 +823,7 @@ def dsir_weights(docs: DataFrame, is_target: Column,
         is_target.alias("_is_t"),
         F.explode(hashed_features(text_col, n_buckets_hex)).alias("bucket"),
     )
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(feats)
+    feats = persist_into(feats, persist_tracker)
     dist = feats.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("raw_c"),
         F.sum(F.when(F.col("_is_t"), 1).otherwise(0)).alias("tgt_c"),
@@ -931,11 +895,7 @@ def perplexity_buckets(docs: DataFrame, lm: DataFrame,
     ppl = lm_perplexity(docs, lm, id_col=id_col, text_col=text_col,
                         persist_tracker=persist_tracker)
     scored = ppl.join(docs.select(id_col, lang_col), id_col)
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(scored)
+    scored = persist_into(scored, persist_tracker)
     stats = scored.filter(F.col("ppl").isNotNull()).groupBy(lang_col).agg(
         F.avg("ppl").alias("_mu"),
         F.stddev_pop("ppl").alias("_sd"),

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from warcio_spark import functions as WF
+from warcio_spark.plans.graph import persist_into
 
 
 @dataclass(frozen=True)
@@ -222,11 +223,7 @@ def fetch_order(scheduled: DataFrame, partitions: int | None = None,
     ranged = scheduled.withColumn("_range", rid).repartition(
         max(2, len(boundaries) + 1), "_range"
     )
-    if persist_tracker is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        ranged = ranged.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_tracker.append(ranged)
+    ranged = persist_into(ranged, persist_tracker)
     counts = ranged.groupBy("_range").agg(F.count(F.lit(1)).alias("_n"))
     w_off = Window.orderBy("_range").rowsBetween(Window.unboundedPreceding, -1)
     offs = counts.select(

@@ -51,10 +51,12 @@ def host_graph(links: DataFrame, src_col: str = "page_url",
     )
 
 
-def _persist(df: DataFrame, persist_tracker: list | None) -> DataFrame:
-    """Persist ``df`` into the caller's ``persist_tracker`` (the caller
-    unpersists after materializing); without a tracker nothing is cached,
-    so a library caller is never left holding a cache it cannot release."""
+def persist_into(df: DataFrame, persist_tracker: list | None) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK) into the caller's
+    ``persist_tracker`` (the caller unpersists after materializing);
+    without a tracker nothing is cached, so a library caller is never left
+    holding a cache it cannot release. The one persist rule of every
+    operator that takes a ``persist_tracker``."""
     if persist_tracker is None:
         return df
     from pyspark.storagelevel import StorageLevel
@@ -73,7 +75,7 @@ def _host_edges(edges: DataFrame, self_edges: bool,
     return it with the node universe (every host on either side)."""
     if not self_edges:
         edges = edges.filter(F.col("src_host") != F.col("dst_host"))
-    edges = _persist(edges, persist_tracker)
+    edges = persist_into(edges, persist_tracker)
     nodes = (
         edges.select(F.col("src_host").alias("host"))
         .union(edges.select(F.col("dst_host").alias("host")))
@@ -101,7 +103,7 @@ def _seeded_power_iteration(edges: DataFrame, seeds: DataFrame | None,
             "host", "left",
         ).select("host",
                  F.coalesce(F.col("_seed"), F.lit(False)).alias("_seed"))
-    flagged = _persist(flagged, persist_tracker)
+    flagged = persist_into(flagged, persist_tracker)
     # |S| rides a 1-row broadcast cross-join instead of a driver .count()
     # pull, so the whole query is ONE Spark action. With zero seeds in the
     # graph every value takes the otherwise(0.0) branch (all-zero result),
@@ -225,7 +227,7 @@ def host_hits(edges: DataFrame, iterations: int = 3,
     plus the final (host, hub, authority) table that both the norms and
     the output rows read; without a tracker nothing is persisted."""
     edges, nodes = _host_edges(edges, self_edges, persist_tracker)
-    nodes = _persist(nodes, persist_tracker)
+    nodes = persist_into(nodes, persist_tracker)
     hubs = nodes.select("host", F.lit(1.0).alias("hub"))
     auths = nodes.select("host", F.lit(0.0).alias("authority"))
     for _ in range(max(0, iterations)):
@@ -254,7 +256,7 @@ def host_hits(edges: DataFrame, iterations: int = 3,
     # s at sf0.1, output hash-identical — same IEEE doubles, divided in
     # the JVM instead of pulled through Python). The host table is tiny
     # at any scale.
-    both = _persist(hubs.join(auths, "host"), persist_tracker)
+    both = persist_into(hubs.join(auths, "host"), persist_tracker)
     norms = both.agg(
         F.sqrt(F.sum(F.col("hub") * F.col("hub"))).alias("_nh"),
         F.sqrt(F.sum(F.col("authority") * F.col("authority"))).alias("_na"),

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from warcio_spark.plans.graph import persist_into
+
 _BKT = "__prefix_bucket"
 
 
@@ -84,8 +86,8 @@ def with_global_cumsum(
     ``exclusive=True`` gives the sum of strictly-earlier rows (0 for the
     first row) — the natural form for "offset where this row starts".
 
-    With ``persist_tracker`` (a list, same contract as
-    ``operators.dedup.minhash_dedup``) the narrow (key, value, bucket)
+    With ``persist_tracker`` (a list, the ``plans.graph.persist_into``
+    contract) the narrow (key, value, bucket)
     projection is persisted so the count/sample/totals passes and the
     final plan share one materialization; the CALLER unpersists after
     materializing the result. Without it nothing is persisted — still
@@ -93,10 +95,7 @@ def with_global_cumsum(
     re-scans the source per pass.
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    staged = df
-    if persist_tracker is not None:
-        staged = staged.persist()
-        persist_tracker.append(staged)
+    staged = persist_into(df, persist_tracker)
     pts = _split_points(staged, order_col, n)
     bucketed = staged.withColumn(_BKT, _bucket_expr(order_col, pts))
     totals = {

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# the JSON block fields index_cdxj writes (operators/indexer.py:93-103);
+# the JSON block fields index_cdxj writes (operators/indexer._CAPTURE_FIELDS);
 # pywb stores numerics as strings — parse as strings, cast after
 _BLOCK_SCHEMA = (
     "url string, mime string, status string, digest string, "
