@@ -991,9 +991,9 @@ def q_shard_assignment(spark, sf):
     """Token-balanced output sharding (pipeline.shard_assignment):
     shard_id = floor(global-exclusive-cumsum(n_tokens) / 2000) in doc_id
     order. The running total runs on plans/prefix.with_global_cumsum —
-    range exchange + per-partition window + a #partitions-row offsets
-    fold — NOT an unpartitioned window, so the plan has no
-    single-partition stage at any scale."""
+    range exchange + per-range window + range offsets broadcast from a
+    counts branch of the same plan — NOT an unpartitioned window, so no
+    single-partition stage ever carries data."""
     from warcio_spark.operators.pipeline import shard_assignment
 
     return shard_assignment(

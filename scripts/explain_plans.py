@@ -38,7 +38,7 @@ PICKS = [
     "lm_perplexity",  # bigram explode, partial aggs, broadcast floor join
     "chunk_documents",  # index-only explode + slices: zero shuffles
     "anchor_texts",  # two linear regex passes + one groupBy shuffle
-    "shard_assignment",  # range exchange + pid window; offsets folded as a map literal
+    "shard_assignment",  # range exchange + range window; offsets broadcast from a counts branch
     "zipnum_summary",  # prefix row-number + one block_id groupBy
     "normalize_text",  # ASCII split-union: codegen fast leg, one ArrowEvalPython slow leg
     "scope_filter",  # broadcast hash LeftSemi (equi tail + subdomain residual), codegen exclude
@@ -81,7 +81,7 @@ PICKS = [
     "ip_queues",  # broadcast resolution + map-combinable queue agg
     "truncation_audit",  # header HOF filters + CASE ladder: zero shuffles
     "compression_ratio",  # ONE ArrowEvalPython node, map-only
-    "fetch_fairness",  # prefix-scan rank: bucketed window, no SinglePartition data stage
+    "fetch_fairness",  # prefix range rank: counts branch + broadcast offsets, no SinglePartition data stage
     "alias_collapse",  # chain doubling on alias sources + two-stage rollup
     "sitemap_coverage",  # distinct sides share the url shuffle with the outer join
     "centroid_outliers",  # partial-agg centroid + BroadcastHashJoin + 2-phase window

@@ -374,14 +374,18 @@ def test_fetch_order_null_priority_ranks_last(spark):
     range 0."""
     from pyspark.sql import Window
 
+    from warcio_spark.plans.frontier import sample_order_boundaries
+
     rows = [
         ("u%03d" % i, float(i % 13) if i % 5 else None, i)
         for i in range(200)
     ]
     df = spark.createDataFrame(rows, "url_canon string, priority double, seq long")
+    bounds = sample_order_boundaries(df, 8)
     got = [
         r.url_canon
-        for r in fetch_order(df, partitions=8).orderBy("fetch_order").collect()
+        for r in fetch_order(df, boundaries=bounds)
+        .orderBy("fetch_order").collect()
     ]
     w = Window.orderBy(
         F.desc("priority"), F.asc("seq"), F.asc("url_canon")

@@ -19,7 +19,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from warcio_spark.kernels import chrono as _chrono
 from warcio_spark.kernels import digests as _digests
 from warcio_spark.kernels import payload as _payload
 from warcio_spark.kernels import textcodec as _textcodec
@@ -391,13 +390,6 @@ def url_host_expr(url) -> Column:
     which canonicalization has already %-encoded)."""
     host = F.lower(F.try_parse_url(_c(url), F.lit("HOST")))
     return F.regexp_replace(host, r"^\[(.*)\]$", r"$1")
-
-
-@F.pandas_udf(T.StringType())
-def ts14_to_iso(ts14: pd.Series) -> pd.Series:
-    """Lenient 14-digit timestamp -> ISO (pad-up + clamp,
-    warcio/timeutils.py:199-354)."""
-    return _map_series(ts14, _chrono.ts14_to_iso)
 
 
 def surt_key(url) -> Column:

@@ -247,9 +247,6 @@ def sniff_mime_sql(payload_expr: str, declared_expr: str) -> tuple[str, str, str
 # needs.
 # ---------------------------------------------------------------------------
 
-# reason tokens the spec enumerates; anything else surfaces as-is
-TRUNCATION_REASONS = ("length", "time", "disconnect", "unspecified")
-
 
 def truncation_audit(records: DataFrame) -> DataFrame:
     """Per-record truncation verdict.

@@ -1774,12 +1774,6 @@ def publish_dates(fetched: DataFrame, url_col: str = "page_url",
     )
 
 
-# host of an absolute URL — the same regex contract as plans/graph.url_host
-# (lowercased, port/userinfo dropped), kept here as a literal so the
-# image_fetch_frontier DuckDB oracle can replay it verbatim
-_IMG_HOST_RX = "^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]+)"
-
-
 def image_fetch_frontier(captions: DataFrame,
                          fetched_media: DataFrame | None = None,
                          max_per_host: int = 64, buckets: int = 32,
@@ -1798,23 +1792,20 @@ def image_fetch_frontier(captions: DataFrame,
     - ``demand`` — sum of n_pages over the image's caption variants
       (how many page-references want this image); ``n_caps`` — number
       of distinct captions it was seen with;
-    - ``host`` — lowercased authority (same regex contract as
-      plans/graph.url_host, mirrored by the DuckDB oracle); rows with
-      no parseable host drop;
+    - ``host`` — lowercased authority (plans/graph.url_host, mirrored by
+      the DuckDB oracle); rows with no parseable host drop;
     - ``fetch_rank`` — 1-based demand-first position within the host
       (ties broken by url), capped at ``max_per_host``.
 
     Scale shape (100 TB): one (image_url) rollup shuffle; the
     anti-join keys on url — the fetched side can be the huge one,
     and Catalyst plans it as a sort-merge join (its runtime bloom
-    filter never applies to an anti-join). The per-host cap is the
-    two-phase exact top-k (stratified_quota's shape): rank inside
-    (host, url-hash bucket) and prune to the cap, then re-rank the
-    <= buckets*cap survivors per host — a CDN mega-host never
-    serializes through one task.
-    Both phases use the SAME total order (demand desc, image_url), so
-    the composition is exactly the global per-host bottom-cap."""
-    from pyspark.sql import Window
+    filter never applies to an anti-join). The per-host cap is
+    ``plans.prefix.group_top_k`` over url-hash buckets in the total
+    order (demand desc, image_url) — a CDN mega-host never serializes
+    through one task."""
+    from warcio_spark.plans.graph import url_host
+    from warcio_spark.plans.prefix import group_top_k
 
     wanted = captions.groupBy("image_url").agg(
         F.sum("n_pages").cast("long").alias("demand"),
@@ -1823,21 +1814,10 @@ def image_fetch_frontier(captions: DataFrame,
     if fetched_media is not None:
         have = fetched_media.select(F.col(url_col).alias("image_url"))
         wanted = wanted.join(have, "image_url", "left_anti")
-    host = F.nullif(
-        F.lower(F.regexp_extract(F.col("image_url"), _IMG_HOST_RX, 1)),
-        F.lit(""),
-    )
-    w1 = Window.partitionBy("host", "_b").orderBy(
-        F.desc("demand"), F.asc("image_url"))
-    w2 = Window.partitionBy("host").orderBy(
-        F.desc("demand"), F.asc("image_url"))
-    return (
-        wanted.withColumn("host", host)
-        .filter(F.col("host").isNotNull())
-        .withColumn("_b", F.pmod(F.xxhash64("image_url"), F.lit(buckets)))
-        .withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= max_per_host)
-        .withColumn("fetch_rank", F.row_number().over(w2))
-        .filter(F.col("fetch_rank") <= max_per_host)
-        .select("image_url", "host", "n_caps", "demand", "fetch_rank")
-    )
+    hosted = wanted.withColumn("host", url_host("image_url")).filter(
+        F.col("host").isNotNull())
+    return group_top_k(
+        hosted, ["host"], [F.desc("demand"), F.asc("image_url")],
+        max_per_host, F.pmod(F.xxhash64("image_url"), F.lit(buckets)),
+        "fetch_rank",
+    ).select("image_url", "host", "n_caps", "demand", "fetch_rank")

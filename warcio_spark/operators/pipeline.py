@@ -307,10 +307,11 @@ def shard_assignment(
 
     Returns (id_col, n_tokens, tokens_before, shard_id).
 
-    Scale shape: the global running total uses plans.prefix — range
-    exchange + per-partition windowed codegen + a #partitions-row
-    offsets aggregate; NO unpartitioned window, no single-partition
-    stage, nothing driver-side that grows with the corpus.
+    Scale shape: the global running total uses plans.prefix.range_rank —
+    range exchange + per-range running-sum window + range offsets
+    broadcast from a counts branch of the same plan; NO unpartitioned
+    window, no data-bearing single-partition stage, nothing driver-side
+    that grows with the corpus.
     """
     if shard_tokens <= 0:
         raise ValueError(f"shard_tokens must be positive, got {shard_tokens}")
@@ -507,29 +508,25 @@ def stratified_quota(docs: DataFrame, quota: int, strata: tuple = ("lang",),
 
     Scale shape (100 TB): a naive per-stratum row_number serializes each
     stratum through one reducer — a 10-language corpus would ride on 10
-    tasks. This is the two-phase exact top-k instead: phase 1 ranks inside
-    (stratum, id-hash bucket) sub-partitions and prunes to ``quota`` each
-    (any partition holds ~1/buckets of a stratum), phase 2 ranks the
-    <= buckets*quota survivors per stratum. Both phases use the SAME total
-    order (md5(salt||id), id), so the composition is exactly the global
-    per-stratum bottom-quota. Output adds ``sample_rank`` (1-based within
-    stratum).
+    tasks. This is ``plans.prefix.group_top_k`` over id-hash buckets in
+    the total order (md5(salt||id), id) instead. Output adds
+    ``sample_rank`` (1-based within stratum).
     """
-    from pyspark.sql import Window
+    return _bottom_quota(docs, quota, strata, buckets, salt, id_col)
+
+
+def _bottom_quota(docs, quota, strata, buckets, salt, id_col):
+    """First ``quota`` rows per stratum in salted-md5 order, ranked as
+    ``sample_rank`` — the sampler shared by stratified_quota and
+    temperature_sample."""
+    from warcio_spark.plans.prefix import group_top_k
 
     vid = F.col(id_col)
     key = F.md5(F.concat(F.lit(salt), vid.cast("string")))
-    w1 = Window.partitionBy(*strata, "_b").orderBy(F.asc("_k"), F.asc(id_col))
-    w2 = Window.partitionBy(*strata).orderBy(F.asc("_k"), F.asc(id_col))
-    return (
-        docs.withColumn("_k", key)
-        .withColumn("_b", F.pmod(F.xxhash64(vid), F.lit(buckets)))
-        .withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= quota)
-        .withColumn("sample_rank", F.row_number().over(w2))
-        .filter(F.col("sample_rank") <= quota)
-        .drop("_k", "_b", "_r1")
-    )
+    return group_top_k(
+        docs.withColumn("_k", key), strata, [F.asc("_k"), F.asc(id_col)],
+        quota, F.pmod(F.xxhash64(vid), F.lit(buckets)), "sample_rank",
+    ).drop("_k")
 
 
 def leakage_safe_split(docs: DataFrame, pairs: DataFrame, ratios: dict,
@@ -639,11 +636,9 @@ def temperature_sample(docs: DataFrame, alpha: float,
     sample_rank (1-based within stratum).
 
     Scale shape: one map-combinable count agg, a broadcast join of the
-    tiny quota table, then the SAME two-phase exact bottom-quota as
-    ``stratified_quota`` (rank inside (stratum, id-hash bucket), prune,
-    re-rank survivors) — no stratum ever rides one reducer."""
-    from pyspark.sql import Window
-
+    tiny quota table, then the SAME bottom-quota as ``stratified_quota``
+    (``plans.prefix.group_top_k`` with a per-stratum quota column) — no
+    stratum ever rides one reducer."""
     if alpha < 0:
         raise ValueError(f"alpha must be >= 0, got {alpha}")
     tw = Window.partitionBy()
@@ -662,21 +657,8 @@ def temperature_sample(docs: DataFrame, alpha: float,
         )
         .select(*strata, "quota")
     )
-    vid = F.col(id_col)
-    key = F.md5(F.concat(F.lit(salt), vid.cast("string")))
-    w1 = Window.partitionBy(*(list(strata) + ["_b"])).orderBy(
-        F.asc("_k"), F.asc(id_col))
-    w2 = Window.partitionBy(*strata).orderBy(F.asc("_k"), F.asc(id_col))
-    return (
-        docs.join(F.broadcast(quotas), list(strata))
-        .withColumn("_k", key)
-        .withColumn("_b", F.pmod(F.xxhash64(vid), F.lit(buckets)))
-        .withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= F.col("quota"))
-        .withColumn("sample_rank", F.row_number().over(w2))
-        .filter(F.col("sample_rank") <= F.col("quota"))
-        .drop("_k", "_b", "_r1")
-    )
+    return _bottom_quota(docs.join(F.broadcast(quotas), list(strata)),
+                         F.col("quota"), strata, buckets, salt, id_col)
 
 
 def pack_sequences(docs: DataFrame, seq_len: int, *, n_shards: int = 256,

@@ -282,12 +282,11 @@ def centroid_outliers(emb: DataFrame, k: int = 10, buckets: int = 16,
     combined down to |groups|×dim — then rebuilt per group with
     array_sort(collect_list(struct)) into a |groups|-row table that
     BROADCASTS back onto the scan; the cosine is the JVM zip_with/aggregate
-    kernel (no Python in the loop). The bottom-k is the two-phase window
-    (per-(group, bucket) prune to k, then final k over <= buckets*k
-    survivors) so a handful of giant groups never serialize through one
-    reducer — same skew discipline as the frontier's windowed top-k.
+    kernel (no Python in the loop). The bottom-k is
+    ``plans.prefix.group_top_k`` over id-hash buckets, so a handful of
+    giant groups never serialize through one reducer.
     """
-    from pyspark.sql import Window
+    from warcio_spark.plans.prefix import group_top_k
 
     grp, vid, vec = F.col(group_col), F.col(id_col), F.col(vec_col)
     means = (
@@ -303,15 +302,7 @@ def centroid_outliers(emb: DataFrame, k: int = 10, buckets: int = 16,
     scored = emb.join(F.broadcast(cents), group_col).select(
         vid, grp, cosine_similarity(vec, F.col("_centroid")).alias("centroid_cosine")
     )
-    w1 = Window.partitionBy(group_col, "_b").orderBy(
-        F.asc("centroid_cosine"), F.asc(id_col))
-    w2 = Window.partitionBy(group_col).orderBy(
-        F.asc("centroid_cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("_b", F.pmod(F.xxhash64(vid), F.lit(buckets)))
-        .withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= k)
-        .withColumn("outlier_rank", F.row_number().over(w2))
-        .filter(F.col("outlier_rank") <= k)
-        .drop("_b", "_r1")
+    return group_top_k(
+        scored, [group_col], [F.asc("centroid_cosine"), F.asc(id_col)], k,
+        F.pmod(F.xxhash64(vid), F.lit(buckets)), "outlier_rank",
     )

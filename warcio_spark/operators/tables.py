@@ -103,7 +103,6 @@ MAX_CODE_BLOCKS_PER_PAGE = 50
 
 _HEADING_RX = r"(?is)<h([1-6])(?:\s[^>]*)?>(.*?)</h[1-6]>"
 _PRE_RX = r"(?is)<pre(?:\s[^>]*)?>(.*?)</pre>"
-_CODE_RX = r"(?is)<code(?:\s[^>]*)?>(.*?)</code>"
 
 
 def extract_headings(pages: DataFrame, url_col: str = "page_url",

@@ -15,10 +15,10 @@ the per-host fetch counts:
 - **max_share** — the single heaviest host's fraction.
 
 Scale shape: one shuffle for the host aggregation; the global rank the
-Gini needs comes from ``plans.prefix.with_global_row_number`` (the
-TeraSort-style two-phase scan — NO unpartitioned window, no
-single-partition stage even at 10^8 hosts); the final fold is a
-map-combinable single-row aggregate.  The rank key breaks count ties by
+Gini needs comes from ``plans.prefix.with_global_row_number`` (sampled
+split points into ``range_rank`` — NO unpartitioned window, no
+data-bearing single-partition stage even at 10^8 hosts); the final fold
+is a map-combinable single-row aggregate.  The rank key breaks count ties by
 host, which leaves the Gini unchanged (equal values commute in the
 rank-weighted sum) while keeping the plan deterministic at any
 parallelism.

@@ -10,10 +10,11 @@ Scale design (10^10-URL frontier):
 - seen-set: exact ``left_anti`` join on a 64-bit canonical-url hash — a
   broadcast join while the seen-set is small, a sort-merge join at scale.
   It is the only seen-set filter, and it runs entirely in the JVM.
-- politeness queue: per-host windowed top-k with **salted pre-pruning**:
-  mega-hosts are first reduced per (host, salt) to ``budget`` rows, so the
-  exact per-host window never sees more than S*budget rows of a hot host —
-  the skew killer that makes host-partitioned windows survive Zipf hosts.
+- politeness queue: per-host windowed top-k with **salted pre-pruning**
+  (``plans.prefix.group_top_k``): mega-hosts are first reduced per
+  (host, salt) to ``budget`` rows, so the exact per-host window never sees
+  more than S*budget rows of a hot host — the skew killer that makes
+  host-partitioned windows survive Zipf hosts.
 - robots: broadcast join on host (the rules table is tiny relative to the
   frontier).
 - determinism: every emit is totally ordered by (priority desc, seq) with
@@ -29,7 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from warcio_spark import functions as WF
-from warcio_spark.plans.graph import persist_into
+from warcio_spark.plans.prefix import group_top_k, range_rank
 
 
 @dataclass(frozen=True)
@@ -109,39 +110,23 @@ def schedule_round(cands: DataFrame, cfg: PolitenessConfig | None = None) -> Dat
     Input columns: url, url_canon, url_hash, host, priority, seq,
     crawl_delay, allowed. Output adds host_rank (1..budget within host) and
     fetch_ts_offset (host_rank-1)*crawl_delay — the token-bucket emission
-    time within the slot. Total order: (priority desc, seq asc).
+    time within the slot. Total order: (priority desc, seq asc, url_canon).
+    The top-budget is ``plans.prefix.group_top_k`` salted by
+    ``url_hash mod salt_buckets``: a Zipf mega-host's exact window sees at
+    most salt_buckets*budget rows.
     """
     cfg = cfg or PolitenessConfig()
-    eligible = cands.filter(F.col("allowed"))
-    budget = cfg.budget_expr(F.col("crawl_delay"))
-
-    # phase 1 — salted pre-prune: cap each (host, salt) slice at the full
-    # budget; keeps the exact per-host window's input <= S*budget rows even
-    # for Zipf mega-hosts, and cannot drop any row the exact top-k keeps
-    salt = F.pmod(F.col("url_hash"), F.lit(cfg.salt_buckets))
-    w_salt = Window.partitionBy("host", "_salt").orderBy(
-        F.desc("priority"), F.asc("seq"), F.asc("url_canon")
+    ranked = group_top_k(
+        cands.filter(F.col("allowed")),
+        ["host"],
+        [F.desc("priority"), F.asc("seq"), F.asc("url_canon")],
+        cfg.budget_expr(F.col("crawl_delay")),
+        F.pmod(F.col("url_hash"), F.lit(cfg.salt_buckets)),
+        "host_rank",
     )
-    pruned = (
-        eligible.withColumn("_salt", salt)
-        .withColumn("_budget", budget)
-        .withColumn("_srn", F.row_number().over(w_salt))
-        .filter(F.col("_srn") <= F.col("_budget"))
-        .drop("_srn", "_salt")
-    )
-
-    # phase 2 — exact per-host top-budget (input now bounded by S*budget)
-    w_host = Window.partitionBy("host").orderBy(
-        F.desc("priority"), F.asc("seq"), F.asc("url_canon")
-    )
-    return (
-        pruned.withColumn("host_rank", F.row_number().over(w_host))
-        .filter(F.col("host_rank") <= F.col("_budget"))
-        .withColumn(
-            "fetch_ts_offset",
-            F.round((F.col("host_rank") - 1) * F.col("crawl_delay"), 3),
-        )
-        .drop("_budget")
+    return ranked.withColumn(
+        "fetch_ts_offset",
+        F.round((F.col("host_rank") - 1) * F.col("crawl_delay"), 3),
     )
 
 
@@ -168,11 +153,10 @@ def sample_order_boundaries(df: DataFrame, partitions: int | None = None,
     return out
 
 
-def fetch_order(scheduled: DataFrame, partitions: int | None = None,
-                boundaries: list | None = None,
+def fetch_order(scheduled: DataFrame, *, boundaries: list | None = None,
                 persist_tracker: list | None = None) -> DataFrame:
-    """Global deterministic fetch sequence for a round — two-phase rank,
-    ONE job, no driver-side count action, no cache.
+    """Global deterministic fetch sequence for a round — ONE job, no
+    driver-side count action, no cache (plans.prefix.range_rank).
 
     A bare ``Window.orderBy`` funnels the whole round through ONE task; at
     10^8 hosts x budget that single partition materializes the entire round.
@@ -180,12 +164,10 @@ def fetch_order(scheduled: DataFrame, partitions: int | None = None,
     EXPRESSION on priority (rid = #boundaries above this priority, so
     higher-priority rows always land in lower-or-equal range ids and equal
     priorities share a range), ranked per range, and offset by the count of
-    all preceding ranges. Per-range counts are a branch of the SAME query
-    that reuses the range exchange (ReusedExchange — verified in
-    tests/test_frontier_parity); the running-sum window that turns counts
-    into offsets is single-partition but over at most ``partitions`` rows.
+    all preceding ranges (a counts branch of the SAME query that reuses
+    the range exchange — verified in tests/test_frontier_parity).
 
-    Identical to the global window for any partitioning/boundaries because
+    Identical to the global window for any boundaries because
     (priority desc, seq, url_canon) is a total order on the deduped round
     and the range id is a deterministic function of priority alone.
     ``boundaries``: ascending priority split points (sample_order_boundaries)
@@ -194,18 +176,12 @@ def fetch_order(scheduled: DataFrame, partitions: int | None = None,
 
     ``persist_tracker``: with a list supplied, the post-shuffle ranged rows
     are persisted so the counts branch and the rank branch share ONE
-    upstream computation (both resolve to the same InMemoryRelation inside
-    the single driving job — no extra action); the persisted DataFrame is
-    appended to the list and the CALLER unpersists it after materializing
-    the result (crawl() and bench.py do). Without it, nothing is persisted
-    — the counts branch recomputes a column-pruned upstream instead; same
-    result, zero cache-lifecycle obligations.
+    upstream computation; the persisted DataFrame is appended to the list
+    and the CALLER unpersists it after materializing the result (crawl()
+    and bench.py do). Without it, nothing is persisted.
     """
-    keys = [F.desc("priority"), F.asc("seq"), F.asc("url_canon")]
-    spark = scheduled.sparkSession
-    p = partitions or spark.sparkContext.defaultParallelism
     if boundaries is None:
-        boundaries = sample_order_boundaries(scheduled, p)
+        boundaries = sample_order_boundaries(scheduled)
     if boundaries:
         # rid 0 = highest priorities; equal priorities -> same rid.
         # NULL priority must land in the LAST range: a bare desc window
@@ -220,21 +196,10 @@ def fetch_order(scheduled: DataFrame, partitions: int | None = None,
         ).otherwise(terms)
     else:
         rid = F.lit(0)
-    ranged = scheduled.withColumn("_range", rid).repartition(
-        max(2, len(boundaries) + 1), "_range"
-    )
-    ranged = persist_into(ranged, persist_tracker)
-    counts = ranged.groupBy("_range").agg(F.count(F.lit(1)).alias("_n"))
-    w_off = Window.orderBy("_range").rowsBetween(Window.unboundedPreceding, -1)
-    offs = counts.select(
-        "_range",
-        F.coalesce(F.sum("_n").over(w_off), F.lit(0)).cast("long").alias("_off"),
-    )
-    w = Window.partitionBy("_range").orderBy(*keys)
-    return (
-        ranged.join(F.broadcast(offs), "_range")
-        .withColumn("fetch_order", (F.row_number().over(w) + F.col("_off")))
-        .drop("_range", "_off")
+    return range_rank(
+        scheduled, rid, len(boundaries) + 1,
+        [F.desc("priority"), F.asc("seq"), F.asc("url_canon")],
+        "fetch_order", persist_tracker=persist_tracker,
     )
 
 

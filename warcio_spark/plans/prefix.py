@@ -1,26 +1,23 @@
-"""Distributed global prefix sums — the scale-correct alternative to an
-unpartitioned ``Window.orderBy`` (which Spark executes on ONE task,
-moving the whole table through a single partition; fine for a 400-row
-frontier, a wall at 10^10 rows).
+"""Skew-safe ranking — the scale-correct alternative to an unpartitioned
+``Window.orderBy`` (which Spark executes on ONE task; fine for a 400-row
+frontier, a wall at 10^10 rows) and to a per-group window over a
+Zipf-skewed key (one mega-host or en-heavy stratum on one reducer).
 
-TeraSort-style two-phase scan: sample order-consistent split points
-(driver-side literals, bounded by parallelism — never by data), bucket
-every row with a pure-codegen boundary expression, take a per-bucket
-running sum under the ONE hash exchange the window itself inserts, and
-lift each bucket by the exclusive total of earlier buckets (a
-#buckets-row aggregate folded back as a literal map). Total: one data
-shuffle, no single-partition stage, no driver-side state that grows
-with the corpus.
+- ``range_rank``: global row number or running sum over an
+  order-consistent range id — one data shuffle, range offsets computed
+  inside the plan, no driver-side action. ``fetch_order`` gives it a
+  priority CASE as the id; ``with_global_cumsum`` /
+  ``with_global_row_number`` give it TeraSort-style sampled split points
+  (driver-side literals bounded by parallelism, never by data).
+- ``group_top_k``: exact per-group top-k through a (group, bucket) prune.
 
-Because the bucket id is a deterministic function of the KEY (not of
-physical partitioning), every job in the plan recomputes it
-consistently — correctness needs no persist; ``persist_tracker`` is a
-pure performance knob that keeps the count/sample/totals passes off
-the source scan.
+A range id is a deterministic function of the KEY, not of physical
+partitioning, so every job in a plan recomputes it consistently —
+correctness needs no persist; ``persist_tracker`` is a performance knob.
 
-Reference scope: the reference library (warcio) has no distributed
-prefix primitive — this underpins the repo's training-pipeline layer
-(shard assignment, ZipNum block numbering), not a warcio surface.
+Reference scope: warcio has no distributed ranking primitive — this
+underpins the crawl scheduler and the training-pipeline layer (shard
+assignment, ZipNum block numbering, quotas), not a warcio surface.
 """
 
 from __future__ import annotations
@@ -30,7 +27,100 @@ from pyspark.sql import functions as F
 
 from warcio_spark.plans.graph import persist_into
 
-_BKT = "__prefix_bucket"
+_RID = "__prefix_range"
+_N = "__prefix_n"
+_OFF = "__prefix_off"
+_B = "__topk_bucket"
+_R = "__topk_rank"
+_K = "__topk_k"
+
+
+def range_rank(
+    df: DataFrame,
+    rid: Column,
+    n_ranges: int,
+    order: list,
+    out_col: str,
+    *,
+    value: Column | None = None,
+    persist_tracker: list | None = None,
+) -> DataFrame:
+    """``df`` plus ``out_col``: the 1-based global row number in
+    (``rid``, ``order``) order or, with ``value``, the inclusive running
+    sum of ``value`` in that order.
+
+    ``rid`` is an integer expression in ``[0, n_ranges)`` that agrees
+    with the order: every row of range r comes before every row of range
+    r+1. Identical to a bare global window for any ``rid`` of that kind
+    when ``order`` is total within a range. ``value`` must be non-NULL
+    (a range's leading NULLs would sum to NULL).
+
+    ``persist_tracker``: with a list supplied, the post-exchange ranged
+    rows are persisted so the counts branch and the rank branch share ONE
+    upstream computation (both resolve to the same InMemoryRelation in
+    the single driving job — no extra action); the CALLER unpersists
+    after materializing the result. Without it the counts branch reuses
+    the range exchange (ReusedExchange); same result, no cache.
+    """
+    ranged = df.withColumn(_RID, rid).repartition(max(2, n_ranges), _RID)
+    ranged = persist_into(ranged, persist_tracker)
+    size = F.count(F.lit(1)) if value is None else F.sum(value)
+    counts = ranged.groupBy(_RID).agg(size.alias(_N))
+    # single-partition, but over at most n_ranges rows
+    w_off = Window.orderBy(_RID).rowsBetween(Window.unboundedPreceding, -1)
+    offs = counts.select(
+        _RID, F.coalesce(F.sum(_N).over(w_off), F.lit(0)).alias(_OFF)
+    )
+    w = Window.partitionBy(_RID).orderBy(*order)
+    local = (
+        F.row_number().over(w) if value is None
+        else F.sum(value).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    )
+    return (
+        ranged.join(F.broadcast(offs), _RID)
+        .withColumn(out_col, local + F.col(_OFF))
+        .drop(_RID, _OFF)
+    )
+
+
+def group_top_k(
+    df: DataFrame,
+    by: list,
+    order: list,
+    k: int | Column,
+    bucket: Column,
+    out_col: str,
+) -> DataFrame:
+    """Rows of ``df`` among the first ``k`` of their group (columns
+    ``by``) in ``order``, plus ``out_col`` = their 1-based rank in the
+    group. ``k`` is an int or a Column constant within each group (a
+    per-host budget, a per-stratum quota).
+
+    Phase 1 ranks inside (group, ``bucket``) slices and keeps each
+    slice's first k; phase 2 ranks the <= #buckets*k survivors per
+    group. Both phases use the SAME order, and a row outside its slice's
+    first k has k rows of its own group ahead of it, so the composition
+    is exactly the single-window per-group top-k — while a mega-group's
+    exact window never sees more than #buckets*k rows. ``order`` must be
+    total within a group (tie-break on a unique key) for the result to
+    be deterministic; ``bucket`` is any expression of the row that
+    spreads a group (e.g. ``pmod(xxhash64(id), 32)``).
+    """
+    df = df.withColumn(_B, bucket)
+    if isinstance(k, Column):
+        df = df.withColumn(_K, k)
+        k = F.col(_K)
+    w_slice = Window.partitionBy(*by, _B).orderBy(*order)
+    w_group = Window.partitionBy(*by).orderBy(*order)
+    return (
+        df.withColumn(_R, F.row_number().over(w_slice))
+        .filter(F.col(_R) <= k)
+        .drop(_R, _B)
+        .withColumn(out_col, F.row_number().over(w_group))
+        .filter(F.col(out_col) <= k)
+        .drop(_K)
+    )
 
 
 def _split_points(df: DataFrame, order_col: str, n: int) -> list:
@@ -64,6 +154,18 @@ def _bucket_expr(order_col: str, pts: list) -> Column:
     return F.size(F.filter(arr, lambda b: b <= key))
 
 
+def _sampled_rank(df, order_col, out_col, value, num_partitions,
+                  persist_tracker):
+    """``range_rank`` over sampled split points of ``order_col``. The
+    source is what gets persisted: the count/sample passes and the final
+    plan all read it."""
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    staged = persist_into(df, persist_tracker)
+    pts = _split_points(staged, order_col, n)
+    return range_rank(staged, _bucket_expr(order_col, pts), len(pts) + 1,
+                      [F.asc(order_col)], out_col, value=value)
+
+
 def with_global_cumsum(
     df: DataFrame,
     order_col: str,
@@ -75,7 +177,7 @@ def with_global_cumsum(
     persist_tracker: list | None = None,
 ) -> DataFrame:
     """``df`` plus ``out_col`` = running sum of ``value_col`` over the
-    total order given by ``order_col``.
+    total order given by ``order_col``; a NULL value counts as 0.
 
     ``order_col`` MUST be a unique, non-null key (doc_id, a packed
     sortable string, ...): ties have no defined running-sum order, and
@@ -87,38 +189,17 @@ def with_global_cumsum(
     first row) — the natural form for "offset where this row starts".
 
     With ``persist_tracker`` (a list, the ``plans.graph.persist_into``
-    contract) the narrow (key, value, bucket)
-    projection is persisted so the count/sample/totals passes and the
+    contract) ``df`` is persisted so the two sampling passes and the
     final plan share one materialization; the CALLER unpersists after
     materializing the result. Without it nothing is persisted — still
-    correct (the bucket id is a pure function of the key), just
-    re-scans the source per pass.
+    correct, just re-scans the source per pass. Building the result runs
+    only the sampling passes (a count and a sample collect).
     """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    staged = persist_into(df, persist_tracker)
-    pts = _split_points(staged, order_col, n)
-    bucketed = staged.withColumn(_BKT, _bucket_expr(order_col, pts))
-    totals = {
-        r[_BKT]: r["t"]
-        for r in bucketed.groupBy(_BKT).agg(F.sum(value_col).alias("t")).collect()
-    }
-    entries: list[Column] = []
-    acc = 0
-    for b in range(len(pts) + 1):
-        entries.extend([F.lit(b), F.lit(acc)])
-        acc += totals.get(b, 0) or 0
-    offset = F.element_at(F.create_map(*entries), F.col(_BKT))
-    # the window's required clustering on the bucket column inserts the
-    # plan's ONE data exchange; no separate repartition needed
-    w = (
-        Window.partitionBy(_BKT)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = offset + F.sum(value_col).over(w)
-    if exclusive:
-        cum = cum - F.col(value_col)
-    return bucketed.withColumn(out_col, cum.cast("long")).drop(_BKT)
+    v = F.coalesce(F.col(value_col), F.lit(0))
+    out = _sampled_rank(df, order_col, out_col, v, num_partitions,
+                        persist_tracker)
+    cum = F.col(out_col) - v if exclusive else F.col(out_col)
+    return out.withColumn(out_col, cum.cast("long"))
 
 
 def with_global_row_number(
@@ -130,16 +211,8 @@ def with_global_row_number(
     persist_tracker: list | None = None,
 ) -> DataFrame:
     """``df`` plus a 0-based dense global row number in ``order_col``
-    order — ``with_global_cumsum`` of the constant 1, exclusive, so the
-    first row is 0. Same uniqueness contract on ``order_col``."""
-    one = "__prefix_one"
-    out = with_global_cumsum(
-        df.withColumn(one, F.lit(1)),
-        order_col,
-        one,
-        out_col,
-        exclusive=True,
-        num_partitions=num_partitions,
-        persist_tracker=persist_tracker,
-    )
-    return out.drop(one)
+    order (the first row is 0). Same uniqueness contract on
+    ``order_col`` and same persist rule as ``with_global_cumsum``."""
+    out = _sampled_rank(df, order_col, out_col, None, num_partitions,
+                        persist_tracker)
+    return out.withColumn(out_col, F.col(out_col) - 1)

@@ -53,17 +53,3 @@ PAGES_SCHEMA = T.StructType(
         T.StructField("lang", T.StringType(), True),
     ]
 )
-
-# crawl frontier rows (plans/frontier.py)
-FRONTIER_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("url_canon", T.StringType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("host", T.StringType(), True),
-        T.StructField("priority", T.DoubleType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("discovered_round", T.IntegerType(), False),
-        T.StructField("seq", T.LongType(), False),
-    ]
-)

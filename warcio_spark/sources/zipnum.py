@@ -255,10 +255,11 @@ def zipnum_block_summary(
     offsets, which only exist once blocks are compressed); single-shard
     clusters produce exactly these blocks.
 
-    The global line numbering runs on plans/prefix (range exchange +
-    per-partition window + partition-count offsets fold) — no
-    unpartitioned window, so the summary of a 10^10-line index is one
-    ordinary shuffle, not a single-task sort."""
+    The global line numbering runs on plans/prefix.range_rank (range
+    exchange + per-range window + range offsets broadcast from a counts
+    branch of the same plan) — no unpartitioned window, so the summary
+    of a 10^10-line index is one ordinary shuffle, not a single-task
+    sort."""
     if lines_per_block <= 0:
         raise ValueError(
             f"lines_per_block must be positive, got {lines_per_block}")
