@@ -8,4 +8,8 @@ murmur3 seen-set, politeness priority queue) is built from joins, windows and
 aggregations that scale to 10^10-URL frontiers.
 """
 
+from warcio_spark import zipguard
+
 __version__ = "0.1.0"
+
+zipguard.install()
