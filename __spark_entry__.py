@@ -932,7 +932,7 @@ def q_retry_after(spark, sf):
 
 
 def q_script_shares(spark, sf):
-    """Unicode-script composition (textstats.script_shares): per-script
+    """Unicode-script composition (textstats.with_script_shares): per-script
     character shares over script-marked chars + main_script with
     first-listed tie-break — the orthographic first split of a
     multilingual corpus that marker-based lang-id cannot give. Java

@@ -539,8 +539,8 @@ def test_cosine_parts_parity_with_expression_fold(spark):
 
     from pyspark.sql import types as T
 
-    from warcio_spark.operators.dedup import (cosine_similarity,
-                                              cosine_similarity_expr)
+    from oracles import cosine_similarity_expr
+    from warcio_spark.operators.dedup import cosine_similarity
 
     rng = random.Random(7)
     rows = []

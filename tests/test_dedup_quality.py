@@ -1,5 +1,6 @@
 """Dedup-operator quality: MinHash-LSH recall vs brute-force n-gram Jaccard
-ground truth on planted near-duplicates; SimHash hamming locality."""
+ground truth on planted near-duplicates; SimHash hamming locality;
+scoped boilerplate-line removal."""
 
 import random
 
@@ -113,3 +114,30 @@ def test_dedup_lines_within_doc_repeat(spark):
     # the repeated line survives only at its first position
     assert row["text_clean"] == "x\ny"
     assert (row["n_lines_in"], row["n_lines_kept"]) == (4, 2)
+
+
+def test_boilerplate_strip_scoped_threshold(spark):
+    """Lines in >= min_docs distinct docs of one scope vanish everywhere;
+    below-threshold lines keep every occurrence; scopes are independent."""
+    from warcio_spark.operators.dedup import boilerplate_strip
+
+    rows = [
+        # source A: 'nav' in 3 docs (boiler), 'rare' in 2 (kept)
+        (1, "A", "nav\nrare\nalpha"),
+        (2, "A", "nav\nrare\nbeta"),
+        (3, "A", "nav\ngamma\nnav"),      # dup line in ONE doc counts once
+        # source B: 'nav' appears in only 1 doc there -> kept
+        (4, "B", "nav\ndelta"),
+        (5, "B", "epsilon"),
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "source", "text"])
+    got = {r.doc_id: r for r in
+           boilerplate_strip(df, min_docs=3).collect()}
+    assert got[1].text_clean == "rare\nalpha"
+    assert got[2].text_clean == "rare\nbeta"
+    assert got[3].text_clean == "gamma"
+    assert (got[3].n_lines_in, got[3].n_lines_kept) == (3, 1)
+    assert got[4].text_clean == "nav\ndelta"   # scope B untouched
+    assert got[5].text_clean == "epsilon"
+    assert all(got[i].n_lines_in == len(rows[i - 1][2].split("\n"))
+               for i in got)

@@ -5,15 +5,7 @@ agnostically); the crawler-side walk of them is engine territory."""
 
 from pyspark.sql import functions as F
 
-from warcio_spark.operators.links import (
-    FEED_SEQ_BASE,
-    MAX_LINKS_PER_PAGE,
-    SITEMAP_SEQ_BASE,
-    feed_entries,
-    feed_links,
-    seeds_from_feeds,
-)
-from warcio_spark.plans.crawl import RECRAWL_SEQ_BASE
+from warcio_spark.operators.links import feed_entries, feed_links
 
 PAGE = (
     "<html><head>"
@@ -114,22 +106,3 @@ def test_feed_entries_malformed_unclosed_item_absorbs_next(spark):
     feeds = spark.createDataFrame([("u", xml)], "url string, xml string")
     rows = feed_entries(feeds).collect()
     assert [(r.pos, r.entry_url) for r in rows] == [(0, "http://a.ex/1")]
-
-
-def test_seeds_from_feeds_namespace_and_priority(spark):
-    feeds = spark.createDataFrame(
-        [("http://site.ex/feed.xml", RSS)], "url string, xml string"
-    )
-    rows = seeds_from_feeds(feeds).collect()
-    assert {r.url for r in rows} == {
-        "http://site.ex/p/1?a=1&b=2", "http://site.ex/p/2"
-    }
-    for r in rows:
-        assert r.priority == 95.0
-        # strictly inside [2^49, 2^49 + 2^46): above the sitemap
-        # namespace, below recrawl — the documented layering
-        assert FEED_SEQ_BASE <= r.seq < FEED_SEQ_BASE + (1 << 46)
-        assert r.seq >= SITEMAP_SEQ_BASE + (1 << 46)
-    assert FEED_SEQ_BASE + (1 << 46) <= RECRAWL_SEQ_BASE
-    assert SITEMAP_SEQ_BASE + (1 << 46) <= FEED_SEQ_BASE
-    assert (1 << 30) * MAX_LINKS_PER_PAGE * 1024 == 1 << 46

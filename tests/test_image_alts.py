@@ -14,8 +14,9 @@ from warcio_spark.operators.links import (
     MAX_IMGS_PER_PAGE,
     extract_image_alts,
     image_caption_table,
-    oracle_resolve,
 )
+
+from oracles import oracle_resolve
 
 
 class _ImgOracle(HTMLParser):

@@ -9,11 +9,6 @@ from pyspark.sql import functions as F
 from warcio_spark.kernels.urls import canonicalize_url
 from warcio_spark.operators.links import (
     extract_outlinks,
-    oracle_extract_hrefs,
-    oracle_http_meta,
-    oracle_page_outlinks,
-    oracle_redirect_candidates,
-    oracle_resolve,
     page_outlinks_fn,
     redirect_candidates,
 )
@@ -25,6 +20,14 @@ from warcio_spark.sources.pages import (
     make_robots_page,
     page_hrefs,
     synth_robots_pages,
+)
+
+from oracles import (
+    oracle_extract_hrefs,
+    oracle_http_meta,
+    oracle_page_outlinks,
+    oracle_redirect_candidates,
+    oracle_resolve,
 )
 
 CFG = PolitenessConfig(slot_seconds=60, default_crawl_delay=5.0,
@@ -126,7 +129,7 @@ def test_sitemap_numeric_refs_documented_gap():
     divergence: the ET oracle decodes them, the engine passes them
     through (sitemaps.org only requires the five named escapes). This
     test pins the gap so a silent behavior change is caught."""
-    from warcio_spark.operators.links import oracle_sitemap_locs
+    from oracles import oracle_sitemap_locs
 
     xml = "<urlset><url><loc>http://h/x?a=1&#38;b=2</loc></url></urlset>"
     assert oracle_sitemap_locs(xml) == ["http://h/x?a=1&b=2"]
@@ -197,7 +200,8 @@ def test_sitemap_locs_match_oracle(spark):
     """Sitemap <loc> extraction (JVM regexp + entity decode) vs an
     independent xml.etree implementation, over urlset and sitemapindex
     documents with entities, whitespace, and non-http locs."""
-    from warcio_spark.operators.links import oracle_sitemap_locs, sitemap_locs
+    from oracles import oracle_sitemap_locs
+    from warcio_spark.operators.links import sitemap_locs
 
     docs = [
         ("http://h0.example.com/sitemap.xml",
@@ -304,7 +308,9 @@ def test_resolution_engine_vs_oracle_randomized(spark):
 def test_seeds_from_sitemaps_feed_frontier(spark):
     """Sitemap-sourced seeds flow through prepare_candidates like any
     frontier input: deterministic seq, junk locs dropped, dedup works."""
-    from warcio_spark.operators.links import seeds_from_sitemaps
+    from warcio_spark.operators.links import (
+        MAX_LINKS_PER_PAGE, SITEMAP_SEQ_BASE, seeds_from_sitemaps)
+    from warcio_spark.plans.crawl import RECRAWL_SEQ_BASE
     from warcio_spark.plans.frontier import prepare_candidates
 
     sm = spark.createDataFrame(
@@ -323,6 +329,12 @@ def test_seeds_from_sitemaps_feed_frontier(spark):
     rows = {(r.url, r.seq) for r in seeds.collect()}
     assert len(rows) == 3  # two from h0's map, one dup from h1's
     assert all(r[1] >= (1 << 48) for r in rows)
+    # a 30-bit source bucket x 64Ki positions spans 2^46 seqs, so the
+    # sitemap band [2^48, 2^48 + 2^46) stays below recrawl: the documented
+    # namespace layering (links < redirects < sitemaps < recrawl)
+    assert all(r[1] < SITEMAP_SEQ_BASE + (1 << 46) for r in rows)
+    assert (1 << 30) * MAX_LINKS_PER_PAGE * 1024 == 1 << 46
+    assert SITEMAP_SEQ_BASE + (1 << 46) <= RECRAWL_SEQ_BASE
     # deterministic across re-evaluation
     assert rows == {(r.url, r.seq) for r in seeds.collect()}
 

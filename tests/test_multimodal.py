@@ -20,17 +20,6 @@ def test_image_features_stub_deterministic(spark):
     assert all(len(v[3]) == 16 for v in a.values())
 
 
-def test_frame_sample_plan_counts(spark):
-    media = mm.synth_media(spark, 30)
-    rows = mm.frame_sample_plan(media, every_n_sec=5).collect()
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r.media_id, []).append(r.frame_ts)
-    for mid, ts in by_id.items():
-        dur = (mid % 30) + 1
-        assert ts == list(range(0, dur + 1, 5))
-
-
 def test_decode_image_optional_codec_contract():
     """Without PIL the decode falls back to the deterministic stub; with it,
     a real 1-pixel PNG decodes to its true dimensions. Exactly one branch
@@ -167,186 +156,3 @@ def test_real_pil_decode_when_installed():
     w, h, c, feat = mm._decode_image_pil(buf.getvalue())
     assert (w, h, c) == (8, 8, 3)
     assert len(feat) == 16 and all(abs(f - 1.0) < 1e-6 for f in feat)
-
-
-def _wav_bytes(rate=8000, channels=1, samples=None, fmt_code=1, bits=16):
-    """Build a RIFF/WAVE via the stdlib wave module (the independent
-    implementation) — or by hand for the malformed variants."""
-    import io
-    import struct
-    import wave
-
-    if fmt_code == 1 and bits == 16:
-        buf = io.BytesIO()
-        w = wave.open(buf, "wb")
-        w.setnchannels(channels)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(struct.pack("<%dh" % len(samples), *samples))
-        w.close()
-        return buf.getvalue()
-    # hand-rolled non-PCM16 header for the rejection paths
-    body = struct.pack("<HHIIHH", fmt_code, channels, rate,
-                       rate * channels * bits // 8,
-                       channels * bits // 8, bits)
-    data = b"\x00" * 8
-    riff = (b"WAVE" + b"fmt " + struct.pack("<I", len(body)) + body
-            + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
-
-
-def test_audio_features_real_wav_decode(spark):
-    """Known PCM16 signals through the Spark plumbing: exact rate/frames/
-    duration, hand-computable rms/peak/zcr, stereo interleave, NULL-row
-    contract for non-audio and malformed blobs."""
-    import numpy as np
-
-    from warcio_spark.operators.multimodal import audio_features
-
-    # square wave +/-16384 at channel 0: rms=0.5, peak=0.5, zcr=1.0
-    sq = [16384, -16384] * 50
-    # constant DC 32767: rms=peak~1.0, zcr=0
-    dc = [32767] * 80
-    # stereo: ch0 alternates sign, ch1 silent -> zcr from ch0 only,
-    # rms over BOTH channels = sqrt(0.25/2)
-    stereo = []
-    for k in range(40):
-        stereo += [16384 if k % 2 == 0 else -16384, 0]
-    rows = [
-        (0, "audio", _wav_bytes(8000, 1, sq)),
-        (1, "audio", _wav_bytes(44100, 1, dc)),
-        (2, "audio", _wav_bytes(16000, 2, stereo)),
-        (3, "audio", b"not a wav at all"),
-        (4, "audio", _wav_bytes(8000, 1, None, fmt_code=3)),  # float PCM
-        (5, "image", _wav_bytes(8000, 1, sq)),  # wrong kind: filtered out
-    ]
-    df = spark.createDataFrame(
-        [(i, k, bytearray(b)) for i, k, b in rows],
-        "media_id long, kind string, data binary")
-    got = {r.media_id: r for r in audio_features(df).collect()}
-    assert set(got) == {0, 1, 2, 3, 4}
-
-    r = got[0]
-    assert (r.sample_rate, r.channels, r.n_frames) == (8000, 1, 100)
-    assert abs(r.duration_s - 100 / 8000) < 1e-12
-    assert abs(r.rms - 0.5) < 1e-9 and abs(r.peak - 0.5) < 1e-9
-    assert r.zcr == 1.0
-
-    r = got[1]
-    assert (r.sample_rate, r.n_frames) == (44100, 80)
-    assert abs(r.rms - 32767 / 32768) < 1e-9 and r.zcr == 0.0
-
-    r = got[2]
-    assert (r.channels, r.n_frames) == (2, 40)
-    assert abs(r.rms - np.sqrt(0.25 / 2)) < 1e-9
-    assert abs(r.zcr - 1.0) < 1e-9
-
-    for bad in (3, 4):
-        r = got[bad]
-        assert r.sample_rate is None and r.rms is None, bad
-
-
-def test_audio_features_stdlib_wave_oracle(spark):
-    """Parse params of generated WAVs match the stdlib wave module, and
-    rms matches a direct numpy computation over the same samples."""
-    import io
-    import wave
-
-    import numpy as np
-
-    from warcio_spark.operators.multimodal import audio_features
-
-    blobs = []
-    for i in range(12):
-        n = 40 + i * 7
-        samples = [((k * 2654435761 + i * 97) % 65536) - 32768
-                   for k in range(n)]
-        # clamp -32768..32767 already by construction
-        ch = 1 + i % 2
-        if ch == 2 and len(samples) % 2:
-            samples.append(0)
-        blobs.append((i, _wav_bytes(8000 + i * 500, ch, samples), samples, ch))
-    df = spark.createDataFrame(
-        [(i, "audio", bytearray(b)) for i, b, _, _ in blobs],
-        "media_id long, kind string, data binary")
-    got = {r.media_id: r for r in audio_features(df).collect()}
-    for i, b, samples, ch in blobs:
-        w = wave.open(io.BytesIO(b))
-        r = got[i]
-        assert r.sample_rate == w.getframerate()
-        assert r.channels == w.getnchannels() == ch
-        assert r.n_frames == w.getnframes()
-        x = np.array(samples, dtype=np.float64) / 32768.0
-        assert abs(r.rms - np.sqrt((x * x).mean())) < 1e-12, i
-        assert abs(r.peak - np.abs(x).max()) < 1e-12, i
-
-
-def _p6(w, h, pixels):
-    """pixels: list of (r,g,b) row-major."""
-    import struct
-    body = b"".join(struct.pack("BBB", *p) for p in pixels)
-    return (b"P6\n%d %d\n255\n" % (w, h)) + body
-
-
-def test_image_thumbnails_block_means_and_roundtrip(spark):
-    import numpy as np
-
-    from warcio_spark.operators.multimodal import (
-        _parse_netpbm,
-        image_thumbnails,
-    )
-
-    # 4x2 gray-as-RGB image, known luma: row0 = 0,64,128,255; row1 = same
-    vals = [0, 64, 128, 255]
-    pixels = [(v, v, v) for v in vals] * 2
-    rows = [
-        (0, "image", _p6(4, 2, pixels)),
-        (1, "image", b"\x89PNG not netpbm"),
-        (2, "audio", _p6(4, 2, pixels)),  # filtered out by kind
-    ]
-    df = spark.createDataFrame(
-        [(i, k, bytearray(b)) for i, k, b in rows],
-        "media_id long, kind string, data binary")
-    got = {r.media_id: r for r in
-           image_thumbnails(df, width=2, height=1).collect()}
-    assert set(got) == {0, 1}
-    r = got[0]
-    assert (r.src_width, r.src_height, r.width, r.height) == (4, 2, 2, 1)
-    # block means: cells are (rows 0-1) x (cols 0-1 / cols 2-3)
-    t = np.frombuffer(bytes(r.thumb)[-2:], dtype=np.uint8)
-    assert list(t) == [round((0 + 64) / 2), round((128 + 255) / 2)]
-    # the blob round-trips through our own decoder
-    parsed = _parse_netpbm(bytes(r.thumb))
-    assert parsed is not None
-    w, h, c, gray = parsed
-    assert (w, h, c) == (2, 1, 1)
-    assert [int(x) for x in gray.flatten()] == list(t)
-    # NULL-row contract
-    assert got[1].thumb is None and got[1].src_width is None
-
-
-def test_image_thumbnails_numpy_oracle(spark):
-    """Deterministic 12x9 image: thumbnail equals a direct numpy block-mean
-    computed from the SAME pixel array the test constructed."""
-    import numpy as np
-
-    from warcio_spark.operators.multimodal import image_thumbnails
-
-    w, h = 12, 9
-    lum = [((x * 37 + y * 101) % 256) for y in range(h) for x in range(w)]
-    pixels = [(v, v, v) for v in lum]
-    df = spark.createDataFrame(
-        [(0, "image", bytearray(_p6(w, h, pixels)))],
-        "media_id long, kind string, data binary")
-    r = image_thumbnails(df, width=4, height=3).collect()[0]
-    arr = np.array(lum, dtype=np.float64).reshape(h, w)
-    # luma of (v,v,v) under BT.601 weights is v (weights sum to 1) within fp
-    ys = np.linspace(0, h, 4, dtype=np.int64)
-    xs = np.linspace(0, w, 5, dtype=np.int64)
-    want = []
-    for i in range(3):
-        for j in range(4):
-            want.append(int(round(arr[ys[i]:ys[i + 1],
-                                      xs[j]:xs[j + 1]].mean())))
-    got = list(np.frombuffer(bytes(r.thumb)[-12:], dtype=np.uint8))
-    assert got == want

@@ -176,85 +176,6 @@ def test_weighted_mix_rejects_bad_weights(spark):
         weighted_mix(docs, {})
 
 
-def test_write_jsonl_shards_roundtrip_and_determinism(spark, tmp_path):
-    """Training-shard sink: shard membership/order == shard_assignment,
-    manifest accounting exact, byte-identical output at different
-    parallelism, native-reader round trip."""
-    import glob
-    import gzip
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from warcio_spark.operators.pipeline import (
-        read_jsonl_shards,
-        shard_assignment,
-        write_jsonl_shards,
-    )
-
-    d = F.col("id")
-    docs = spark.range(120).select(
-        d.alias("doc_id"),
-        F.concat(F.lit("doc "), d.cast("string"), F.lit(" body "),
-                 F.repeat(F.lit("tok "), (d % 17 + 1).cast("int"))
-                 ).alias("text"),
-        (d % 4).cast("string").alias("source"),
-    )
-    out = str(tmp_path / "shards")
-    write_jsonl_shards(docs, out, 120, meta_cols=("source",))
-
-    # read every line back
-    lines = {}
-    for p in sorted(glob.glob(os.path.join(out, "shard-*.jsonl.gz"))):
-        sid = int(os.path.basename(p)[len("shard-"):-len(".jsonl.gz")])
-        with gzip.open(p, "rt", encoding="utf-8") as f:
-            lines[sid] = [json.loads(x) for x in f]
-
-    want = {r["doc_id"]: r for r in shard_assignment(
-        docs, 120).collect()}
-    texts = {r["doc_id"]: (r["text"], r["source"])
-             for r in docs.collect()}
-    # membership + in-shard order + payload fidelity
-    seen_ids = []
-    for sid in sorted(lines):
-        tb = -1
-        for obj in lines[sid]:
-            w = want[obj["id"]]
-            assert w["shard_id"] == sid
-            assert obj["n_tokens"] == w["n_tokens"]
-            assert (obj["text"], obj["source"]) == texts[obj["id"]]
-            assert w["tokens_before"] > tb
-            tb = w["tokens_before"]
-            seen_ids.append(obj["id"])
-    assert sorted(seen_ids) == list(range(120))
-    # key order pinned (loader-visible contract)
-    first = json.loads(gzip.open(
-        sorted(glob.glob(os.path.join(out, "shard-*.jsonl.gz")))[0],
-        "rt", encoding="utf-8").readline())
-    assert list(first) == ["id", "text", "source", "n_tokens"]
-
-    # manifest accounting
-    manifest = json.load(open(os.path.join(out, "shards.json")))
-    assert [m["shard_id"] for m in manifest] == sorted(lines)
-    for m in manifest:
-        assert m["n_docs"] == len(lines[m["shard_id"]])
-        assert m["n_tokens"] == sum(o["n_tokens"] for o in lines[m["shard_id"]])
-
-    # byte-identical at different parallelism
-    out2 = str(tmp_path / "shards2")
-    write_jsonl_shards(docs.repartition(7), out2, 120,
-                       meta_cols=("source",))
-    for p in sorted(glob.glob(os.path.join(out, "shard-*.jsonl.gz"))):
-        q = os.path.join(out2, os.path.basename(p))
-        assert open(p, "rb").read() == open(q, "rb").read(), p
-
-    # native reader round trip
-    back = read_jsonl_shards(spark, out)
-    assert back.count() == 120
-    assert {r.id for r in back.select("id").collect()} == set(range(120))
-
-
 # ---------------------------------------------------------------------------
 # leakage-safe holdout split
 

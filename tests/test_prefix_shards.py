@@ -8,7 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from warcio_spark.operators.pipeline import shard_assignment, shard_sizes
+from warcio_spark.operators.pipeline import shard_assignment
 from warcio_spark.plans.frontier import fetch_order
 from warcio_spark.plans.prefix import (
     _split_points,
@@ -190,7 +190,9 @@ def test_shard_assignment_matches_bruteforce(spark):
     # every shard except possibly the last lands within one max-doc of
     # the budget either side (start-offset packing: a straddling doc
     # counts wholly toward the shard where it starts)
-    sizes = {r["shard_id"]: r["n_tokens"] for r in shard_sizes(out).collect()}
+    sizes = {}
+    for n_tokens, _, sid in got.values():
+        sizes[sid] = sizes.get(sid, 0) + n_tokens
     max_doc = max(n for n, _, _ in expect.values())
     last = max(sizes)
     for sid, tok in sizes.items():

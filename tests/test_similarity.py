@@ -60,35 +60,6 @@ def test_embedding_near_dup_finds_planted(spark):
         assert float(X[a] @ X[b]) >= 0.975
 
 
-def test_knn_join_shape(spark):
-    from warcio_spark.operators.similarity import knn_join
-
-    df, X, dup_of = make_embeddings(spark, n=120)
-    out = knn_join(df, df, k=3, planes=3)
-    rows = out.collect()
-    assert all(1 <= r.rank <= 3 for r in rows)
-    per_left = {}
-    for r in rows:
-        per_left.setdefault(r.lid, []).append(r)
-    assert max(len(v) for v in per_left.values()) <= 3
-    # planted dup is its twin's top bucket-mate
-    top = {r.lid: r.rid for r in rows if r.rank == 1}
-    hits = sum(1 for b, a in dup_of.items() if top.get(b) == a)
-    assert hits >= len(dup_of) * 0.8
-
-
-def test_ivf_topk_runs(spark):
-    from warcio_spark.operators.similarity import ivf_topk
-
-    df, X, _ = make_embeddings(spark, n=200)
-    q = X[0]
-    got = ivf_topk(df.filter("vec_id <> 0"), q, k=5, n_cells=8, nprobe=3,
-                   sample_frac=0.5)
-    rows = got.collect()
-    assert 1 <= len(rows) <= 5
-    assert rows[0].cosine >= rows[-1].cosine
-
-
 def test_sketch_udf_masks_ragged_rows(spark):
     """A NULL or wrong-length embedding must only NULL its own bucket, not
     the whole Arrow batch (regression: np.array over ragged input)."""

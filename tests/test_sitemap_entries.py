@@ -164,35 +164,3 @@ def test_modified_due_when_lastmod_newer(spark):
         [("http://a.example.com/1", "20240215120000")], ["url", "timestamp"])
     got = modified_since_capture(entries, index).collect()
     assert len(got) == 1 and got[0].due is True
-
-
-def test_seeds_from_modified_namespace_and_schema(spark):
-    from warcio_spark.operators.links import (
-        SITEMAP_SEQ_BASE, seeds_from_modified, seeds_from_sitemaps)
-    from warcio_spark.plans.crawl import RECRAWL_SEQ_BASE
-
-    entries = _entries(spark)
-    index = spark.createDataFrame(
-        [("http://a.example.com/1", "20240215120000")],
-        ["url", "timestamp"])
-    got = seeds_from_modified(entries, index).collect()
-    # due: /1 (lastmod March > Feb capture), /3 (never captured);
-    # /2 has unparseable lastmod and a capture -> not due... but /2 was
-    # never captured in THIS index, so it IS due
-    assert sorted(r.url for r in got) == [
-        "http://a.example.com/1", "http://a.example.com/2?x=1&y=2",
-        "http://a.example.com/3"]
-    assert got[0].priority == 95.0
-    assert {c for c in seeds_from_modified(entries, index).columns} == {
-        "url", "priority", "seq"}
-    for r in got:
-        assert SITEMAP_SEQ_BASE <= r.seq < RECRAWL_SEQ_BASE
-    # seqs are distinct per entry and live in the same source bucket as
-    # the plain sitemap seeds (positions differ by convention: block
-    # position here vs loc-tag position in sitemap_locs)
-    assert len({r.seq for r in got}) == len(got)
-    sm = spark.createDataFrame(
-        [("http://a.example.com/sitemap.xml", XML)], ["url", "xml"])
-    plain = [r.seq for r in seeds_from_sitemaps(sm).collect()]
-    bucket = lambda q: (q - SITEMAP_SEQ_BASE) // (64 * 1024)  # noqa: E731
-    assert {bucket(r.seq) for r in got} == {bucket(q) for q in plain}

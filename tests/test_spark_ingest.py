@@ -134,14 +134,12 @@ def test_functions_digest_and_canonicalize(spark):
         "url",
         WF.canonicalize_url("url").alias("canon"),
         WF.sha1_b32("data").alias("digest"),
-        WF.url_host("url").alias("host"),
     ).collect()
     for r in rows:
         assert r.canon == k_canon(r.url)
     assert rows[0].canon == "http://example.com/b?q=1"
     assert rows[1].canon == "https://h.example.com/~user/x%2Fy"
     assert rows[0].digest == digest_b32(b"hello")
-    assert rows[0].host == "example.com"
 
 
 def test_fix_target_uri_expr(spark):

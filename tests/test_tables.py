@@ -1,12 +1,12 @@
 """HTML table extraction (operators/tables.py): cell semantics
 (attributes, case-insensitivity, nested-markup strip, empty cells,
-th/td mix), decoy tags, caps discipline, and the table_shapes census."""
+th/td mix), decoy tags and caps discipline."""
 
 from pyspark.sql import functions as F
 
 from warcio_spark.operators.tables import (extract_code_blocks,
                                             extract_headings,
-                                            extract_tables, table_shapes)
+                                            extract_tables)
 
 
 def _pages(spark, rows):
@@ -58,22 +58,6 @@ def test_extract_tables_caps(spark):
     assert all(r.n_cells == 3 for r in out)
     assert all(r.cells == [f"c{r.row_idx}0", f"c{r.row_idx}1", f"c{r.row_idx}2"]
                for r in out)
-
-
-def test_table_shapes_ragged_census(spark):
-    html = (
-        # table 0: 2x2 regular
-        "<table><tr><td>a</td><td>b</td></tr>"
-        "<tr><td>c</td><td>d</td></tr></table>"
-        # table 1: ragged (2 cells then 1)
-        "<table><tr><td>a</td><td>b</td></tr><tr><td>c</td></tr></table>"
-    )
-    out = {
-        r.table_idx: r
-        for r in table_shapes(_pages(spark, [("u1", html)])).collect()
-    }
-    assert out[0].n_rows == 2 and out[0].n_cols == 2 and not out[0].ragged
-    assert out[1].n_rows == 2 and out[1].n_cols == 2 and out[1].ragged
 
 
 def test_extract_tables_plan_no_shuffle(spark):

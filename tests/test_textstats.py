@@ -158,7 +158,7 @@ def test_script_shares_vs_unicodedata_oracle(spark):
     Han), plus hand-pinned mixed/letterless cases."""
     import unicodedata
 
-    from warcio_spark.operators.textstats import SCRIPTS, script_shares
+    from warcio_spark.operators.textstats import SCRIPTS, with_script_shares
 
     NAME_PREFIX = {
         "Latin": ("LATIN",), "Cyrillic": ("CYRILLIC",),
@@ -205,8 +205,8 @@ def test_script_shares_vs_unicodedata_oracle(spark):
         "helloo Привет",                   # exact 6-6 tie -> first-listed Latin
     ]
     df = spark.createDataFrame([(t,) for t in texts], ["t"])
-    got = {r.t: r.s.asDict() for r in df.select(
-        "t", script_shares("t").alias("s")).collect()}
+    got = {r.t: r.s.asDict() for r in with_script_shares(
+        df, text_col="t").select("t", "s").collect()}
     for t in texts:
         main, shares = oracle(t)
         g = got[t]
@@ -217,13 +217,6 @@ def test_script_shares_vs_unicodedata_oracle(spark):
             for s in SCRIPTS:
                 assert abs(g["share_" + s.lower()] - shares[s]) < 1e-12, (t, s)
     assert got["helloo Привет"]["main_script"] == "Latin"
-
-    # staged DataFrame form == inline column form (same struct, field-exact)
-    from warcio_spark.operators.textstats import with_script_shares
-
-    staged = {r.t: r.s.asDict() for r in with_script_shares(
-        df, text_col="t").select("t", "s").collect()}
-    assert staged == got
 
 
 # --- main-content extraction -------------------------------------------------

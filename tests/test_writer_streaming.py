@@ -1,4 +1,4 @@
-"""WARC writer sink round-trips + Structured Streaming jobs."""
+"""WARC writer sink round-trips."""
 
 import io
 import os
@@ -87,71 +87,6 @@ def test_pair_request_response(spark):
     assert len(rows) == 3
     assert all(r.resp_id is not None for r in rows)
     assert all(r.req_url == r.resp_url for r in rows)
-
-
-def test_streaming_windowed_counts(spark, tmp_path):
-    from warcio_spark.streaming.jobs import read_pages_stream, run_to_memory, windowed_page_counts
-
-    src = str(tmp_path / "pages")
-    synth_pages(spark, 400, partitions=4).write.parquet(src)
-    stream = read_pages_stream(spark, src, max_files_per_trigger=2)
-    # complete mode: append would hold back windows not yet past the
-    # watermark, and the drain ends before the watermark passes them
-    run_to_memory(
-        windowed_page_counts(stream), "wpc", str(tmp_path / "ck"), "complete"
-    )
-    got = spark.sql("select * from wpc").collect()
-    # batch equivalence
-    want = (
-        spark.read.parquet(src)
-        .groupBy(F.window("warc_ts", "1 hour").alias("w"), "lang")
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-        .select(F.col("w.start").alias("hour_start"), "lang", "n_pages")
-        .collect()
-    )
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-
-
-def test_streaming_pages_to_candidates_incremental(spark, tmp_path):
-    from warcio_spark.streaming.jobs import stream_pages_to_candidates
-
-    src = str(tmp_path / "pages2")
-    out = str(tmp_path / "cands")
-    ck = str(tmp_path / "ck2")
-    synth_pages(spark, 100, partitions=2).write.parquet(src)
-    stream_pages_to_candidates(spark, src, out, ck)
-    n1 = spark.read.parquet(out).count()
-    assert n1 == 100
-    # append more input; resumed stream processes ONLY the new files
-    synth_pages(spark, 50, partitions=1).write.mode("append").parquet(src)
-    stream_pages_to_candidates(spark, src, out, ck)
-    n2 = spark.read.parquet(out).count()
-    assert n2 == n1 + 50
-    cols = set(spark.read.parquet(out).columns)
-    assert {"url", "url_canon", "url_hash", "host", "priority", "seq"} <= cols
-
-
-def test_streaming_token_bucket_state(spark, tmp_path):
-    from warcio_spark.streaming.jobs import (
-        host_token_bucket_stream,
-        read_pages_stream,
-        run_to_memory,
-    )
-
-    src = str(tmp_path / "pages3")
-    synth_pages(spark, 300, partitions=3).write.parquet(src)
-    stream = read_pages_stream(spark, src)
-    run_to_memory(
-        host_token_bucket_stream(stream, budget_per_batch=3),
-        "bucket", str(tmp_path / "ck3"), "append",
-    )
-    got = spark.sql("select * from bucket").collect()
-    assert len(got) == 300
-    per_host_admitted = {}
-    for r in got:
-        if r.admitted:
-            per_host_admitted[r.host] = per_host_admitted.get(r.host, 0) + 1
-    assert per_host_admitted and max(per_host_admitted.values()) <= 3
 
 
 def test_substitute_revisits_roundtrip_through_reference(spark, warcio, tmp_path):

@@ -9,7 +9,7 @@ Everything here is a drop-in for ``pyspark.sql.functions`` style usage:
 JVM expressions (whole-stage codegen, no Python):
     header_get, statuscode, fix_target_uri, surt_key, strip_tracking_params...
 pandas UDFs (Arrow batch transfer, per-cell kernels):
-    sha1_b32, extract_content, decode_text, canonicalize_url, url_host...
+    sha1_b32, extract_content, decode_text, canonicalize_url...
 """
 
 from __future__ import annotations
@@ -221,12 +221,6 @@ def canonicalize_url(url: pd.Series) -> pd.Series:
     return _map_series(url, _urls.canonicalize_url)
 
 
-@F.pandas_udf(T.StringType())
-def url_host(url: pd.Series) -> pd.Series:
-    """Lowercased hostname for politeness grouping."""
-    return _map_series(url, _urls.url_host)
-
-
 # charset label inside a meta tag's attribute soup (covers both
 # <meta charset=X> and <meta http-equiv=content-type content="...charset=X">
 # — the label is what matters, not which attribute carried it) and inside a
@@ -387,7 +381,8 @@ def url_host_expr(url) -> Column:
     """JVM-side host extraction for canonicalized urls: lower(try_parse_url)
     with IPv6 brackets stripped — codegen, no Python hop. Only safe AFTER
     canonicalization (try_parse_url returns NULL for space-containing urls,
-    which canonicalization has already %-encoded)."""
+    which canonicalization has already %-encoded). Raw outlinks go to
+    ``plans.graph.url_host`` instead, whose regex needs no encoded url."""
     host = F.lower(F.try_parse_url(_c(url), F.lit("HOST")))
     return F.regexp_replace(host, r"^\[(.*)\]$", r"$1")
 

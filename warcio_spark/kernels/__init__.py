@@ -25,7 +25,6 @@ from .parse import (  # noqa: F401
 )
 from .payload import (  # noqa: F401
     decode_content,
-    dechunk,
     extract_content,
     gzip_member_compress,
     is_gzip,

@@ -137,11 +137,6 @@ def dechunk_ex(data: bytes):
     return bytes(out), True, True
 
 
-def dechunk(data: bytes):
-    decoded, was_chunked, _ = dechunk_ex(data)
-    return decoded, was_chunked
-
-
 def extract_content_ex(body: bytes, content_encoding, transfer_encoding):
     """The reference's content_stream() as one function over a full body.
 

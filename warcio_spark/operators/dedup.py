@@ -13,7 +13,7 @@ Five strategies, cheapest-first, all shuffle-conscious:
 
 The revisit-record emit of the reference (same payload digest => revisit,
 warcio/recordbuilder.py:62-80) is exactly exact_dedup on the payload digest:
-see ``revisit_candidates``.
+see ``substitute_revisits``.
 """
 
 from __future__ import annotations
@@ -27,7 +27,6 @@ from pyspark.sql import types as T
 from warcio_spark.operators.textstats import tokens
 from warcio_spark.plans.graph import (
     connected_components,
-    materialize,
     persist_into,
 )
 
@@ -92,23 +91,6 @@ def dedup_lines(df: DataFrame, text_col: str = "text",
         ).alias("text_clean"),
     )
     return agg.select(id_col, "text_clean", "n_lines_in", "n_lines_kept")
-
-
-def revisit_candidates(records: DataFrame, digest_col: str = "payload_digest",
-                       order_col: str = "warc_ts") -> DataFrame:
-    """The reference's revisit semantics as a dedup join: every record whose
-    payload digest matches an earlier capture points at the original
-    (J2, warcio/recordbuilder.py:62-80)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(digest_col).orderBy(order_col)
-    return (
-        records.withColumn("_rn", F.row_number().over(w))
-        .withColumn("refers_to_url", F.first("url").over(w))
-        .withColumn("refers_to_ts", F.first(order_col).over(w))
-        .filter(F.col("_rn") > 1)
-        .drop("_rn")
-    )
 
 
 def substitute_revisits(records: DataFrame) -> DataFrame:
@@ -626,20 +608,6 @@ def cosine_similarity(a: Column, b: Column, decimals: int = 6) -> Column:
     )
 
 
-def cosine_similarity_expr(a: Column, b: Column, decimals: int = 6) -> Column:
-    """The pure-expression cosine (zip_with + aggregate left fold) — kept
-    as the parity oracle for ``cosine_similarity`` and for callers that
-    must avoid a Python worker round-trip."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
-    return F.round(dot / F.greatest(na * nb, F.lit(1e-12)), decimals)
-
-
 def embedding_near_dup(emb: DataFrame, threshold: float = 0.95,
                        id_col: str = "vec_id", vec_col: str = "embedding",
                        planes: int = 8, reps: int = 4, seed: int = 1337,
@@ -765,32 +733,6 @@ def dedup_keep_best(df: DataFrame, pairs: DataFrame, score_col: str,
         .select(F.col("doc_id").alias(id_col))
     )
     return df.join(losers, id_col, "left_anti")
-
-
-def minhash_dedup_corpus(df: DataFrame, threshold: float = 0.8,
-                         id_col: str = "doc_id", text_col: str = "text",
-                         num_perm: int = 64, bands: int = 16,
-                         shingle_n: int = 3) -> DataFrame:
-    """End-to-end near-dup removal: MinHash-LSH candidates -> exact
-    Jaccard verify -> connected components over the verified pairs ->
-    keep the minimum-id doc per cluster. This is the full shape of a
-    production near-dedup pass (pair relations are not transitive;
-    clustering is what makes "no kept doc has a near-dup in the corpus"
-    actually hold).
-
-    Lifecycle: the pair table is materialized ONCE (checkpoint) so the
-    shingle cache can be freed before the caller's plan runs. That
-    checkpoint and the cluster rounds go through
-    ``plans.graph.materialize``: reliable when the session has a
-    checkpoint directory (``sparkContext.setCheckpointDir``),
-    executor-local otherwise."""
-    tracker: list = []
-    pairs = minhash_dedup(df, threshold, id_col, text_col, num_perm,
-                          bands, shingle_n, persist_tracker=tracker)
-    pairs, _ = materialize(pairs)
-    for cached in tracker:
-        cached.unpersist()
-    return dedup_by_pairs(df, pairs, id_col)
 
 
 def boilerplate_strip(df: DataFrame, min_docs: int = 3,

@@ -12,7 +12,7 @@ At 100 TB this runs as a map-only stage over fetched partitions — no
 shuffle until the frontier's own dedup.
 
 Resolution contract (mirrored exactly by the oracle extractor in
-tests/test_links.py):
+tests/oracles.py):
   * fragments are stripped first; an empty remainder is dropped
   * absolute http:// / https:// (lowercase scheme) pass through
   * other explicit schemes (mailto:, javascript:, HTTPS:// uppercase...)
@@ -395,7 +395,7 @@ def declared_lang(text: Column, headers: Column | None = None) -> Column:
     Tags are trimmed, lowercased, gated to the plausible grammar
     ``[a-z]{1,8}(-[a-z0-9]{1,8})*`` (junk -> NULL). A declaration is a
     PRIOR, not a measurement — compose with ``textstats.lang_scores`` /
-    ``script_shares`` (measured signals) the way CLD-style pipelines do.
+    ``with_script_shares`` (measured signals) the way CLD-style pipelines do.
     Pure codegen over the decoded text + headers array."""
     blob = F.regexp_extract(text, _HTML_TAG_RX, 1)
     html_lang = _norm_lang_tag(_attr_value(blob, "lang|xml:lang"))
@@ -753,49 +753,6 @@ def modified_since_capture(entries: DataFrame,
     )
 
 
-def seeds_from_modified(entries: DataFrame, index: DataFrame,
-                        priority: float = 95.0) -> DataFrame:
-    """Sitemap-lastmod recrawl hints as frontier candidates (url,
-    priority, seq): ``modified_since_capture``'s due rows in the
-    sitemap seq namespace (same 30-bit source bucket x 64Ki positions
-    as ``seeds_from_sitemaps`` — the hint IS a sitemap discovery, just
-    filtered by the change claim), at a higher default priority than
-    plain sitemap seeds: the site explicitly claims these changed.
-    Compose into ``crawl(extra_seeds=...)`` or union with
-    ``plans.crawl.recrawl_due`` output — both feed
-    ``prepare_candidates``."""
-    due = modified_since_capture(entries, index).filter(
-        F.col("due") & (F.col("pos") < MAX_LINKS_PER_PAGE * 1024))
-    s = F.pmod(F.xxhash64("src_url"), F.lit(1 << 30))
-    return due.select(
-        F.col("loc").alias("url"),
-        F.lit(float(priority)).alias("priority"),
-        (
-            F.lit(SITEMAP_SEQ_BASE)
-            + s * (MAX_LINKS_PER_PAGE * 1024)
-            + F.col("pos")
-        ).alias("seq"),
-    )
-
-
-def oracle_sitemap_locs(xml: str) -> list:
-    """Independent implementation: xml.etree over the sitemap namespace(s),
-    falling back to a namespace-agnostic local-name scan."""
-    import xml.etree.ElementTree as ET
-
-    try:
-        root = ET.fromstring(xml)
-    except ET.ParseError:
-        return []
-    out = []
-    for el in root.iter():
-        if el.tag.rsplit("}", 1)[-1] == "loc" and el.text:
-            t = el.text.strip()
-            if t.startswith(("http://", "https://")):
-                out.append(t)
-    return out
-
-
 def page_outlinks_fn(pages: DataFrame, respect_nofollow: bool = False):
     """outlinks_fn for plans.crawl.crawl(): fetch each scheduled url from
     the pages corpus and feed its REAL extracted links back to the
@@ -926,200 +883,6 @@ def page_outlinks_fn(pages: DataFrame, respect_nofollow: bool = False):
         )
 
     return fn
-
-
-def oracle_page_outlinks(page: dict, src_seq: int,
-                         respect_nofollow: bool = False) -> list:
-    """The oracle-crawler twin of ``page_outlinks_fn`` for one fetched page
-    dict (url, text): extract + resolve hrefs with an INDEPENDENT
-    implementation (html.parser + explicit resolution), then assign the
-    same deterministic priority/seq. Used by crawl-parity tests.
-
-    ``respect_nofollow=True`` mirrors the engine's directive-aware mode:
-    pos counts ALL anchor tags, rel-nofollow anchors are dropped, and a
-    page-level robots nofollow (``oracle_robots_nofollow``) yields no
-    links."""
-    out = []
-    s = src_seq % (1 << 40)
-    if respect_nofollow:
-        if oracle_robots_nofollow(page["text"]):
-            return []
-        anchors = oracle_extract_anchors(page["text"])[:MAX_LINKS_PER_PAGE]
-        entries = [
-            (pos, href)
-            for pos, (href, rel) in enumerate(anchors)
-            if href is not None and "nofollow" not in rel.lower().split()
-        ]
-    else:
-        entries = list(enumerate(
-            oracle_extract_hrefs(page["text"])[:MAX_LINKS_PER_PAGE]
-        ))
-    for pos, href in entries:
-        resolved = oracle_resolve(page["url"], href)
-        if resolved is None:
-            continue
-        out.append(
-            {
-                "url": resolved,
-                "priority": ((s * 37 + pos * 11) % 1000) / 10.0,
-                "seq": OUTLINK_SEQ_BASE + s * MAX_LINKS_PER_PAGE + pos,
-            }
-        )
-    return out
-
-
-def oracle_extract_anchors(text: str) -> list:
-    """Every anchor tag in document order as (href_or_None, rel_string) —
-    the independent (html.parser) twin of the ``_A_BLOB_RX`` scan: one
-    entry per ``<a>`` tag whether or not it carries an href."""
-    from html.parser import HTMLParser
-
-    found = []
-
-    class _A(HTMLParser):
-        def _tag(self, tag, attrs):
-            if tag == "a":
-                d = {}
-                for name, value in attrs:
-                    d.setdefault(name, value)
-                found.append((d.get("href"), d.get("rel") or ""))
-
-        handle_starttag = _tag
-
-        def handle_startendtag(self, tag, attrs):
-            self._tag(tag, attrs)
-
-    p = _A()
-    p.feed(text or "")
-    return found
-
-
-def oracle_robots_nofollow(text: str) -> bool:
-    """Independent twin of ``robots_directives(...)['nofollow']``: the
-    first MAX_METAS_PER_PAGE <meta> tags before the first </head> (whole
-    document when none), name=robots (case-insensitive, trimmed),
-    comma/space-separated tokens, 'none' alias."""
-    from html.parser import HTMLParser
-
-    state = {"metas": 0, "done": False, "nofollow": False}
-
-    class _M(HTMLParser):
-        def handle_starttag(self, tag, attrs):
-            if state["done"] or tag != "meta":
-                return
-            if state["metas"] >= MAX_METAS_PER_PAGE:
-                return
-            state["metas"] += 1
-            d = {}
-            for name, value in attrs:
-                d.setdefault(name, value)
-            if (d.get("name") or "").strip().lower() != "robots":
-                return
-            import re as _re
-
-            tokens = [t for t in
-                      _re.split(r"[\s,]+", (d.get("content") or "").lower())
-                      if t]
-            if "nofollow" in tokens or "none" in tokens:
-                state["nofollow"] = True
-
-        handle_startendtag = handle_starttag
-
-        def handle_endtag(self, tag):
-            if tag == "head":
-                state["done"] = True
-
-    p = _M()
-    p.feed(text or "")
-    return state["nofollow"]
-
-
-def oracle_http_meta(html) -> tuple:
-    """(status, location) parsed independently of the engine kernel —
-    plain regex over the raw header block."""
-    import re
-
-    head = bytes(html).split(b"\r\n\r\n", 1)[0].decode("iso-8859-1")
-    m = re.match(r"^HTTP/\d\.\d (\d{3})", head)
-    status = int(m.group(1)) if m else None
-    loc = None
-    for line in head.split("\r\n")[1:]:
-        if line.lower().startswith("location:"):
-            loc = line.split(":", 1)[1].strip()
-            break
-    return status, loc
-
-
-def oracle_redirect_candidates(page: dict, src_seq: int) -> list:
-    """The oracle twin of redirect_candidates for one fetched page dict
-    (url, html). Mirrors the loader's case-sensitive scheme gate: pages
-    fetched via a non-http(s)-lowercase url never parse http metadata."""
-    if not (page["url"] or "").startswith(("http:", "https:")):
-        return []
-    status, loc = oracle_http_meta(page["html"])
-    if status is None or not 300 <= status <= 399 or loc is None:
-        return []
-    import re
-
-    resolved = oracle_resolve(page["url"], re.split("#", loc, 1)[0])
-    if resolved is None:
-        return []
-    s = src_seq % (1 << 40)
-    return [
-        {
-            "url": resolved,
-            "priority": ((s * 41 + 7) % 1000) / 10.0,
-            "seq": REDIRECT_SEQ_BASE + s,
-        }
-    ]
-
-
-def oracle_extract_hrefs(text: str) -> list:
-    """Anchor hrefs in document order via Python's html.parser — the
-    independent implementation the engine's regex is validated against."""
-    from html.parser import HTMLParser
-
-    found = []
-
-    class _A(HTMLParser):
-        def handle_starttag(self, tag, attrs):
-            if tag == "a":
-                for name, value in attrs:
-                    if name == "href" and value is not None:
-                        found.append(value)
-                        break
-
-    p = _A()
-    p.feed(text or "")
-    return found
-
-
-def oracle_resolve(base: str, href: str):
-    """The resolution contract, independently implemented (no urljoin: its
-    RFC-3986 merge is the SPEC both sides approximate, but the engine's
-    JVM expressions define the contract — e.g. relative refs against a
-    non-http(s)-lowercase base are dropped, not resolved)."""
-    import re
-
-    href = re.split("#", href, 1)[0].strip()
-    if not href:
-        return None
-    m = re.match(r"^(https?)://([^/?#]+)(.*)$", base or "")
-    if re.match(r"^[A-Za-z][A-Za-z0-9+.\-]*:", href):
-        return href if re.match(r"^https?://", href) else None
-    if m is None:
-        return None
-    scheme, authority, rest = m.group(1), m.group(2), m.group(3)
-    origin = "{0}://{1}".format(scheme, authority)
-    path = re.sub(r"[#?].*$", "", rest)
-    if href.startswith("//"):
-        return scheme + ":" + href
-    if href.startswith("/"):
-        return origin + href
-    if href.startswith("?"):
-        return origin + path + href
-    base_dir = "/" if path == "" else re.sub(r"[^/]*$", "", path)
-    return origin + base_dir + href
 
 
 # anchor regex = _HREF_RX + "consume the rest of the opening tag, then
@@ -1493,34 +1256,6 @@ def feed_entries(feeds: DataFrame, url_col: str = "url",
             title.alias("entry_title"),
         )
         .filter(F.col("entry_url").rlike("^https?://"))
-    )
-
-
-FEED_SEQ_BASE = 1 << 49
-
-
-def seeds_from_feeds(feeds: DataFrame, url_col: str = "url",
-                     xml_col: str = "xml",
-                     priority: float = 95.0) -> DataFrame:
-    """Feed entries as frontier seed candidates (url, priority, seq) —
-    the freshness discovery channel feeding crawl(). Seq namespace
-    [2^49, 2^49 + 2^46): disjoint from links (< 2^47), redirects
-    (2^47..), sitemaps (2^48..) and below recrawl (2^50) — the
-    documented namespace layering. Default priority ABOVE sitemaps
-    (95 vs 90): a feed entry is the site announcing new content now,
-    the strongest freshness signal a polite crawler gets. Same 30-bit
-    source bucket x 64Ki positions as seeds_from_sitemaps; feed entry
-    positions are already capped far below the bucket size."""
-    entries = feed_entries(feeds, url_col=url_col, xml_col=xml_col)
-    s = F.pmod(F.xxhash64("src_url"), F.lit(1 << 30))
-    return entries.select(
-        F.col("entry_url").alias("url"),
-        F.lit(float(priority)).alias("priority"),
-        (
-            F.lit(FEED_SEQ_BASE)
-            + s * (MAX_LINKS_PER_PAGE * 1024)
-            + F.col("pos")
-        ).alias("seq"),
     )
 
 

@@ -214,20 +214,6 @@ def image_features(media: DataFrame, batch_hint: int = 256,
     )
 
 
-def frame_sample_plan(media: DataFrame, every_n_sec: int = 5) -> DataFrame:
-    """Video frame-sampling *plan*: computes the frame timestamps to extract
-    per video from metadata (duration), JVM-side; the actual frame decode is
-    the stubbed codec. Emitting the plan as rows keeps the decode stage an
-    embarrassingly parallel mapInPandas over (media_id, frame_ts)."""
-    dur = F.coalesce(F.element_at("meta", "duration_sec").cast("double"), F.lit(0.0))
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", F.explode(
-            F.sequence(F.lit(0), F.floor(dur).cast("int"), F.lit(every_n_sec))
-        ).alias("frame_ts"))
-    )
-
-
 def synth_media(spark, n: int, partitions: int = 4) -> DataFrame:
     """Deterministic fake media table for tests."""
     base = spark.range(0, n, 1, partitions)
@@ -243,172 +229,4 @@ def synth_media(spark, n: int, partitions: int = 4) -> DataFrame:
         F.create_map(
             F.lit("duration_sec"), (F.pmod("id", F.lit(30)) + 1).cast("string")
         ).alias("meta"),
-    )
-
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("channels", T.IntegerType(), True),
-        T.StructField("n_frames", T.LongType(), True),
-        T.StructField("duration_s", T.DoubleType(), True),
-        T.StructField("rms", T.DoubleType(), True),
-        T.StructField("peak", T.DoubleType(), True),
-        T.StructField("zcr", T.DoubleType(), True),
-    ]
-)
-
-
-def _decode_wav_pcm16(data: bytes):
-    """Dependency-free REAL decode of RIFF/WAVE PCM16 (the netpbm move,
-    audio edition): walk the chunk list, take the first ``fmt `` (must be
-    format 1 = integer PCM, 16-bit) and ``data`` chunks, view the payload
-    as int16 via numpy. Returns (sample_rate, channels, n_frames,
-    duration_s, rms, peak, zcr) with amplitudes normalized to [-1, 1] and
-    zcr = fraction of consecutive channel-0 samples changing sign.
-    Non-WAV / non-PCM16 / malformed blobs return None — the NULL-row
-    contract shared with the image codecs."""
-    if data is None or len(data) < 12 or data[:4] != b"RIFF" \
-            or data[8:12] != b"WAVE":
-        return None
-    try:
-        fmt = payload = None
-        i = 12
-        while i + 8 <= len(data):
-            cid = data[i:i + 4]
-            size = int.from_bytes(data[i + 4:i + 8], "little")
-            body = data[i + 8:i + 8 + size]
-            if cid == b"fmt " and fmt is None:
-                fmt = body
-            elif cid == b"data" and payload is None:
-                payload = body
-            i += 8 + size + (size & 1)  # chunks are word-aligned
-        if fmt is None or payload is None or len(fmt) < 16:
-            return None
-        audio_format = int.from_bytes(fmt[0:2], "little")
-        channels = int.from_bytes(fmt[2:4], "little")
-        rate = int.from_bytes(fmt[4:8], "little")
-        bits = int.from_bytes(fmt[14:16], "little")
-        if audio_format != 1 or bits != 16 or channels <= 0 or rate <= 0:
-            return None
-        n = len(payload) // (2 * channels) * channels
-        if n == 0:
-            return None
-        samples = np.frombuffer(payload, dtype="<i2", count=n)
-        x = samples.astype(np.float64) / 32768.0
-        frames = n // channels
-        ch0 = x[::channels]
-        signs = np.sign(ch0)
-        nz = signs != 0
-        s = signs[nz]
-        zcr = float((s[1:] != s[:-1]).mean()) if s.size > 1 else 0.0
-        return (
-            rate, channels, frames, frames / rate,
-            float(np.sqrt((x * x).mean())), float(np.abs(x).max()), zcr,
-        )
-    except (ValueError, IndexError):
-        return None
-
-
-def audio_features(media: DataFrame) -> DataFrame:
-    """Decode + feature-extract audio via mapInPandas — the audio twin of
-    :func:`image_features`: JVM-side kind filter BEFORE the Arrow hop
-    (image/video bytes never cross), Arrow batches of binary cells into
-    the dependency-free PCM16 decoder, one row per blob with the NULL-row
-    contract for undecodable payloads."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf["media_id"], pdf["data"]):
-                d = _decode_wav_pcm16(
-                    bytes(data) if data is not None else None)
-                if d is None:
-                    rows.append({"media_id": mid, "sample_rate": None,
-                                 "channels": None, "n_frames": None,
-                                 "duration_s": None, "rms": None,
-                                 "peak": None, "zcr": None})
-                else:
-                    rate, ch, frames, dur, rms, peak, zcr = d
-                    rows.append({"media_id": mid, "sample_rate": rate,
-                                 "channels": ch, "n_frames": frames,
-                                 "duration_s": dur, "rms": rms,
-                                 "peak": peak, "zcr": zcr})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-            )
-
-    return (
-        media.filter(F.col("kind") == "audio")
-        .select("media_id", "data")
-        .mapInPandas(run, AUDIO_FEATURES_SCHEMA)
-    )
-
-
-THUMBNAIL_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("src_width", T.IntegerType(), True),
-        T.StructField("src_height", T.IntegerType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("thumb", T.BinaryType(), True),
-    ]
-)
-
-
-def _block_mean_resize(gray: "np.ndarray", tw: int, th: int) -> "np.ndarray":
-    """(h, w) float grayscale -> (th, tw) uint8 by per-cell block means —
-    the exact generalization of the 4x4 luma grid to arbitrary targets
-    (identical cell geometry: linspace edges, empty-guard)."""
-    h, w = gray.shape
-    ys = np.linspace(0, h, th + 1, dtype=np.int64)
-    xs = np.linspace(0, w, tw + 1, dtype=np.int64)
-    out = np.empty((th, tw), dtype=np.float64)
-    for i in range(th):
-        for j in range(tw):
-            cell = gray[ys[i]:max(ys[i + 1], ys[i] + 1),
-                        xs[j]:max(xs[j + 1], xs[j] + 1)]
-            out[i, j] = cell.mean()
-    return np.clip(np.rint(out), 0, 255).astype(np.uint8)
-
-
-def image_thumbnails(media: DataFrame, width: int = 16,
-                     height: int = 16) -> DataFrame:
-    """The resize stage of the multimodal ladder: decode (netpbm codec),
-    block-mean downsample to (width, height), and re-emit each thumbnail
-    as a BINARY P5 netpbm blob — round-trippable through this module's own
-    decoder, so downstream feature extraction composes with no new format.
-    Same Arrow shape as image_features (JVM kind filter first, mapInPandas
-    batches, NULL-row contract for undecodable blobs)."""
-    if width <= 0 or height <= 0:
-        raise ValueError("thumbnail dims must be positive, got "
-                         f"{width}x{height}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf["media_id"], pdf["data"]):
-                parsed = _parse_netpbm(
-                    bytes(data) if data is not None else b"")
-                if parsed is None:
-                    rows.append({"media_id": mid, "src_width": None,
-                                 "src_height": None, "width": None,
-                                 "height": None, "thumb": None})
-                    continue
-                w, h, _c, gray = parsed
-                t = _block_mean_resize(gray, width, height)
-                blob = (b"P5\n%d %d\n255\n" % (width, height)) + t.tobytes()
-                rows.append({"media_id": mid, "src_width": w,
-                             "src_height": h, "width": width,
-                             "height": height, "thumb": blob})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in THUMBNAIL_SCHEMA.fields]
-            )
-
-    return (
-        media.filter(F.col("kind") == "image")
-        .select("media_id", "data")
-        .mapInPandas(run, THUMBNAIL_SCHEMA)
     )

@@ -330,17 +330,6 @@ def shard_assignment(
     )
 
 
-def shard_sizes(assignment: DataFrame) -> DataFrame:
-    """Per-shard doc and token totals for a ``shard_assignment`` result —
-    the balance report (every full shard lands within one max-doc-length
-    of shard_tokens either side, since a straddling doc counts wholly
-    toward the shard where it starts). One partial-aggregated groupBy."""
-    return assignment.groupBy("shard_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-    )
-
-
 def weighted_mix(
     docs: DataFrame,
     weights: dict,
@@ -377,122 +366,6 @@ def weighted_mix(
                            F.col(id_col).cast("string"))), 1, 6),
     )
     return docs.filter(thr.isNotNull() & (hex7 < thr))
-
-
-SHARD_MANIFEST_NAME = "shards.json"
-
-
-def write_jsonl_shards(
-    docs: DataFrame,
-    out_dir: str,
-    shard_tokens: int,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    meta_cols: tuple = (),
-    persist_tracker: list | None = None,
-) -> None:
-    """Materialize a cleaned corpus as token-budgeted training shards:
-    ``shard-{id:05d}.jsonl.gz`` files (one json object per document, in
-    corpus order) plus a ``shards.json`` manifest — the output face of
-    the pipeline (clean -> dedup -> mix -> shard -> WRITE), the sharded-
-    JSONL layout pretraining loaders stream.
-
-    Layout contract (pinned by tests/test_pipeline.py):
-    * shard membership/order = ``shard_assignment`` (tokens_before
-      packing rule), so reruns and different parallelism produce
-      BYTE-identical files (gzip mtime=0, compact separators,
-      ensure_ascii=False);
-    * each line is ``{"id": .., "text": .., <meta_cols..>,
-      "n_tokens": ..}`` in that key order;
-    * the manifest lists (shard_id, path, n_docs, n_tokens) in shard
-      order — it is #shards-sized, the only driver-side collect.
-
-    Spark shape: the assignment's global cumsum (range exchange, no
-    single-partition stage), one join of the (id, longs)-thin assignment
-    back to the text, one hash exchange on shard_id with a local
-    (shard_id, tokens_before) sort, then executor-side packed writes —
-    the ZipNum writer discipline; no text ever moves driver-side."""
-    import json as _json
-    import os as _os
-
-    from warcio_spark.operators.pipeline import shard_assignment  # self
-
-    if shard_tokens <= 0:
-        raise ValueError(f"shard_tokens must be positive, got {shard_tokens}")
-    spark = docs.sparkSession
-    _os.makedirs(out_dir, exist_ok=True)
-    assign = shard_assignment(
-        docs, shard_tokens, text_col=text_col, id_col=id_col,
-        persist_tracker=persist_tracker,
-    )
-    keep = [id_col, text_col, *meta_cols]
-    joined = docs.select(*keep).join(assign, id_col)
-    n = spark.sparkContext.defaultParallelism
-    staged = joined.repartition(n, "shard_id").sortWithinPartitions(
-        "shard_id", "tokens_before"
-    )
-    cols = list(meta_cols)
-
-    def pack(rows):
-        cur_id, f, raw, n_docs, n_toks = None, None, None, 0, 0
-
-        def close():
-            nonlocal f, raw
-            if f is not None:
-                f.close()      # flushes the gzip trailer to raw...
-                raw.close()    # ...which GzipFile deliberately leaves open
-                f = raw = None
-
-        import gzip as _gzip
-
-        for r in rows:
-            sid = r["shard_id"]
-            if sid != cur_id:
-                if cur_id is not None:
-                    close()
-                    yield (cur_id, _name(cur_id), n_docs, n_toks)
-                cur_id, n_docs, n_toks = sid, 0, 0
-                raw = open(_os.path.join(out_dir, _name(sid)), "wb")
-                f = _gzip.GzipFile(filename="", mode="wb", mtime=0,
-                                   fileobj=raw)
-            obj = {"id": r[id_col], "text": r[text_col]}
-            for m in cols:
-                obj[m] = r[m]
-            obj["n_tokens"] = r["n_tokens"]
-            f.write((_json.dumps(obj, ensure_ascii=False,
-                                 separators=(",", ":")) + "\n").encode())
-            n_docs += 1
-            n_toks += r["n_tokens"]
-        if cur_id is not None:
-            close()
-            yield (cur_id, _name(cur_id), n_docs, n_toks)
-
-    def _name(sid: int) -> str:
-        return "shard-{0:05d}.jsonl.gz".format(sid)
-
-    summary = spark.createDataFrame(
-        staged.rdd.mapPartitions(pack),
-        "shard_id long, path string, n_docs long, n_tokens long",
-    ).collect()
-    summary.sort(key=lambda r: r["shard_id"])
-    with open(_os.path.join(out_dir, SHARD_MANIFEST_NAME), "w",
-              encoding="utf-8") as mf:
-        _json.dump(
-            [{"shard_id": r["shard_id"], "path": r["path"],
-              "n_docs": r["n_docs"], "n_tokens": r["n_tokens"]}
-             for r in summary],
-            mf, indent=1)
-        mf.write("\n")
-
-
-def read_jsonl_shards(spark, out_dir: str) -> DataFrame:
-    """The shards back as a DataFrame via Spark's native json reader
-    (schema inferred from the lines; shard files are plain .jsonl.gz so
-    ANY loader can stream them — that is the point of the format)."""
-    import os as _os
-
-    return spark.read.json(_os.path.join(out_dir, "shard-*.jsonl.gz"))
 
 
 def stratified_quota(docs: DataFrame, quota: int, strata: tuple = ("lang",),

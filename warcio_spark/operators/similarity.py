@@ -5,8 +5,6 @@
 - lsh_topk: random-hyperplane bucketed candidate scan — the 100 TB path:
   probes only matching buckets (partition pruning if the table is written
   bucketed/partitioned by sketch prefix), recall traded via probe radius
-- ivf_topk: coarse-quantizer variant (train k centroids on a sample,
-  probe the nprobe nearest cells)
 """
 
 from __future__ import annotations
@@ -187,85 +185,6 @@ def lsh_topk_pruned(spark, path: str, query_vec, k: int = 10, planes: int = 8,
         F.col(id_col), cosine_similarity(F.col(vec_col), q).alias("cosine")
     )
     return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
-
-
-def ivf_topk(emb: DataFrame, query_vec, k: int = 10, n_cells: int = 16,
-             nprobe: int = 2, sample_frac: float = 0.1, seed: int = 42,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """IVF-style ANN: k-means-ish centroids from a deterministic sample
-    (one pass, driver-side tiny), assign rows to nearest centroid (JVM
-    expression), probe the nprobe cells nearest the query.
-
-    The assign expression is a literal centroid table folded into codegen —
-    no shuffle at query time; at scale the cell id is a partition column.
-    """
-    import numpy as np
-
-    rows = (
-        emb.sample(fraction=min(1.0, sample_frac), seed=seed)
-        .select(vec_col)
-        .limit(n_cells * 50)
-        .collect()
-    )
-    X = np.array([r[0] for r in rows], dtype=np.float64)
-    rng = np.random.RandomState(seed)
-    centroids = X[rng.choice(len(X), size=min(n_cells, len(X)), replace=False)]
-    for _ in range(5):  # few Lloyd iterations, driver-side on the sample
-        d = ((X[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(len(centroids)):
-            pts = X[assign == c]
-            if len(pts):
-                centroids[c] = pts.mean(axis=0)
-
-    def dist2_expr(vec, c):
-        arr = F.array(*[F.lit(float(v)) for v in c])
-        return F.aggregate(
-            F.zip_with(vec, arr, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    vec = F.col(vec_col)
-    cell = F.lit(0)
-    best = dist2_expr(vec, centroids[0])
-    for ci in range(1, len(centroids)):
-        d = dist2_expr(vec, centroids[ci])
-        cell = F.when(d < best, F.lit(ci)).otherwise(cell)
-        best = F.least(best, d)
-
-    qd = ((centroids - np.array(query_vec, dtype=np.float64)) ** 2).sum(axis=1)
-    probe_cells = [int(c) for c in qd.argsort()[:nprobe]]
-
-    q = _query_lit(query_vec)
-    cand = emb.withColumn("_cell", cell).filter(F.col("_cell").isin(probe_cells))
-    scored = cand.select(F.col(id_col), cosine_similarity(vec, q).alias("cosine"))
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
-
-
-def knn_join(left: DataFrame, right: DataFrame, k: int = 5, planes: int = 6,
-             id_left: str = "vec_id", id_right: str = "vec_id",
-             vec_left: str = "embedding", vec_right: str = "embedding",
-             dim: int | None = None) -> DataFrame:
-    """Bucketed approximate kNN join: pairs share a sketch bucket, ranked by
-    cosine per left id (windowed top-k — no cross join). ``dim`` pins the
-    embedding dimension for both sides' sketches (inferred once from the
-    left side when omitted)."""
-    from pyspark.sql import Window
-
-    if dim is None:
-        row = left.select(F.size(vec_left).alias("d")).filter(F.col("d") > 0).first()
-        dim = int(row["d"]) if row else None
-    l = left.select(F.col(id_left).alias("lid"), F.col(vec_left).alias("lv"),
-                    sketch(vec_left, planes, dim=dim).alias("b"))
-    r = right.select(F.col(id_right).alias("rid"), F.col(vec_right).alias("rv"),
-                     sketch(vec_right, planes, dim=dim).alias("b"))
-    pairs = l.join(r, "b").filter(F.col("lid") != F.col("rid"))
-    scored = pairs.select(
-        "lid", "rid", cosine_similarity(F.col("lv"), F.col("rv")).alias("cosine")
-    )
-    w = Window.partitionBy("lid").orderBy(F.desc("cosine"), F.asc("rid"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def centroid_outliers(emb: DataFrame, k: int = 10, buckets: int = 16,

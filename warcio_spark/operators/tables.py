@@ -79,24 +79,6 @@ def extract_tables(pages: DataFrame, url_col: str = "page_url",
     )
 
 
-def table_shapes(pages: DataFrame, url_col: str = "page_url",
-                 text_col: str = "text") -> DataFrame:
-    """Per-table shape census: (url, table_idx, n_rows, n_cols, ragged) —
-    ``n_cols`` is the first row's cell count, ``ragged`` whether any row
-    disagrees. The cheap pre-filter before downstream table understanding
-    (a 2x2 layout grid and a 500-row data table need different handling).
-    One groupBy on (url, table_idx) over extract_tables' bounded output."""
-    t = extract_tables(pages, url_col, text_col)
-    return (
-        t.groupBy("url", "table_idx")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min(F.when(F.col("row_idx") == 0, F.col("n_cells"))).alias("n_cols"),
-            (F.count_distinct(F.col("n_cells")) > 1).alias("ragged"),
-        )
-    )
-
-
 #: heading / code-block caps (same rationale as the table caps)
 MAX_HEADINGS_PER_PAGE = 100
 MAX_CODE_BLOCKS_PER_PAGE = 50

@@ -380,55 +380,24 @@ SCRIPTS = ("Latin", "Cyrillic", "Han", "Arabic", "Greek", "Hebrew",
            "Hangul", "Hiragana", "Katakana", "Devanagari", "Thai")
 
 
-def script_shares(text) -> Column:
-    """Unicode-script composition of a document as ONE struct column:
-    ``n_letters`` (all \\p{L}, informational) plus a 0..1 share per
-    script in ``SCRIPTS`` and ``main_script`` — the highest-count script
-    with first-listed tie-break. Shares are over SCRIPT-MARKED
-    characters (the sum of the per-script counts): script properties
-    also match combining marks that are not \\p{L} (Devanagari matras,
-    Thai vowel signs), so a letters denominator would overflow 1 — and
-    the marked-char denominator is expressible identically in Java
-    regex and RE2, which class intersection is not. NULL shares/main
-    when no character carries one of these scripts.
-
-    This is the orthographic signal the marker-based ``lang_scores``
-    cannot give: marker words only exist for languages you enumerated,
-    while script shares classify ANY text into its writing system(s) —
-    the first split a multilingual 100 TB corpus makes (Latin-script
-    langid models never see CJK, and mixed-script docs are their own
-    cleaning class). Pure codegen: one regexp_count per script over the
-    text column, no explode, no shuffle, no Python."""
-    t = F.col(text) if isinstance(text, str) else text
-    n = F.regexp_count(t, F.lit(r"\p{L}"))
-    counts = {s: F.regexp_count(t, F.lit(r"\p{Is%s}" % s)) for s in SCRIPTS}
-    total = None
-    for s in SCRIPTS:
-        total = counts[s] if total is None else total + counts[s]
-    share = {s: F.when(total > 0, counts[s] / total) for s in SCRIPTS}
-    # first script reaching the max == first-listed tie-break. A running
-    # when/otherwise fold is equivalent but nests each branch twice per
-    # step — 2^|SCRIPTS| expression copies blew whole-stage codegen's
-    # 64 KB method limit; greatest() + a first-match chain stays linear.
-    m = F.greatest(*[counts[s] for s in SCRIPTS])
-    best = F.lit(None).cast("string")
-    for s in reversed(SCRIPTS):
-        best = F.when(counts[s] == m, F.lit(s)).otherwise(best)
-    fields = [n.alias("n_letters")]
-    fields += [share[s].alias("share_" + s.lower()) for s in SCRIPTS]
-    fields.append(F.when(total > 0, best).alias("main_script"))
-    return F.struct(*fields)
-
-
 def with_script_shares(df: DataFrame, text_col: str = "text",
                        out_col: str = "s") -> DataFrame:
-    """``script_shares`` with the counts STAGED as real projection
-    columns first: the single-expression struct re-inlines every
-    regexp_count into each share / the total / the argmax (CollapseProject
-    keeps non-cheap expressions staged, the quality_scores discipline),
-    so this form stays inside whole-stage codegen where the inline struct
-    falls back to interpreted eval past the 64 KB method limit. Same
-    output struct, pinned equal to the column form in tests."""
+    """Unicode-script composition of a document as ONE struct column
+    ``out_col``: ``n_letters`` (all \\p{L}, informational), a 0..1 share
+    per script in ``SCRIPTS`` and ``main_script`` (the highest-count
+    script, first-listed tie-break); NULL shares/main when no character
+    carries one of these scripts. Shares are over SCRIPT-MARKED chars
+    (the sum of the per-script counts): script properties also match
+    combining marks that are not \\p{L} (Devanagari matras, Thai vowel
+    signs), so a letters denominator would overflow 1, and the sum is
+    expressible identically in Java regex and RE2.
+
+    The counts are STAGED as real projection columns first: a
+    single-expression struct re-inlines every regexp_count into each
+    share / the total / the argmax (CollapseProject keeps non-cheap
+    expressions staged, the quality_scores discipline) and falls back to
+    interpreted eval past whole-stage codegen's 64 KB method limit; this
+    form stays inside codegen. Pure JVM: no explode, shuffle or Python."""
     t = F.col(text_col)
     tmp = {s: "__sc_" + s.lower() for s in SCRIPTS}
     staged = df.select(

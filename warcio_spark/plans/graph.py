@@ -27,7 +27,9 @@ _HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]+)"
 
 def url_host(url) -> Column:
     """Host component of an absolute URL (lowercased; port/userinfo
-    dropped) — NULL for non-URL strings, as a codegen expression."""
+    dropped) — NULL for non-URL strings, as a codegen expression. Its
+    input is a raw outlink, on which try_parse_url (``url_host_expr``,
+    canonical urls only) gives NULL for an unencoded space or byte."""
     col = F.col(url) if isinstance(url, str) else url
     h = F.lower(F.regexp_extract(col, _HOST_RE, 1))
     return F.nullif(h, F.lit(""))
